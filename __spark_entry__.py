@@ -7732,68 +7732,16 @@ def oracle_sql_round11_staged(
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # REGISTRATION ORDER IS THE VERIFICATION CONTRACT: the driver
     # oracle-checks the FIRST 50 entries each round
-    # (list(queries())[:50]).  Round-13 head (tools/rotate_gate.py
-    # ordering): the 46 queries whose freshest green evidence is
-    # round 9 (exactly at the 3-round staleness cap after r12's
-    # sample), then 4 round-10 fills; the tail keeps staleness
-    # order so r13 (union) r12 (union) r11 (union) r10 covers all
-    # 192 declared queries.  No query added, dropped, or renamed —
-    # reordering only (the optimization round changes no gate
-    # semantics).  See SURVEY.md par.8 and
-    # tests/test_gate_coverage.py before reordering.
+    # (list(queries())[:50]).  Round-14 head (tools/rotate_gate.py
+    # ordering): the 43 queries whose freshest green evidence is
+    # round 10 (4 rounds old after r14 without a head slot), then 7
+    # round-11 fills; the tail keeps staleness order so r14 (union)
+    # r13 (union) r12 (union) r11 covers all 192 declared queries.
+    # No query added, dropped, or renamed — reordering only.  See
+    # SURVEY.md par.8 and tests/test_gate_coverage.py before
+    # reordering.
     return {
-        # -- freshest green evidence: r9 --
-        "nb_lang": _q_nb_lang,
-        "hybrid_rrf": _q_hybrid_rrf,
-        "pagerank_hubs": _q_pagerank_hubs,
-        "streaming_cms": _q_streaming_cms,
-        "knn_label_purity": _q_knn_label_purity,
-        "textrank_keywords": _q_textrank_keywords,
-        "unigram_segments": _q_unigram_segments,
-        "som_anomalies": _q_som_anomalies,
-        "text_gopher": _q_text_gopher,
-        "events_asof": _q_events_asof,
-        "events_interval": _q_events_interval,
-        "mixture_resample": _q_mixture_resample,
-        "som_predict": _q_som_predict,
-        "ab_report": _q_ab_report,
-        "doc_length_buckets": _q_doc_length_buckets,
-        "events_quantiles": _q_events_quantiles,
-        "dedup_substrings": _q_dedup_substrings,
-        "session_paths": _q_session_paths,
-        "text_lm_bigram": _q_text_lm_bigram,
-        "tpch_q1": _q_tpch_q1,
-        "tpch_q6": _q_tpch_q6,
-        "tpch_q5": _q_tpch_q5,
-        "tpch_q10": _q_tpch_q10,
-        "tpch_q7": _q_tpch_q7,
-        "tpch_q8": _q_tpch_q8,
-        "tpch_q13": _q_tpch_q13,
-        "tpch_q18": _q_tpch_q18,
-        "tpch_q14": _q_tpch_q14,
-        "decontaminate_spans": _q_decontaminate_spans,
-        "index_compaction": _q_index_compaction,
-        "dedup_cluster_sizes": _q_dedup_cluster_sizes,
-        "dedup_lines": _q_dedup_lines,
-        "text_repetition": _q_text_repetition,
-        "streaming_top_terms": _q_streaming_top_terms,
-        "jsonl_roundtrip": _q_jsonl_roundtrip,
-        "pq_codes": _q_pq_codes,
-        "pq_adc": _q_pq_adc,
-        "orc_roundtrip": _q_orc_roundtrip,
-        "ivfpq_topk": _q_ivfpq_topk,
-        "text_entropy": _q_text_entropy,
-        "text_hash_embedding": _q_text_hash_embedding,
-        "pseudonymize": _q_pseudonymize,
-        "events_zscore": _q_events_zscore,
-        "streaming_zscore": _q_streaming_zscore,
-        "events_ks_drift": _q_events_ks_drift,
-        "fuzzy_join": _q_fuzzy_join,
         # -- freshest green evidence: r10 --
-        "quantile_hist": _q_quantile_hist,
-        "streaming_qhist": _q_streaming_qhist,
-        "dsir_importance": _q_dsir_importance,
-        "trigram_backoff": _q_trigram_backoff,
         "psi_drift": _q_psi_drift,
         "streaming_hll": _q_streaming_hll,
         "communities_lpa": _q_communities_lpa,
@@ -7938,6 +7886,57 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "som_classify": _q_som_classify,
         "cms_top_terms": _q_cms_top_terms,
         "text_readability": _q_text_readability,
+        # -- freshest green evidence: r13 --
+        "nb_lang": _q_nb_lang,
+        "hybrid_rrf": _q_hybrid_rrf,
+        "pagerank_hubs": _q_pagerank_hubs,
+        "streaming_cms": _q_streaming_cms,
+        "knn_label_purity": _q_knn_label_purity,
+        "textrank_keywords": _q_textrank_keywords,
+        "unigram_segments": _q_unigram_segments,
+        "som_anomalies": _q_som_anomalies,
+        "text_gopher": _q_text_gopher,
+        "events_asof": _q_events_asof,
+        "events_interval": _q_events_interval,
+        "mixture_resample": _q_mixture_resample,
+        "som_predict": _q_som_predict,
+        "ab_report": _q_ab_report,
+        "doc_length_buckets": _q_doc_length_buckets,
+        "events_quantiles": _q_events_quantiles,
+        "dedup_substrings": _q_dedup_substrings,
+        "session_paths": _q_session_paths,
+        "text_lm_bigram": _q_text_lm_bigram,
+        "tpch_q1": _q_tpch_q1,
+        "tpch_q6": _q_tpch_q6,
+        "tpch_q5": _q_tpch_q5,
+        "tpch_q10": _q_tpch_q10,
+        "tpch_q7": _q_tpch_q7,
+        "tpch_q8": _q_tpch_q8,
+        "tpch_q13": _q_tpch_q13,
+        "tpch_q18": _q_tpch_q18,
+        "tpch_q14": _q_tpch_q14,
+        "decontaminate_spans": _q_decontaminate_spans,
+        "index_compaction": _q_index_compaction,
+        "dedup_cluster_sizes": _q_dedup_cluster_sizes,
+        "dedup_lines": _q_dedup_lines,
+        "text_repetition": _q_text_repetition,
+        "streaming_top_terms": _q_streaming_top_terms,
+        "jsonl_roundtrip": _q_jsonl_roundtrip,
+        "pq_codes": _q_pq_codes,
+        "pq_adc": _q_pq_adc,
+        "orc_roundtrip": _q_orc_roundtrip,
+        "ivfpq_topk": _q_ivfpq_topk,
+        "text_entropy": _q_text_entropy,
+        "text_hash_embedding": _q_text_hash_embedding,
+        "pseudonymize": _q_pseudonymize,
+        "events_zscore": _q_events_zscore,
+        "streaming_zscore": _q_streaming_zscore,
+        "events_ks_drift": _q_events_ks_drift,
+        "fuzzy_join": _q_fuzzy_join,
+        "quantile_hist": _q_quantile_hist,
+        "streaming_qhist": _q_streaming_qhist,
+        "dsir_importance": _q_dsir_importance,
+        "trigram_backoff": _q_trigram_backoff,
     }
 
 

@@ -46,11 +46,6 @@ import sys
 sys.path.insert(0, %r)
 import numpy as np
 from pyspark.sql import SparkSession
-import pytest
-
-# optimization r13 (VERDICT r12 #6): heavy soak/cluster/example
-# tests are deselected from the default run — see pytest.ini
-pytestmark = pytest.mark.slow
 
 rows = [(i, " ".join(
     ("g%%d" %% ((i * 7 + j) %% 19)) if i %% 2 else

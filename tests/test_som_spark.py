@@ -7,6 +7,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from xpysom_dask_spark import SparkSom
+from xpysom_dask_spark.functions.distances import resolve_distance
+from xpysom_dask_spark.plans import training
 from xpysom_dask_spark.sources.readers import lineitem_features
 
 from conftest import SF_TINY
@@ -221,8 +223,89 @@ def test_epoch_fusion_matches_distributed(spark, rand_data):
                     fuse_local_bytes=0)
     fused.train(df, 4)
     dist.train(df, 4)
+    assert fused.training_info_["path"] == "fused"
+    assert dist.training_info_["path"] == "distributed"
     np.testing.assert_allclose(fused.get_weights(), dist.get_weights(),
                                atol=1e-9)
+
+
+def test_materialized_cache_sizes_fit_from_stats(spark, rand_data):
+    """A materialized cached input is sized from its cache statistics:
+    no count() job and no second cache — the fit's only job is the
+    fused collect, and the result is the local fit's."""
+    sc, group = spark.sparkContext, "som-fit-from-stats"
+    df = make_feature_df(spark, rand_data).persist()
+    try:
+        df.count()
+        som = SparkSom(5, 4, 6, random_seed=7, dtype=np.float64)
+        sc.setJobGroup(group, group)
+        try:
+            som.train(df, 3)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+        info = som.training_info_
+        assert (info["path"], info["rows"], info["rows_from"]) == (
+            "fused", len(rand_data), "stats")
+        assert len(jobs) == 1, jobs
+        local = SparkSom(5, 4, 6, random_seed=7, dtype=np.float64)
+        local.train(rand_data, 3)
+        np.testing.assert_allclose(som.get_weights(), local.get_weights(),
+                                   rtol=0, atol=1e-12)
+    finally:
+        df.unpersist()
+
+
+def test_unmaterialized_cache_falls_back_to_count(spark, rand_data):
+    df = make_feature_df(spark, rand_data).persist()
+    try:
+        assert training.cached_row_count(df) == (True, None)
+        som = SparkSom(5, 4, 6, random_seed=7)
+        som.train(df, 2)
+        info = som.training_info_
+        assert (info["path"], info["rows"], info["rows_from"]) == (
+            "fused", len(rand_data), "count")
+        # the count filled the caller's cache, not one of its own
+        assert training.cached_row_count(df) == (True, len(rand_data))
+    finally:
+        df.unpersist()
+
+
+def test_work_cap_sends_fit_distributed(spark, rand_data, monkeypatch):
+    monkeypatch.setattr(training, "FUSE_WORK_CAP", 1)
+    df = make_feature_df(spark, rand_data)
+    som_s = SparkSom(5, 4, 6, random_seed=7)
+    som_s.train(df, 1)
+    info = som_s.training_info_
+    assert (info["path"], info["rows"], info["rows_from"]) == (
+        "distributed", len(rand_data), "count")
+    assert info["epoch_work"] > info["work_cap"] == 1
+    assert info["bytes"] <= info["byte_cap"]
+    (epoch,) = info["epochs"]
+    assert set(epoch) == {"broadcast_s", "job_s", "merge_s"}
+    som_l = SparkSom(5, 4, 6, random_seed=7)
+    som_l.train(rand_data, 1)
+    np.testing.assert_allclose(som_s.get_weights(), som_l.get_weights(),
+                               atol=1e-4)
+
+
+def test_choose_path_weighs_kernel_cost():
+    rows, cells, dim, cap = 300_000, 100, 8, 64 << 20
+    euclid = resolve_distance("euclidean").relative_cost
+    manhattan = resolve_distance("manhattan").relative_cost
+    fused = training.choose_path(rows, cells, dim, 4, euclid, cap)
+    assert fused["path"] == "fused"
+    assert fused["epoch_work"] == rows * cells * dim
+    # same n·K·d, 16× the kernel cost: past the work cap
+    assert training.choose_path(rows, cells, dim, 4, manhattan,
+                                cap)["path"] == "distributed"
+    # the byte cap still guards driver memory on its own
+    assert training.choose_path(rows, 1, dim, 4, euclid,
+                                rows * dim * 4 - 1)["path"] == "distributed"
+    for r in (1, rows, None):
+        assert training.choose_path(r, cells, dim, 4, euclid,
+                                    0)["path"] == "distributed"
 
 
 def test_classify_majority_label(spark):

@@ -23,6 +23,9 @@ Behavioral parity with the reference engine
 * ``can_cache`` marks kernels whose ``‖w‖²`` column may be hoisted once
   per training epoch and shipped with the broadcast codebook
   (distances.py:179-182).
+* ``relative_cost`` is a kernel's BMU-search time per (row, cell,
+  feature) relative to ``'euclidean'``; the training plan weighs its
+  work estimate with it when choosing between its two paths.
 """
 
 from __future__ import annotations
@@ -149,21 +152,35 @@ def manhattan_cuda(x, w):
     return cp.asnumpy(out)
 
 
-# name → (kernel, accepts w_sq). Names match the reference registry
-# (distances.py:160-175) so user configs carry over unchanged.
+#: relative cost of the (n, m, d) broadcast kernels (manhattan, odd-p norms)
+_BROADCAST_COST = 16.0
+
+
+def _pnorm_cost(p=2):
+    """Even ``p`` runs ``p + 1`` GEMMs (:func:`pnorm_power_even`); odd
+    ``p`` takes the (n, m, d) broadcast."""
+    return p + 1.0 if p % 2 == 0 else _BROADCAST_COST
+
+# name → (kernel, accepts w_sq, relative cost).  Names match the reference
+# registry (distances.py:160-175) so user configs carry over unchanged.
+# The cost is BMU-search time (kernel + argmin) per row·cell·feature
+# relative to 'euclidean', measured on 20k rows × 100 cells × 8 float32
+# features: euclidean_no_opt 1.0-1.2, cosine 2.4-2.7, norm_p p=2/4/6/8
+# 2.5/4.7/6.1/7.9, the broadcast kernels 14-17.  A float, or a function
+# of the kernel kwargs when the kwargs pick the algorithm.
 _KERNELS = {
-    "euclidean": (squared_euclidean_part, True),
-    "euclidean_no_opt": (squared_euclidean, True),
-    "manhattan": (manhattan, False),
-    "manhattan_no_opt": (manhattan, False),
+    "euclidean": (squared_euclidean_part, True, 1.0),
+    "euclidean_no_opt": (squared_euclidean, True, 1.2),
+    "manhattan": (manhattan, False, _BROADCAST_COST),
+    "manhattan_no_opt": (manhattan, False, _BROADCAST_COST),
     # GPU twin of the reference's cupy dispatch branch
     # (distances.py:147-158); import-gated — resolves at registry
     # level everywhere, raises an actionable ImportError at first
-    # call when CuPy is absent
-    "manhattan_cuda": (manhattan_cuda, False),
-    "cosine": (cosine, True),
-    "norm_p": (pnorm_power, False),
-    "norm_p_no_opt": (pnorm_power_broadcast, False),
+    # call when CuPy is absent.  Costed as its CPU twin.
+    "manhattan_cuda": (manhattan_cuda, False, _BROADCAST_COST),
+    "cosine": (cosine, True, 2.5),
+    "norm_p": (pnorm_power, False, _pnorm_cost),
+    "norm_p_no_opt": (pnorm_power_broadcast, False, _BROADCAST_COST),
 }
 
 #: kernels whose ‖w‖² may be hoisted once per epoch (distances.py:179-182)
@@ -177,12 +194,14 @@ class DistanceKernel:
 
     Callable as ``kernel(x, w_flat, w_sq=None)`` where ``w_flat`` is the
     ``(x·y, d)`` flattened codebook.  ``can_cache`` tells the training plan
-    whether to hoist ``‖w‖²`` into the per-epoch broadcast (SURVEY.md §4 O2).
+    whether to hoist ``‖w‖²`` into the per-epoch broadcast (SURVEY.md §4 O2);
+    ``relative_cost`` is its BMU-search cost relative to ``'euclidean'``.
 
     Picklable (name-based), so it ships cleanly inside task closures.
     """
 
-    __slots__ = ("name", "kwargs", "can_cache", "_fn", "_takes_wsq")
+    __slots__ = ("name", "kwargs", "can_cache", "relative_cost", "_fn",
+                 "_takes_wsq")
 
     def __init__(self, name: str, kwargs: dict | None = None):
         if name not in _KERNELS:
@@ -192,8 +211,10 @@ class DistanceKernel:
             )
         self.name = name
         self.kwargs = dict(kwargs or {})
-        self._fn, self._takes_wsq = _KERNELS[name]
+        self._fn, self._takes_wsq, cost = _KERNELS[name]
         self.can_cache = name in _CACHEABLE
+        self.relative_cost = float(cost(**self.kwargs) if callable(cost)
+                                   else cost)
 
     def __call__(self, x, w_flat, w_sq=None):
         if self._takes_wsq:

@@ -59,17 +59,21 @@ class SparkSom:
         tree merge — with more partitions than ``collect_threshold`` the
         per-partition partials are first reduced into ``agg_fanout``
         buckets so the driver never collects O(partitions) tensors.
-    fuse_local_bytes : small-input epoch fusion gate (0 disables).  A
-        batch-SOM epoch is a global reduce, so T epochs are T Spark jobs
-        with an unavoidable driver barrier each; when the whole feature
-        matrix is at most this many bytes the loop instead collects it
-        once (Arrow) and runs every epoch driver-side — one job instead
-        of T, same math chunked by ``batch_rows``.  The default is small
-        on purpose: the fused loop is one core, so it only wins while a
-        full epoch's FLOPs cost less than one job's scheduling+dispatch
-        overhead (~100 ms); measured crossover on local[32] is around
-        10⁵–10⁶ rows.  At scale the gate never fires and the distributed
-        plan is untouched.
+    fuse_local_bytes : driver-memory guard of the fused training path
+        (0 disables fusion).  ``train(DataFrame)`` fuses — collects the
+        features once through Arrow and runs every epoch driver-side,
+        one Spark job instead of one per epoch — when the per-epoch
+        kernel work n·K·d (times the distance kernel's relative cost)
+        is at most ``plans.training.FUSE_WORK_CAP`` AND the feature
+        matrix is at most this many bytes.  The work cap sits below
+        the point where the driver loop stops beating the per-epoch
+        job, whose floor is ~0.4-0.5 s (driver round trip plus Python
+        worker set-up per task, measured on 4 cores): 5e8 euclidean
+        row·cell·features, e.g. 600k × 8 rows on a 10×10 grid.  This
+        byte cap only bounds what is collected to the driver
+        (``toArrow`` of 64 MiB takes ~0.4 s).  Large grids and large
+        inputs stay on the distributed plan.  After a DataFrame fit,
+        ``training_info_`` records the path taken and why.
     """
 
     def __init__(self, x, y, input_len,
@@ -83,7 +87,7 @@ class SparkSom:
                  random_seed=None, compact_support=False,
                  features_col="features", dtype=np.float32,
                  batch_rows=32768, agg_fanout=64, collect_threshold=512,
-                 fuse_local_bytes=8 << 20,
+                 fuse_local_bytes=64 << 20,
                  n_parallel=None, xp=None, use_dask=None,
                  dask_chunks=None):
         # reference-constructor compatibility (xpysom.py:145-175): the

@@ -24,6 +24,34 @@ once per epoch, and the input DataFrame is persisted so epochs 2..T never
 re-scan the source (SURVEY.md §4 O13).  Per-epoch traffic is
 O(partitions · x·y·d) regardless of data size — the property that makes
 this hold at 100 TB.
+
+Small fits skip the loop: the feature matrix is collected once through
+Arrow and every epoch runs driver-side (``SparkSom._train_local``).  Why,
+measured on 4 cores (Spark 4.1.2, Python 3.11), one distributed epoch of
+300k × 8 rows on a 10×10 grid:
+
+* ~0.13 s driver round trip (job submit, broadcast, collect);
+* 0.25-0.35 s per task of Python worker set-up — PySpark's
+  ``setup_spark_files`` calls ``importlib.invalidate_caches()``, which
+  re-reads the ``pyspark.zip`` and spark-core jar directories on every
+  task;
+* ~0.05 s of actual work: Arrow transfer, BMU argmin, bincount.
+
+The same two epochs take 0.25 s on the driver.  Running all epochs in
+one barrier stage (``mapInArrow(barrier=True)`` with a
+``BarrierTaskContext.allGather`` of the (c, S) partials per epoch) does
+not remove that floor: each ``allGather`` took 1.0 s on the same box (1,
+2 and 5 rounds took 1.0, 2.0 and 5.0 s in-task), so it is no faster than
+a job per epoch.
+
+The choice between the two paths (``choose_path``) is a deterministic
+function of the input: the two paths group float sums differently, so
+the same input must always take the same path, and nothing is timed at
+run time.  It fuses while the per-epoch kernel work n·K·d × the kernel's
+``relative_cost`` is at most ``FUSE_WORK_CAP`` and the features fit
+``SparkSom.fuse_local_bytes``.  n comes from the input's cache statistics
+when the caller materialized a cache, and from a ``count()`` (which also
+fills the plan's own cache) otherwise.
 """
 
 from __future__ import annotations
@@ -36,6 +64,15 @@ from ..functions.distances import codebook_sq_norms
 from .exchange import feature_matrix, ship_package
 
 _PARTIAL_SCHEMA = "bucket int, num binary, den binary"
+
+#: Largest per-epoch work n·K·d × kernel ``relative_cost`` the driver
+#: loop takes on.  Fused vs distributed fit, median of 5, on 4 cores with
+#: 300k × 8 cached float32 rows, euclidean, 2 epochs: 10×10 (2.4e8 per
+#: epoch) 0.38 vs 0.92 s; 20×20 (9.6e8) 0.98 vs 1.09 s; 40×40 (3.8e9)
+#: 3.93 vs 2.05 s.  One epoch over 1M rows on 10×10 (8e8) breaks even
+#: (0.73 vs 0.72 s).  The cap sits below the crossover, where the fused
+#: path clearly wins.
+FUSE_WORK_CAP = 5e8
 
 
 class ProgressPrinter:
@@ -152,8 +189,56 @@ def _make_bucket_reducer(shape):
     return reduce_bucket
 
 
+def choose_path(rows, cells, dim, itemsize, relative_cost, byte_cap):
+    """The training-path decision for ``rows`` × ``dim`` features on a
+    ``cells``-cell map: ``"fused"`` (one collect, driver-side epochs)
+    when the per-epoch kernel work fits ``FUSE_WORK_CAP`` and the
+    feature bytes fit ``byte_cap``, else ``"distributed"``.  A zero
+    ``byte_cap`` disables fusion; ``rows=None`` (not counted) cannot
+    fuse.  Returns the decision record ``SparkSom.training_info_``
+    starts from."""
+    work = nbytes = None
+    fused = False
+    if rows is not None:
+        work = rows * cells * dim * relative_cost
+        nbytes = rows * dim * itemsize
+        fused = bool(byte_cap) and work <= FUSE_WORK_CAP and nbytes <= byte_cap
+    return {"path": "fused" if fused else "distributed", "rows": rows,
+            "epoch_work": work, "work_cap": FUSE_WORK_CAP,
+            "bytes": nbytes, "byte_cap": byte_cap}
+
+
+def cached_row_count(df):
+    """``(cached, rows)``: whether ``df``'s plan is in the session cache,
+    and its row count when that cache is fully materialized (None
+    otherwise).  Read from the cache's build statistics — no Spark job.
+    The cache manager is asked rather than ``df.queryExecution``, whose
+    optimized plan and its statistics are memoized: a DataFrame planned
+    before it was persisted, or whose cache was still empty when its
+    statistics were first read, would never report the count."""
+    jss = df.sparkSession._jsparkSession
+    entry = jss.sharedState().cacheManager().lookupCachedData(df._jdf)
+    if entry.isEmpty():
+        return False, None
+    stats = entry.get().cachedRepresentation().computeStats()
+    rows = stats.rowCount()
+    return True, (int(rows.get()) if rows.isDefined() else None)
+
+
+def _describe(info):
+    if info["rows"] is None:
+        return "training path: distributed (fusion off, rows not counted)"
+    return ("training path: %s (%d rows from %s; epoch work %.3g, cap %.3g;"
+            " %.1f MiB, cap %.1f MiB)" % (
+                info["path"], info["rows"], info["rows_from"],
+                info["epoch_work"], info["work_cap"], info["bytes"] / 2**20,
+                info["byte_cap"] / 2**20))
+
+
 def run_training(som, df, num_epochs, iter_beg=0, iter_end=None, verbose=False):
-    """Run the epoch loop against a DataFrame; mutates ``som._weights``."""
+    """Run the epoch loop against a DataFrame; mutates ``som._weights``
+    and records the path decision (plus, distributed, per-epoch
+    timings) in ``som.training_info_``."""
     from pyspark.storagelevel import StorageLevel
 
     if iter_end is None:
@@ -162,49 +247,52 @@ def run_training(som, df, num_epochs, iter_beg=0, iter_end=None, verbose=False):
     ship_package(spark)
     sc = spark.sparkContext
 
-    own_cache = not (df.is_cached and df.columns == [som.features_col])
+    # a select over a cached input reads that cache with column pruning,
+    # so only an uncached input gets a cache of its own (so that epochs
+    # 2..T never re-scan the source)
+    cached, n_rows = cached_row_count(df)
+    own_cache = not cached
     feats = df.select(df[som.features_col].alias("features"))
     if own_cache:
-        # persist so epochs 2..T never re-scan the source; skip when the
-        # caller already persisted exactly the features column (a second
-        # cache level would double memory and re-materialize on epoch 1)
         feats = feats.persist(StorageLevel.MEMORY_AND_DISK)
     x, y, d = som._weights.shape
 
-    # small-input epoch fusion: a batch-SOM epoch is a global reduce, so
-    # T epochs are irreducibly T jobs + T driver barriers in Spark's
-    # execution model.  When the whole feature matrix fits the gate
-    # (som.fuse_local_bytes), collect it once through Arrow and run the
-    # loop driver-side — one job instead of T, same math chunked by
-    # batch_rows.  The count() also materializes the cache, so the
-    # not-fused case pays nothing extra on epoch 1.
-    fuse_cap = getattr(som, "fuse_local_bytes", 0)
-    if fuse_cap:
-        n_rows = feats.count()
-        if n_rows * d * np.dtype(som.dtype).itemsize <= fuse_cap:
-            X = feature_matrix(feats.toArrow().column("features"),
-                               d, som.dtype)
-            if own_cache:
-                feats.unpersist()
-            return som._train_local(X, num_epochs, iter_beg, iter_end,
-                                    verbose=verbose)
+    rows_from = "stats" if n_rows is not None else None
+    byte_cap = getattr(som, "fuse_local_bytes", 0)
+    if n_rows is None and byte_cap:
+        # the count also fills the cache the distributed epochs read
+        n_rows, rows_from = feats.count(), "count"
+    info = choose_path(n_rows, x * y, d, np.dtype(som.dtype).itemsize,
+                       som._distance.relative_cost, byte_cap)
+    info["rows_from"] = rows_from
+    som.training_info_ = info
+    if verbose:
+        print(_describe(info))
+    if info["path"] == "fused":
+        X = feature_matrix(feats.toArrow().column("features"), d, som.dtype)
+        if own_cache:
+            feats.unpersist()
+        return som._train_local(X, num_epochs, iter_beg, iter_end,
+                                verbose=verbose)
 
     n_parts = feats.rdd.getNumPartitions()
     two_level = n_parts > som.collect_threshold
     shape = (x, y, d)
     W = som._weights.astype(som.dtype)
     kernel = som._distance
+    info["epochs"] = epochs = []
 
     progress = ProgressPrinter(iter_end - iter_beg) if verbose else None
     try:
         for t in range(iter_beg, iter_end):
-            t0 = time.time()
+            t0 = time.perf_counter()
             eta = float(som._decay(som._learning_rate, som._learning_rateN,
                                    t, num_epochs))
             sig = float(som._decay(som._sigma, som._sigmaN, t, num_epochs))
             w_flat = W.reshape(-1, d)
             w_sq = codebook_sq_norms(w_flat) if kernel.can_cache else None
             bc = sc.broadcast((w_flat, w_sq))
+            t1 = time.perf_counter()
 
             fn = _partial_update_factory(
                 bc, kernel, shape, som.dtype,
@@ -216,7 +304,9 @@ def run_training(som, df, num_epochs, iter_beg=0, iter_end=None, verbose=False):
                     _make_bucket_reducer(shape),
                     "num binary, den binary",
                 )
-            S, c = _sum_partial_rows(partials.collect(), shape)
+            collected = partials.collect()
+            t2 = time.perf_counter()
+            S, c = _sum_partial_rows(collected, shape)
             bc.unpersist(blocking=False)
 
             # influence applies driver-side, blockwise above the memory
@@ -225,10 +315,14 @@ def run_training(som, df, num_epochs, iter_beg=0, iter_end=None, verbose=False):
             den3 = den.reshape(x, y)[:, :, None]
             W = np.where(den3 != 0, num.reshape(shape) / den3,
                          W).astype(som.dtype)
+            t3 = time.perf_counter()
+            epochs.append({"broadcast_s": t1 - t0, "job_s": t2 - t1,
+                           "merge_s": t3 - t2})
             if progress is not None:
                 progress.step(t - iter_beg,
-                              "eta=%.4f sigma=%.4f %.2fs"
-                              % (eta, sig, time.time() - t0))
+                              "eta=%.4f sigma=%.4f broadcast %.3fs job "
+                              "%.3fs merge %.3fs"
+                              % (eta, sig, t1 - t0, t2 - t1, t3 - t2))
     finally:
         if own_cache:
             feats.unpersist()
