@@ -151,6 +151,23 @@ def test_vocab_and_ids_roundtrip(spark):
         assert all(i >= 0 for i in r["token_ids"])
 
 
+def test_encode_ids_equal_vocab_mapping_of_encode(spark):
+    """``bpe_encode_ids`` is ``bpe_encode`` followed by the vocab
+    lookup — including the unknown-symbol id — for every document."""
+    texts = CORPUS + ["naïve café lowest", "", "   "]
+    df = spark.createDataFrame(list(enumerate(texts)),
+                               "id bigint, text string")
+    merges = bpe.learn_bpe(df, "text", num_merges=10)
+    vocab = bpe.bpe_vocab(merges)
+    toks = {r["id"]: r["bpe_tokens"]
+            for r in bpe.bpe_encode(df, "text", merges).collect()}
+    ids = {r["id"]: r["token_ids"] for r in
+           bpe.bpe_encode_ids(df, "text", merges, unk_id=-7).collect()}
+    assert ids == {i: [vocab.get(s, -7) for s in t]
+                   for i, t in toks.items()}
+    assert -7 in ids[len(CORPUS)]        # ï / é are outside the vocab
+
+
 def test_bpe_decode_roundtrip(spark):
     """encode → decode returns the encoder's normalization exactly
     (lowercase, whitespace collapsed); ids → decode_ids agrees; an

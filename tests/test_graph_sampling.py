@@ -682,3 +682,101 @@ def test_triangle_counts_two_path_parity(spark):
     dist = {(r["id"], r["n_triangles"])
             for r in triangle_counts(df, fuse_local_edges=0).collect()}
     assert fused == dist and fused
+
+
+def test_fused_components_are_an_arrow_local_relation(spark):
+    """The fused result is an Arrow-built LocalRelation: a sized
+    LocalTableScan, not the statistics-free RDD scan that
+    createDataFrame(<list>) yields."""
+    comp = connected_components(_pairs(spark, [(1, 2), (2, 3), (5, 6)]))
+    plan = comp._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan, plan
+    assert "Scan ExistingRDD" not in plan, plan
+
+
+def test_fuzzy_dedup_anti_join_is_broadcast(spark):
+    """The loser set comes from a sized local relation, so the final
+    anti-join broadcasts it instead of shuffling both sides."""
+    text = "alpha bravo charlie delta echo foxtrot golf hotel"
+    df = spark.createDataFrame([(1, text), (2, text), (3, "other words")],
+                               "doc_id bigint, text string")
+    kept = dedup.fuzzy_dedup_keep_first(df, "text", "doc_id", threshold=0.9)
+    plan = kept._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan, plan
+    assert "SortMergeJoin" not in plan, plan
+    assert sorted(r.doc_id for r in kept.collect()) == [1, 3]
+
+
+def test_fused_components_jobs_are_checkpoint_plus_one_fetch(spark):
+    """A fused connected_components runs the jobs of its edge
+    checkpoint and exactly one more — the bounded fetch (no count())."""
+    sc = spark.sparkContext
+    pairs = _pairs(spark, [(1, 2), (2, 3), (5, 6), (9, 5)])
+
+    def jobs(group, build):
+        sc.setJobGroup(group, group)
+        try:
+            build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return list(sc.statusTracker().getJobIdsForGroup(group))
+
+    e = pairs.selectExpr("id_a AS src", "id_b AS dst")
+    ckpt = jobs("cc-edges-checkpoint", lambda: e.unionByName(
+        e.selectExpr("dst AS src", "src AS dst")).distinct()
+        .localCheckpoint(eager=True))
+    fused = jobs("cc-fused", lambda: connected_components(pairs))
+    assert ckpt and len(fused) == len(ckpt) + 1, (ckpt, fused)
+
+
+def test_fused_and_distributed_schemas_agree_on_mixed_id_types(spark):
+    """int/bigint endpoint columns: both paths type ids from the
+    canonical edge relation (the promoted type), so the fused and the
+    distributed schemas — nullability included — are equal."""
+    from xpysom_dask_spark.operators.graph import k_core, triangle_counts
+
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (3, 1), (5, 6)],
+                                  "id_a int, id_b bigint")
+    for op in (connected_components, triangle_counts,
+               lambda p, **kw: k_core(p, 2, **kw)):
+        fused, dist = op(pairs), op(pairs, fuse_local_edges=0)
+        assert fused.schema == dist.schema, (fused.schema, dist.schema)
+        assert sorted(fused.collect()) == sorted(dist.collect())
+    assert dict(connected_components(pairs).dtypes)["id"] == "bigint"
+
+
+#: py4j round trips to BUILD (not run) the MinHash → band join →
+#: Jaccard verify plan.  Measured 160-177 with SQL-string expressions
+#: (the spread is py4j's object-release commands); the Column-expression
+#: form took 1,391.
+PLAN_PY4J_BUDGET = 250
+
+
+def test_minhash_verify_plan_py4j_budget(spark, monkeypatch):
+    """Building the near-dup plan stays within a py4j call budget:
+    every F.* call / Column operator is its own JVM round trip, so a
+    regression to Column trees shows up here long before it shows up
+    as driver time."""
+    import gc
+
+    from py4j.clientserver import ClientServerConnection
+
+    df = spark.createDataFrame(
+        [(1, "a b c d e f"), (2, "a b c d e g"), (3, "x y z w")],
+        "doc_id bigint, text string")
+    sh = dedup.word_shingles(df, "text", "doc_id").localCheckpoint(
+        eager=True)
+    gc.collect()
+    calls = []
+    send = ClientServerConnection.send_command
+
+    def counted(self, command, *args, **kwargs):
+        calls.append(command)
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+    dedup.jaccard_verify(dedup.minhash_band_pairs(
+        dedup.minhash_signatures_from_shingles(sh)), sh)
+    monkeypatch.undo()
+    assert 0 < len(calls) <= PLAN_PY4J_BUDGET, len(calls)

@@ -413,3 +413,24 @@ def test_repeated_gate_invocations_leave_cache_empty(spark):
             "hybrid_rrf left a cacheManager entry behind — the "
             "shared doc_term_counts relation must ride "
             "localCheckpoint(eager=True), not .persist()")
+
+
+def test_fetch_if_small_bounds_and_local_frame_schema(spark):
+    """fetch_if_small returns the table up to its cap and None past it
+    (or for a negative cap); local_frame keeps the declared schema,
+    NOT NULL included, and plans as a LocalTableScan."""
+    from xpysom_dask_spark.plans.exchange import fetch_if_small, local_frame
+
+    df = spark.range(0, 5, 1, 2).localCheckpoint(eager=True)
+    assert sorted(fetch_if_small(df, 5).column("id").to_pylist()) == \
+        [0, 1, 2, 3, 4]
+    assert fetch_if_small(df, 4) is None
+    assert fetch_if_small(df, -1) is None
+    assert fetch_if_small(df.where("id < 0"), 0).num_rows == 0
+
+    lf = local_frame(spark, [[3, 1], ["c", None]],
+                     "k bigint NOT NULL, v string")
+    assert lf.schema.simpleString() == "struct<k:bigint,v:string>"
+    assert [f.nullable for f in lf.schema] == [False, True]
+    assert sorted(lf.collect()) == [(1, None), (3, "c")]
+    assert "LocalTableScan" in _plan(lf)

@@ -234,6 +234,25 @@ def _learn_local(word_count: dict, num_merges: int,
     return merges
 
 
+def _encode_word(word: str, rk: dict) -> list[str]:
+    """Greedy BPE encoding of one word: repeatedly merge the adjacent
+    symbol pair of lowest rank in ``rk`` (``"left right"`` → merge
+    rank) until none applies.  The one encoder behind
+    :func:`bpe_encode` and :func:`bpe_encode_ids`, so their tokens and
+    ids always correspond."""
+    syms = list(word) + [EOW]
+    while len(syms) > 1:
+        best_i, best_rank = -1, None
+        for i in range(len(syms) - 1):
+            r = rk.get(syms[i] + " " + syms[i + 1])
+            if r is not None and (best_rank is None or r < best_rank):
+                best_i, best_rank = i, r
+        if best_rank is None:
+            break
+        syms[best_i:best_i + 2] = [syms[best_i] + syms[best_i + 1]]
+    return syms
+
+
 def bpe_encode(df: DataFrame, text_col: str,
                merges: list[tuple[str, str]],
                out_col: str = "bpe_tokens") -> DataFrame:
@@ -257,19 +276,6 @@ def bpe_encode(df: DataFrame, text_col: str,
     ranks = {f"{l} {r}": i for i, (l, r) in enumerate(merges)}
     bc = spark.sparkContext.broadcast(ranks)
 
-    def encode_word(word: str, rk: dict) -> list[str]:
-        syms = list(word) + [EOW]
-        while len(syms) > 1:
-            best_i, best_rank = -1, None
-            for i in range(len(syms) - 1):
-                r = rk.get(syms[i] + " " + syms[i + 1])
-                if r is not None and (best_rank is None or r < best_rank):
-                    best_i, best_rank = i, r
-            if best_rank is None:
-                break
-            syms[best_i:best_i + 2] = [syms[best_i] + syms[best_i + 1]]
-        return syms
-
     @F.pandas_udf("array<string>")
     def enc(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
         rk = bc.value
@@ -281,7 +287,7 @@ def bpe_encode(df: DataFrame, text_col: str,
                 for w in words:
                     e = memo.get(w)
                     if e is None:
-                        e = encode_word(w, rk)
+                        e = _encode_word(w, rk)
                         memo[w] = e
                     doc.extend(e)
                 toks_out.append(doc)
@@ -332,19 +338,6 @@ def bpe_encode_ids(df: DataFrame, text_col: str,
     ranks = {f"{l} {r}": i for i, (l, r) in enumerate(merges)}
     bc = spark.sparkContext.broadcast((ranks, vocab, int(unk_id)))
 
-    def encode_word(word: str, rk: dict) -> list[str]:
-        syms = list(word) + [EOW]
-        while len(syms) > 1:
-            best_i, best_rank = -1, None
-            for i in range(len(syms) - 1):
-                r = rk.get(syms[i] + " " + syms[i + 1])
-                if r is not None and (best_rank is None or r < best_rank):
-                    best_i, best_rank = i, r
-            if best_rank is None:
-                break
-            syms[best_i:best_i + 2] = [syms[best_i] + syms[best_i + 1]]
-        return syms
-
     @F.pandas_udf("array<int>")
     def enc_ids(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
         rk, v, unk = bc.value
@@ -356,7 +349,7 @@ def bpe_encode_ids(df: DataFrame, text_col: str,
                 for w in words:
                     e = memo.get(w)
                     if e is None:
-                        e = [v.get(s, unk) for s in encode_word(w, rk)]
+                        e = [v.get(s, unk) for s in _encode_word(w, rk)]
                         memo[w] = e
                     doc.extend(e)
                 out.append(doc)

@@ -265,12 +265,21 @@ def _shingle_hash_expr(col: str) -> str:
 
 def minhash_signatures_from_shingles(sh: DataFrame, k: int = MINHASH_K,
                                      seed: int = MINHASH_SEED) -> DataFrame:
-    """(id, mh_0 … mh_{k-1}) from a (id, shingle) relation."""
+    """(id, mh_0 … mh_{k-1}) from a (id, shingle) relation.
+
+    The expressions are SQL strings, not Column trees: every ``F.*``
+    call and Column operator is its own py4j round trip (~0.2 ms, plus
+    the call-site capture around it) — building this plan took 574
+    round trips in the Column form and takes 52 as strings (PySpark
+    4.1, k = 8).  The literals keep their Column-API types (a_i, b_i <
+    2³¹ parse as INT, ``h`` is BIGINT), so the optimized plan and its
+    outputs are unchanged.
+    """
     a, b = minhash_coefficients(k, seed)
-    h = sh.select("id", F.expr(_shingle_hash_expr("shingle")).alias("h"))
-    aggs = [F.min(((F.lit(a[i]) * F.col("h") + F.lit(b[i])) % HASH_PRIME))
-            .alias(f"mh_{i}") for i in range(k)]
-    return h.groupBy("id").agg(*aggs)
+    return (sh.selectExpr("id", f"{_shingle_hash_expr('shingle')} AS h")
+            .groupBy("id")
+            .agg(*[F.expr(f"min(({a[i]} * h + {b[i]}) % {HASH_PRIME})"
+                          f" AS mh_{i}") for i in range(k)]))
 
 
 def minhash_signatures(df: DataFrame, text_col: str, id_col: str,
@@ -311,32 +320,23 @@ def band_self_join_pairs(banded: DataFrame, key_cols=("band_key",),
     over the SAME shuffle key as the join (O(B log B) per bucket, no
     quadratic stage anywhere).
     """
-    from pyspark.sql import Window
-
     key_cols = list(key_cols)
-    jid = [F.col(f"a.{c}") == F.col(f"b.{c}") for c in key_cols]
+    cond = " AND ".join([f"a.{c} = b.{c}" for c in key_cols]
+                        + [f"a.{id_col} < b.{id_col}"])
 
     def all_pairs(rel):
-        a, b = rel.alias("a"), rel.alias("b")
-        cond = jid[0]
-        for c in jid[1:]:
-            cond = cond & c
-        return (a.join(b, cond & (F.col(f"a.{id_col}")
-                                  < F.col(f"b.{id_col}")))
-                .select(F.col(f"a.{id_col}").alias("id_a"),
-                        F.col(f"b.{id_col}").alias("id_b")))
+        return (rel.alias("a").join(rel.alias("b"), F.expr(cond))
+                .selectExpr(f"a.{id_col} AS id_a", f"b.{id_col} AS id_b"))
 
     if max_bucket is None:
         return all_pairs(banded).distinct()
 
-    w = Window.partitionBy(*key_cols)
-    bb = (banded.withColumn("__n_b", F.count(F.lit(1)).over(w))
-          .withColumn("__hub", F.min(id_col).over(w)))
-    cold = bb.where(F.col("__n_b") <= max_bucket).select(id_col, *key_cols)
-    hot = (bb.where((F.col("__n_b") > max_bucket)
-                    & (F.col(id_col) != F.col("__hub")))
-           .select(F.col("__hub").alias("id_a"),
-                   F.col(id_col).alias("id_b")))
+    w = f"OVER (PARTITION BY {', '.join(key_cols)})"
+    bb = banded.selectExpr("*", f"count(1) {w} AS __n_b",
+                           f"min({id_col}) {w} AS __hub")
+    cold = bb.where(f"__n_b <= {max_bucket}").select(id_col, *key_cols)
+    hot = (bb.where(f"__n_b > {max_bucket} AND {id_col} != __hub")
+           .selectExpr("__hub AS id_a", f"{id_col} AS id_b"))
     return all_pairs(cold).unionByName(hot).distinct()
 
 
@@ -348,11 +348,12 @@ def minhash_band_keys(sigs: DataFrame, k: int = MINHASH_K,
     n_bands = k // rows_per_band
     # one explode, not an n_bands-way union: a union re-evaluates the
     # signature aggregation once per band unless exchange reuse kicks in
-    keys = [F.concat_ws(":", F.lit(str(bnd)),
-                        *[F.col(f"mh_{bnd * rows_per_band + r}")
-                          for r in range(rows_per_band)])
-            for bnd in range(n_bands)]
-    return sigs.select("id", F.explode(F.array(*keys)).alias("band_key"))
+    keys = ", ".join(
+        f"concat_ws(':', '{bnd}', "
+        + ", ".join(f"mh_{bnd * rows_per_band + r}"
+                    for r in range(rows_per_band)) + ")"
+        for bnd in range(n_bands))
+    return sigs.selectExpr("id", f"explode(array({keys})) AS band_key")
 
 
 def minhash_band_pairs(sigs: DataFrame, k: int = MINHASH_K,
@@ -464,22 +465,22 @@ def jaccard_verify(pairs: DataFrame, shingles: DataFrame,
                 "(star-pairs hot LSH buckets) or max_df (prunes "
                 "stop-shingle postings), or raise max_candidates if "
                 "the cluster really has the headroom.")
-    sizes = shingles.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
-    sa = shingles.select(F.col("id").alias("id_a"),
-                         F.col("shingle").alias("sh_a"))
-    sb = shingles.select(F.col("id").alias("id_b"),
-                         F.col("shingle").alias("sh_b"))
+    # SQL strings, not Column expressions: one py4j call per method
+    # instead of several per column (see minhash_signatures_from_shingles)
+    sizes = shingles.groupBy("id").count()
+    sa = shingles.selectExpr("id AS id_a", "shingle AS sh_a")
+    sb = shingles.selectExpr("id AS id_b", "shingle AS sh_b")
     inter = (pairs.join(sa, "id_a").join(sb, "id_b")
-        .where(F.col("sh_a") == F.col("sh_b"))
-        .groupBy("id_a", "id_b").agg(F.count(F.lit(1)).alias("n_inter")))
-    na = sizes.select(F.col("id").alias("id_a"), F.col("n_sh").alias("n_a"))
-    nb = sizes.select(F.col("id").alias("id_b"), F.col("n_sh").alias("n_b"))
+             .where("sh_a = sh_b")
+             .groupBy("id_a", "id_b").count()
+             .withColumnRenamed("count", "n_inter"))
+    na = sizes.selectExpr("id AS id_a", "count AS n_a")
+    nb = sizes.selectExpr("id AS id_b", "count AS n_b")
+    # the D suffix keeps the threshold a DOUBLE literal, as F.lit did
     return (inter.join(na, "id_a").join(nb, "id_b")
-            .select("id_a", "id_b",
-                    (F.col("n_inter")
-                     / (F.col("n_a") + F.col("n_b") - F.col("n_inter")))
-                    .alias("jaccard"))
-            .where(F.col("jaccard") >= threshold))
+            .selectExpr("id_a", "id_b",
+                        "n_inter / (n_a + n_b - n_inter) AS jaccard")
+            .where(f"jaccard >= {float(threshold)!r}D"))
 
 
 def minhash_near_dups(df: DataFrame, text_col: str, id_col: str,
@@ -658,8 +659,7 @@ def fuzzy_dedup_keep_first(df: DataFrame, text_col: str, id_col: str,
     """
     comp = dedup_clusters(df, text_col, id_col, threshold, k, n,
                           max_bucket=max_bucket)
-    losers = (comp.where(F.col("id") != F.col("component"))
-              .select(F.col("id").alias(id_col)))
+    losers = comp.where("id != component").selectExpr(f"id AS {id_col}")
     return df.join(losers, id_col, "left_anti")
 
 

@@ -27,12 +27,24 @@ The default ``algorithm="auto"`` runs label propagation (the right
 trade for near-clique duplicate clusters: 2-3 rounds, one
 well-partitioned join each) and switches to the star algorithm if the
 graph turns out to be deep instead of raising.
+
+Graphs under :data:`GRAPH_FUSE_LOCAL_EDGES` run on the driver, all
+under one contract: eager checkpoint of the canonical edges → ONE
+bounded Arrow fetch (``fetch_if_small``: no ``count()`` job, and an
+over-cap graph falls back onto the same checkpointed blocks) → exact
+Python-int rounds → an Arrow-built local relation (``local_frame``).
+Not ``createDataFrame(<list>)``: its RDD scan has no size statistics,
+so a downstream join plans as a two-shuffle sort-merge join instead of
+a broadcast, and every action over it runs Python worker tasks.  Ids
+are typed from the canonical edge relation on both paths.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..plans.exchange import fetch_if_small, local_frame
 
 
 def connected_components(pairs: DataFrame, id_a: str = "id_a",
@@ -62,14 +74,16 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
         return connected_components_star(pairs, id_a, id_b, max_iter)
     label_budget = switch_after if algorithm == "auto" else max_iter
     # symmetric edge list; (a,b) with a<b also contributes (b,a)
-    e = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    edges = (e.unionByName(e.select(F.col("dst").alias("src"),
-                                    F.col("src").alias("dst")))
+    e = pairs.selectExpr(f"{id_a} AS src", f"{id_b} AS dst")
+    edges = (e.unionByName(e.selectExpr("dst AS src", "src AS dst"))
              .distinct()
              .localCheckpoint(eager=True))
-    fuse = (GRAPH_FUSE_LOCAL_EDGES if fuse_local_edges is None
-            else fuse_local_edges)
-    if edges.count() <= fuse:
+    table = _fetch_small(edges, fuse_local_edges)
+    # NULL endpoint: Python ordering would raise where SQL null
+    # semantics quietly cope — such graphs take the distributed path
+    # so both paths agree on the edge case
+    if table is not None and not (table.column("src").null_count
+                                  or table.column("dst").null_count):
         # driver fusion: union-find with path compression computes the
         # same min-reachable-id representative exactly (two-path
         # parity pinned by tests); iterative min-label rounds on a
@@ -84,24 +98,18 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
                 parent[x], x = root, parent[x]
             return root
 
-        rows = [(r["src"], r["dst"]) for r in edges.collect()]
-        if all(a is not None and b is not None for a, b in rows):
-            for a, b in rows:
-                parent.setdefault(a, a)
-                parent.setdefault(b, b)
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    # union by min id keeps the root the component
-                    # minimum
-                    lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                    parent[hi] = lo
-            id_t = pairs.schema[id_a].dataType.simpleString()
-            return pairs.sparkSession.createDataFrame(
-                [(v, find(v)) for v in parent],
-                f"id {id_t}, component {id_t}")
-        # NULL endpoint: Python ordering would raise where SQL null
-        # semantics quietly cope — fall through to the distributed
-        # path so both paths agree on the edge case
+        for a, b in _rows(table, "src", "dst"):
+            parent.setdefault(a, a)
+            parent.setdefault(b, b)
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                # union by min id keeps the root the component minimum
+                lo, hi = (ra, rb) if ra < rb else (rb, ra)
+                parent[hi] = lo
+        id_t = _id_type(edges, "src")
+        return local_frame(pairs.sparkSession,
+                           [list(parent), [find(v) for v in parent]],
+                           f"id {id_t}, component {id_t}")
 
     # label(x) starts at x; first round folds in direct neighbors
     labels = (edges.groupBy("src")
@@ -217,8 +225,37 @@ def connected_components_star(pairs: DataFrame, id_a: str = "id_a",
 #: path parity tested — because n_iter distributed rounds cost n_iter
 #: × (join + agg + checkpoint) JOBS of pure latency on a graph that
 #: fits in one list.  The distributed path stays the default at scale
-#: (the SOM trainer's fuse_local_bytes idiom).
+#: (the SOM trainer's fuse_local_bytes idiom).  Every fused path:
+#: eager checkpoint → one bounded Arrow fetch (``fetch_if_small``) →
+#: Python rounds → an Arrow local relation (``local_frame``), never
+#: ``createDataFrame(<list>)`` (module docstring).
 GRAPH_FUSE_LOCAL_EDGES = 200_000
+
+
+def _fetch_small(rel: DataFrame, cap: int | None):
+    """``rel`` as a ``pa.Table`` if it fits the fusion cap (``None``:
+    :data:`GRAPH_FUSE_LOCAL_EDGES`), else ``None``."""
+    return fetch_if_small(rel, GRAPH_FUSE_LOCAL_EDGES if cap is None
+                          else cap)
+
+
+def _undirected(pairs: DataFrame, id_a: str, id_b: str) -> DataFrame:
+    """Canonical undirected edges ``(a, b)``, ``a < b``: one row per
+    unordered pair, self-loops dropped."""
+    return (pairs.selectExpr(f"least({id_a}, {id_b}) AS a",
+                             f"greatest({id_a}, {id_b}) AS b")
+            .where("a != b").distinct())
+
+
+def _rows(table, *names):
+    """The named columns of a fetched ``pa.Table`` as row tuples of
+    Python values (exact ints for integral ids)."""
+    return list(zip(*(table.column(n).to_pylist() for n in names)))
+
+
+def _id_type(rel: DataFrame, col: str) -> str:
+    """DDL type of ``rel[col]``: the id type both paths return."""
+    return rel.schema[col].dataType.simpleString()
 
 
 def label_propagation(pairs: DataFrame, id_a: str = "id_a",
@@ -293,12 +330,14 @@ def label_propagation(pairs: DataFrame, id_a: str = "id_a",
     verts = (pairs.select(F.col(id_a).alias("id"))
              .unionByName(pairs.select(F.col(id_b).alias("id")))
              .distinct().localCheckpoint(eager=True))
-    n_sym, n_verts = sym.count(), verts.count()
-    if max(n_sym, n_verts) <= fuse_local_edges:
+    sym_t = _fetch_small(sym, fuse_local_edges)
+    verts_t = (None if sym_t is None
+               else _fetch_small(verts, fuse_local_edges))
+    if verts_t is not None:
         # driver fusion: the same synchronous rounds in exact Python
         # ints (two-path parity pinned by tests)
-        rows = [(r["src"], r["dst"], r["w"]) for r in sym.collect()]
-        vids = [r["id"] for r in verts.collect()]
+        rows = _rows(sym_t, "src", "dst", "w")
+        vids = verts_t.column("id").to_pylist()
         labels_d = {s: s for s, _d, _w in rows}
         for _ in range(n_iter):
             votes: dict = {}
@@ -314,10 +353,10 @@ def label_propagation(pairs: DataFrame, id_a: str = "id_a",
                 if cur is None or (-c, lab) < cur:
                     best[s] = (-c, lab)
             labels_d = {s: lab for s, (_negc, lab) in best.items()}
-        id_t = pairs.schema[id_a].dataType.simpleString()
-        out_rows = [(v, labels_d.get(v, v)) for v in vids]
-        return pairs.sparkSession.createDataFrame(
-            out_rows, f"id {id_t}, community {id_t}")
+        id_t = _id_type(verts, "id")
+        return local_frame(pairs.sparkSession,
+                           [vids, [labels_d.get(v, v) for v in vids]],
+                           f"id {id_t}, community {id_t}")
     labels = (sym.select(F.col("src").alias("id")).distinct()
               .select("id", F.col("id").alias("label")))
     for _ in range(n_iter):
@@ -376,18 +415,13 @@ def triangle_counts(pairs: DataFrame, id_a: str = "id_a",
     (two-path parity tested) — the wedge self-join over a tiny graph
     is pure job latency (optimization r13, the label_propagation /
     pagerank fusion idiom)."""
-    fuse = (GRAPH_FUSE_LOCAL_EDGES if fuse_local_edges is None
-            else fuse_local_edges)
-    e = (pairs.select(
-        F.least(F.col(id_a), F.col(id_b)).alias("a"),
-        F.greatest(F.col(id_a), F.col(id_b)).alias("b"))
-        .where(F.col("a") != F.col("b")).distinct()
-        .localCheckpoint(eager=True))
-    if e.count() <= fuse:
+    e = _undirected(pairs, id_a, id_b).localCheckpoint(eager=True)
+    table = _fetch_small(e, fuse_local_edges)
+    if table is not None:
         # driver fusion: same degree-ordered compact-forward plan in
         # exact Python (each triangle counted once, all three
         # endpoints credited — parity pinned by tests)
-        rows = [(r["a"], r["b"]) for r in e.collect()]
+        rows = _rows(table, "a", "b")
         deg: dict = {}
         for a, b in rows:
             deg[a] = deg.get(a, 0) + 1
@@ -408,10 +442,10 @@ def triangle_counts(pairs: DataFrame, id_a: str = "id_a",
                         tri[u] += 1
                         tri[v] += 1
                         tri[w] += 1
-        id_t = pairs.schema[id_a].dataType.simpleString()
-        return pairs.sparkSession.createDataFrame(
-            [(v, int(c)) for v, c in tri.items()],
-            f"id {id_t}, n_triangles bigint")
+        return local_frame(pairs.sparkSession,
+                           [list(tri), list(tri.values())],
+                           f"id {_id_type(e, 'a')}, "
+                           "n_triangles bigint NOT NULL")
     deg = (e.select(F.col("a").alias("v"))
            .unionAll(e.select(F.col("b").alias("v")))
            .groupBy("v").agg(F.count(F.lit(1)).alias("d")))
@@ -492,10 +526,14 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
          .where(F.col("s").isNotNull() & F.col("t").isNotNull())
          .distinct().localCheckpoint(eager=True))
     base = (scale * (scale - damping_e6)) // scale
-    if e.count() <= fuse_local_edges:
+    # vertex ids: s and t widened to one type by the union
+    ends = (e.select(F.col("s").alias("id"))
+            .unionAll(e.select(F.col("t").alias("id"))))
+    table = _fetch_small(e, fuse_local_edges)
+    if table is not None:
         # driver fusion (exact Python ints — the identical iteration;
         # two-path parity pinned by tests)
-        rows = [(r["s"], r["t"]) for r in e.collect()]
+        rows = _rows(table, "s", "t")
         vids = sorted({s for s, _t in rows} | {t for _s, t in rows})
         od: dict = {}
         for s, _t in rows:
@@ -507,13 +545,10 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
                 inbound[t] = inbound.get(t, 0) + ranks_d[s] // od[s]
             ranks_d = {v: base + (damping_e6 * inbound.get(v, 0))
                        // scale for v in vids}
-        id_t = edges.schema[src].dataType.simpleString()
-        return edges.sparkSession.createDataFrame(
-            [(v, int(ranks_d[v])) for v in vids],
-            f"id {id_t}, rank_e6 bigint")
-    verts = (e.select(F.col("s").alias("id"))
-             .unionAll(e.select(F.col("t").alias("id")))
-             .distinct().localCheckpoint(eager=False))
+        return local_frame(edges.sparkSession,
+                           [vids, [ranks_d[v] for v in vids]],
+                           f"id {_id_type(ends, 'id')}, rank_e6 bigint")
+    verts = ends.distinct().localCheckpoint(eager=False)
     outdeg = e.groupBy("s").agg(F.count(F.lit(1)).alias("od"))
     es = e.join(outdeg, "s")        # (s, t, od) — static, reused
     es = es.localCheckpoint(eager=False)
@@ -566,11 +601,7 @@ def community_modularity(pairs: DataFrame, communities: DataFrame,
     aggregates; intra-edge counts are two label hash-joins on the
     endpoint ids + one ``groupBy(community)``; everything after runs
     on the |communities|-row relation."""
-    e = (pairs.select(
-        F.least(F.col(id_a), F.col(id_b)).alias("a"),
-        F.greatest(F.col(id_a), F.col(id_b)).alias("b"))
-        .where(F.col("a") != F.col("b")).distinct()
-        .localCheckpoint(eager=False))
+    e = _undirected(pairs, id_a, id_b).localCheckpoint(eager=False)
     m = e.count()
     if m == 0:
         return communities.sparkSession.createDataFrame(
@@ -641,17 +672,11 @@ def k_core(pairs: DataFrame, k: int, id_a: str = "id_a",
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    e = (pairs.select(
-        F.least(F.col(id_a), F.col(id_b)).alias("a"),
-        F.greatest(F.col(id_a), F.col(id_b)).alias("b"))
-        .where(F.col("a") != F.col("b")).distinct()
-        .localCheckpoint(eager=True))
-    fuse = (GRAPH_FUSE_LOCAL_EDGES if fuse_local_edges is None
-            else fuse_local_edges)
-    if e.count() <= fuse:
-        rows = [(r["a"], r["b"]) for r in e.collect()]
+    e = _undirected(pairs, id_a, id_b).localCheckpoint(eager=True)
+    table = _fetch_small(e, fuse_local_edges)
+    if table is not None:
+        rows = _rows(table, "a", "b")
         core = _py_core_numbers(rows)
-        id_t = pairs.schema[id_a].dataType.simpleString()
         survivors = [v for v, c in core.items() if c >= k]
         keep = set(survivors)
         deg: dict = {}
@@ -660,9 +685,9 @@ def k_core(pairs: DataFrame, k: int, id_a: str = "id_a",
                 deg[a] = deg.get(a, 0) + 1
                 deg[b] = deg.get(b, 0) + 1
         # in-core degree means degree inside the k-core SUBGRAPH
-        return pairs.sparkSession.createDataFrame(
-            [(v, deg.get(v, 0)) for v in survivors],
-            f"id {id_t}, degree bigint")
+        return local_frame(pairs.sparkSession,
+                           [survivors, [deg.get(v, 0) for v in survivors]],
+                           f"id {_id_type(e, 'a')}, degree bigint NOT NULL")
     peels = 0
     while True:
         deg = (e.select(F.col("a").alias("id"))
@@ -724,22 +749,14 @@ def coreness(pairs: DataFrame, id_a: str = "id_a",
     :func:`k_core` (degree aggregates + semi-joins only; no neighbor
     lists).  Driver traffic: one scalar per peel round.
     """
-    e = (pairs.select(
-        F.least(F.col(id_a), F.col(id_b)).alias("a"),
-        F.greatest(F.col(id_a), F.col(id_b)).alias("b"))
-        .where(F.col("a") != F.col("b")).distinct()
-        .localCheckpoint(eager=True))
+    e = _undirected(pairs, id_a, id_b).localCheckpoint(eager=True)
     spark = pairs.sparkSession
-    fuse = (GRAPH_FUSE_LOCAL_EDGES if fuse_local_edges is None
-            else fuse_local_edges)
-    if e.count() <= fuse:
-        core = _py_core_numbers(
-            [(r["a"], r["b"]) for r in e.collect()])
-        id_t = pairs.schema[id_a].dataType.simpleString()
-        if not core:
-            return spark.createDataFrame([], f"id {id_t}, core bigint")
-        return spark.createDataFrame(
-            sorted(core.items()), f"id {id_t}, core bigint")
+    table = _fetch_small(e, fuse_local_edges)
+    if table is not None:
+        core = sorted(_py_core_numbers(_rows(table, "a", "b")).items())
+        return local_frame(spark, [[v for v, _c in core],
+                                   [c for _v, c in core]],
+                           f"id {_id_type(e, 'a')}, core bigint NOT NULL")
     # live vertex set tracked explicitly: a vertex whose last edges
     # peel away vanishes from the edge-derived degree relation but
     # must still shed (degree 0) at the current layer
@@ -788,5 +805,6 @@ def coreness(pairs: DataFrame, id_a: str = "id_a",
                  .localCheckpoint(eager=True))
         kk += 1
     if out is None:
-        return spark.createDataFrame([], "id bigint, core bigint")
+        return local_frame(spark, [[], []],
+                           f"id {_id_type(e, 'a')}, core bigint NOT NULL")
     return out

@@ -76,6 +76,44 @@ def ensure_min_parallelism(df, min_parts: int | None = None):
     return df
 
 
+def fetch_if_small(df, cap: int) -> pa.Table | None:
+    """``df`` as a ``pa.Table`` when it has at most ``cap`` rows, else
+    ``None`` — ONE ``limit(cap + 1).toArrow()`` action instead of a
+    ``count()`` job followed by a Row ``collect()``.
+
+    Meant for a relation that is already checkpointed: an over-cap
+    answer then costs a rescan of at most ``cap + 1`` stored rows, and
+    the caller's distributed fallback reuses the same blocks.
+    """
+    if cap < 0:
+        return None
+    # limit() takes a Java int; no driver holds 2³¹ fused rows anyway
+    table = df.limit(min(cap, 2**31 - 2) + 1).toArrow()
+    return None if table.num_rows > cap else table
+
+
+def local_frame(spark, columns, schema: str):
+    """A DataFrame over driver-computed ``columns`` (one sequence per
+    field of the DDL ``schema``), built from a ``pa.Table``.
+
+    The Arrow path yields a ``LocalRelation`` with known size
+    statistics, so a join against it can plan as a broadcast hash join
+    over ``LocalTableScan``.  ``createDataFrame(<list of tuples>)``
+    instead goes through ``parallelize``: its ``Scan ExistingRDD`` has
+    no statistics (joins plan as two-shuffle sort-merge) and every
+    action over it runs Python-worker tasks.
+    """
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    struct = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(struct)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema)
+    return spark.createDataFrame(table, struct)
+
+
 def feature_matrix(col: pa.Array, expected_len: int, dtype=np.float32) -> np.ndarray:
     """Convert an Arrow list<numeric> array to a dense ``(n, d)`` ndarray.
 
