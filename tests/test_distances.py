@@ -141,3 +141,41 @@ def test_manhattan_cuda_gated_or_matches_cpu():
             k(X, W)
         return
     np.testing.assert_allclose(k(X, W), D.manhattan(X, W), rtol=1e-5)
+
+
+#: The GEMM kernels as plain allocating expressions: the kernels compute
+#: them in place on their own x·wᵀ, and must match them bit for bit —
+#: value and dtype — or trained weights drift.
+ALLOCATING = {
+    "squared_euclidean_part": lambda x, w, w_sq: w_sq.T - 2.0 * np.dot(x, w.T),
+    "squared_euclidean": lambda x, w, w_sq: (
+        w_sq.T - 2.0 * np.dot(x, w.T) + np.power(x, 2).sum(axis=1,
+                                                        keepdims=True)),
+    "euclidean": lambda x, w, w_sq: np.nan_to_num(np.sqrt(
+        w_sq.T - 2.0 * np.dot(x, w.T) + np.power(x, 2).sum(axis=1,
+                                                          keepdims=True))),
+    "cosine": lambda x, w, w_sq: 1.0 - np.nan_to_num(
+        np.dot(x, w.T) / np.sqrt(np.power(x, 2).sum(axis=1, keepdims=True)
+                                 * w_sq.T)),
+}
+
+
+@pytest.mark.parametrize("name", sorted(ALLOCATING))
+@pytest.mark.parametrize("xdt,wdt", [(np.float32, np.float32),
+                                     (np.float64, np.float64),
+                                     (np.float32, np.float64),
+                                     (np.float64, np.float32),
+                                     (np.int64, np.int64)])
+def test_in_place_kernels_equal_allocating_expressions(name, xdt, wdt):
+    rng = np.random.RandomState(4)
+    x = (rng.rand(300, 6) * 10).astype(xdt)
+    w = (rng.rand(20, 6) * 10).astype(wdt)
+    x[3] = 0
+    w[4] = 0   # zero vectors: the cosine NaN scrub
+    w_sq = D.codebook_sq_norms(w)
+    fn = getattr(D, name)
+    with np.errstate(all="ignore"):
+        want = ALLOCATING[name](x, w, w_sq)
+        for got in (fn(x, w), fn(x, w, w_sq)):
+            assert got.dtype == want.dtype
+            np.testing.assert_array_equal(got, want)

@@ -684,6 +684,28 @@ def test_triangle_counts_two_path_parity(spark):
     assert fused == dist and fused
 
 
+def test_triangle_counts_over_wedge_cap_runs_distributed(spark, monkeypatch):
+    """A dense graph under the edge cap but over the wedge cap skips the
+    Python enumeration: the distributed plan over the same checkpointed
+    edges, with the fuse_local_edges=0 result."""
+    from xpysom_dask_spark.operators import graph
+
+    clique = [(a, b) for a in range(12) for b in range(a + 1, 12)]
+    df = spark.createDataFrame(clique + [(11, 20), (20, 21)],
+                               "id_a bigint, id_b bigint")
+    assert "LocalTableScan" in graph.triangle_counts(df)._jdf \
+        .queryExecution().executedPlan().toString()
+    monkeypatch.setattr(graph, "TRIANGLE_FUSE_WEDGES", 100)   # K12: 220
+    capped = graph.triangle_counts(df)
+    assert "LocalTableScan" not in \
+        capped._jdf.queryExecution().executedPlan().toString()
+    dist = graph.triangle_counts(df, fuse_local_edges=0)
+    assert capped.schema == dist.schema
+    got = sorted(capped.collect())
+    assert got == sorted(dist.collect())
+    assert dict(got)[0] == 55 and dict(got)[21] == 0   # C(11, 2)
+
+
 def test_fused_components_are_an_arrow_local_relation(spark):
     """The fused result is an Arrow-built LocalRelation: a sized
     LocalTableScan, not the statistics-free RDD scan that

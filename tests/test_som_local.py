@@ -5,12 +5,20 @@ known BMUs and metric goldens (reference tests.py:22-96; FIXTURES.md F1).
 F4: determinism / QE-monotonicity / pca golden (tests.py:98-143).
 """
 
+import os
 import pickle
+import signal
+import sys
+import time
+from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 import pytest
 
 from xpysom_dask_spark import SparkSom
+from xpysom_dask_spark.functions.distances import (codebook_sq_norms,
+                                                   resolve_distance)
+from xpysom_dask_spark.plans import training
 
 
 @pytest.fixture
@@ -292,3 +300,210 @@ def test_n_parallel_zero_means_auto(spark):
     assert np.isfinite(auto.quantization_error(X))
     with pytest.raises(ValueError, match="n_parallel"):
         SparkSom(4, 4, 3, n_parallel=-1)
+
+
+def _serial_fit(som, X, epochs):
+    """The single-threaded epoch loop: kernel + argmin per
+    ``BMU_CHUNK_ROWS`` chunk with OpenBLAS at one thread, then per-cell
+    sums accumulated block by block in order."""
+    K, d = som._x * som._y, som._input_len
+    X = np.asarray(X, dtype=som.dtype)
+    W = som._weights.astype(som.dtype)
+    step = training.BMU_CHUNK_ROWS
+    for t in range(epochs):
+        w_flat = W.reshape(-1, d)
+        w_sq = codebook_sq_norms(w_flat) if som._distance.can_cache else None
+        eta = som._decay(som._learning_rate, som._learning_rateN, t, epochs)
+        sig = som._decay(som._sigma, som._sigmaN, t, epochs)
+        c = np.zeros(K)
+        S = np.zeros((K, d))
+        for s in range(0, len(X), som.batch_rows):
+            block = X[s: s + som.batch_rows]
+            with training._blas_single_threaded():
+                idx = np.concatenate([
+                    som._distance(block[a: a + step], w_flat,
+                                  w_sq).argmin(axis=1)
+                    for a in range(0, len(block), step)])
+            cc, SS = training.bmu_cell_sums(block, idx, K)
+            c += cc
+            S += SS
+        num, den = som._apply_influence(S, c, sig, eta)
+        den3 = den.reshape(som._x, som._y)[:, :, None]
+        W = np.where(den3 != 0, num.reshape(W.shape) / den3,
+                     W).astype(som.dtype)
+    return W
+
+
+needs_openblas = pytest.mark.skipif(
+    not training._openblas_threads(),
+    reason="no OpenBLAS loaded: the BMU search runs on one thread")
+
+
+@needs_openblas
+@pytest.mark.parametrize("n", [1000, 3])
+@pytest.mark.parametrize("topology", ["rectangular", "hexagonal"])
+@pytest.mark.parametrize("distance", ["euclidean", "cosine", "manhattan"])
+def test_threaded_fit_bit_identical_to_serial(monkeypatch, distance,
+                                              topology, n):
+    """Sharing the BMU chunks among driver threads changes no bit of the
+    weights: 1000 rows in 256-row blocks (the last one 232 rows) of
+    64-row chunks on four threads, and 3 rows, one chunk, inline."""
+    monkeypatch.setattr(training, "driver_threads", lambda: 4)
+    monkeypatch.setattr(training, "BMU_CHUNK_ROWS", 64)
+    X = np.random.RandomState(11).rand(n, 5).astype(np.float32)
+
+    def model():
+        return SparkSom(6, 5, 5, random_seed=4, batch_rows=256,
+                        topology=topology, activation_distance=distance)
+
+    som = model()
+    som._train_local(X, 3, 0, 3, info=(info := {}))
+    assert (info["threads"], len(info["epochs"])) == (
+        (4, 3) if n > 64 else (1, 3))
+    np.testing.assert_array_equal(som.get_weights(),
+                                  _serial_fit(model(), X, 3))
+
+
+@needs_openblas
+@pytest.mark.parametrize("distance", ["euclidean", "euclidean_no_opt",
+                                      "cosine", "manhattan", "norm_p"])
+def test_bmu_indices_on_near_ties_same_on_any_thread_count(monkeypatch,
+                                                           distance):
+    """Codebook rows in pairs one float32 ulp apart: every row's argmin
+    hangs on the last bit of its activations.  A GEMM's bits depend on
+    its row count and on OpenBLAS's thread count, so the chunks are
+    fixed-size and pinned: 1, 2, 3 and 4 threads give the same cells."""
+    monkeypatch.setattr(training, "BMU_CHUNK_ROWS", 500)
+    rng = np.random.RandomState(21)
+    X = rng.rand(4000, 8).astype(np.float32)
+    W = rng.rand(12, 8).astype(np.float32)
+    W = np.vstack([W, W + np.float32(6e-8) * rng.choice([-1, 1], W.shape)
+                   ]).astype(np.float32)
+    kernel = resolve_distance(distance)
+    w_sq = codebook_sq_norms(W) if kernel.can_cache else None
+    got = []
+    for threads in (1, 2, 3, 4):
+        monkeypatch.setattr(training, "driver_threads", lambda: threads)
+        assert training.bmu_threads(len(X)) == threads
+        got.append(training.bmu_indices(kernel, X, W, w_sq))
+    for idx in got[1:]:
+        np.testing.assert_array_equal(idx, got[0])
+
+
+def test_one_core_runs_inline_with_same_weights(monkeypatch):
+    X = np.random.RandomState(12).rand(700, 4).astype(np.float32)
+    monkeypatch.setattr(training, "BMU_CHUNK_ROWS", 100)
+    threaded = SparkSom(5, 5, 4, random_seed=2, batch_rows=300)
+    monkeypatch.setattr(training, "driver_threads", lambda: 4)
+    threaded.train(X, 2)
+    monkeypatch.setattr(training, "driver_threads", lambda: 1)
+    inline = SparkSom(5, 5, 4, random_seed=2, batch_rows=300)
+    inline._train_local(X, 2, 0, 2, info=(info := {}))
+    assert info["threads"] == 1
+    np.testing.assert_array_equal(inline.get_weights(),
+                                  threaded.get_weights())
+
+
+@needs_openblas
+def test_blas_thread_count_restored(monkeypatch):
+    """The BMU search runs with OpenBLAS at one thread and restores the
+    previous count afterwards — also when the kernel raises on a pool
+    thread, which fails the fit and leaves the pool usable."""
+    monkeypatch.setattr(training, "driver_threads", lambda: 4)
+    monkeypatch.setattr(training, "BMU_CHUNK_ROWS", 50)
+    get, set_ = training._openblas_threads()[0]
+    X = np.random.RandomState(13).rand(500, 3).astype(np.float32)
+    som = SparkSom(4, 4, 3, random_seed=1, batch_rows=200)
+    kernel = som._distance
+    seen, calls = [], []
+
+    def probe(x, w, w_sq=None):
+        seen.append(get())
+        return kernel(x, w, w_sq)
+
+    def failing(x, w, w_sq=None):
+        calls.append(len(x))
+        if len(calls) == 6:   # a chunk of the second block
+            raise RuntimeError("kernel failed")
+        return kernel(x, w, w_sq)
+
+    probe.can_cache = failing.can_cache = kernel.can_cache
+    original = get()
+    set_(3)   # a count the pinning cannot restore by accident
+    try:
+        som._distance = probe
+        som.train(X, 2)
+        assert set(seen) == {1}
+        assert get() == 3
+        som._distance = failing
+        with pytest.raises(RuntimeError, match="kernel failed"):
+            som.train(X, 2)
+        assert get() == 3
+    finally:
+        set_(original)
+    fresh = SparkSom(4, 4, 3, random_seed=1, batch_rows=200)
+    fresh.train(X, 2)
+    np.testing.assert_array_equal(
+        fresh.get_weights(),
+        _serial_fit(SparkSom(4, 4, 3, random_seed=1, batch_rows=200), X, 2))
+
+
+def test_concurrent_callers_get_serial_indices(monkeypatch):
+    """Eight Python threads calling bmu_indices at once — their pinned
+    sections queue on one lock and share one pool — each get the
+    one-thread result, and the BLAS thread counts are back afterwards."""
+    monkeypatch.setattr(training, "BMU_CHUNK_ROWS", 100)
+    kernel = resolve_distance("euclidean")
+    rng = np.random.RandomState(14)
+    W = rng.rand(30, 5).astype(np.float32)
+    w_sq = codebook_sq_norms(W)
+    blocks = [rng.rand(400, 5).astype(np.float32) for _ in range(8)] * 4
+    monkeypatch.setattr(training, "driver_threads", lambda: 1)
+    want = [training.bmu_indices(kernel, X, W, w_sq) for X in blocks]
+    monkeypatch.setattr(training, "driver_threads", lambda: 4)
+    before = [get() for get, _ in training._openblas_threads()]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(8) as callers:
+            got = list(callers.map(
+                lambda X: training.bmu_indices(kernel, X, W, w_sq),
+                blocks, timeout=120))
+    finally:
+        sys.setswitchinterval(interval)
+    for idx, ref in zip(got, want):
+        np.testing.assert_array_equal(idx, ref)
+    assert [get() for get, _ in training._openblas_threads()] == before
+
+
+@pytest.mark.skipif(not hasattr(os, "fork"), reason="no os.fork")
+def test_forked_child_gets_its_own_pool(monkeypatch):
+    """A child forked after the pool exists inherits the pool object but
+    not its threads: it must build its own instead of queueing work no
+    thread will ever run."""
+    monkeypatch.setattr(training, "driver_threads", lambda: 4)
+    monkeypatch.setattr(training, "BMU_CHUNK_ROWS", 100)
+    kernel = resolve_distance("euclidean")
+    rng = np.random.RandomState(15)
+    X = rng.rand(1000, 5).astype(np.float32)
+    W = rng.rand(30, 5).astype(np.float32)
+    w_sq = codebook_sq_norms(W)
+    want = training.bmu_indices(kernel, X, W, w_sq)
+    r, w = os.pipe()
+    pid = os.fork()
+    if pid == 0:
+        try:
+            got = training.bmu_indices(kernel, X, W, w_sq)
+            os.write(w, b"1" if np.array_equal(got, want) else b"0")
+        finally:
+            os._exit(0)
+    os.close(w)
+    deadline = time.monotonic() + 30
+    while not os.waitpid(pid, os.WNOHANG)[0]:
+        if time.monotonic() > deadline:
+            os.kill(pid, signal.SIGKILL)
+            os.waitpid(pid, 0)
+            pytest.fail("the forked child hung in bmu_indices")
+        time.sleep(0.05)
+    assert os.read(r, 1) == b"1"
+    os.close(r)

@@ -55,6 +55,17 @@ def codebook_sq_norms(w: np.ndarray) -> np.ndarray:
     return np.power(w, 2).sum(axis=1, keepdims=True)
 
 
+def _own(a, *others):
+    """``a`` as the ``out=`` of an elementwise op on ``a`` and ``others``
+    (a float scalar stands in for a float-valued unary op such as sqrt)
+    when the result has ``a``'s dtype, else None (numpy allocates).
+    Only for arrays the kernel made itself: the values are the
+    allocating expression's, without its (n, m) temporaries, whose
+    first-touch page faults cost as much as the arithmetic at SOM
+    sizes."""
+    return a if np.result_type(a, *others) == a.dtype else None
+
+
 def squared_euclidean_part(x, w, w_sq=None):
     """Partial squared L2: ``‖w‖² − 2·x·wᵀ`` (omits row-constant ``‖x‖²``).
 
@@ -63,20 +74,25 @@ def squared_euclidean_part(x, w, w_sq=None):
     """
     if w_sq is None:
         w_sq = codebook_sq_norms(w)
-    return w_sq.T - 2.0 * np.dot(x, w.T)
+    xw = np.dot(x, w.T)
+    xw = np.multiply(xw, 2.0, out=_own(xw, 2.0))
+    return np.subtract(w_sq.T, xw, out=_own(xw, w_sq))
 
 
 def squared_euclidean(x, w, w_sq=None):
     """Full squared L2 distance. Parity: distances.py:25-31."""
     x_sq = np.power(x, 2).sum(axis=1, keepdims=True)
-    return squared_euclidean_part(x, w, w_sq) + x_sq
+    d = squared_euclidean_part(x, w, w_sq)
+    return np.add(d, x_sq, out=_own(d, x_sq))
 
 
 def euclidean(x, w, w_sq=None):
     """True L2 distance; scrubs NaNs produced by negative epsilons under the
     sqrt (parity: distances.py:33-43 — minus its duplicated computation,
     which SURVEY.md §5 flags as pure waste)."""
-    return np.nan_to_num(np.sqrt(squared_euclidean(x, w, w_sq)))
+    d = squared_euclidean(x, w, w_sq)
+    d = np.sqrt(d, out=_own(d, 1.0))
+    return np.nan_to_num(d, copy=False)
 
 
 def cosine(x, w, w_sq=None):
@@ -84,9 +100,13 @@ def cosine(x, w, w_sq=None):
     via nan_to_num, matching distances.py:45-59."""
     if w_sq is None:
         w_sq = codebook_sq_norms(w)
+    xw = np.dot(x, w.T)
     x_sq = np.power(x, 2).sum(axis=1, keepdims=True)
-    sim = np.nan_to_num(np.dot(x, w.T) / np.sqrt(x_sq * w_sq.T))
-    return 1.0 - sim
+    norms = x_sq * w_sq.T
+    norms = np.sqrt(norms, out=_own(norms, 1.0))
+    sim = np.nan_to_num(np.divide(xw, norms, out=_own(xw, norms)),
+                        copy=False)
+    return np.subtract(1.0, sim, out=_own(sim, 1.0))
 
 
 def pnorm_power_broadcast(x, w, p=2):

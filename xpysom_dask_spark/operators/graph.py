@@ -385,6 +385,49 @@ def component_sizes(components: DataFrame) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("n_members")))
 
 
+#: Largest wedge count Σ C(out-degree, 2) the fused ``triangle_counts``
+#: enumerates in Python: every wedge costs one or two set probes
+#: (240-440 ns), and a dense graph under the edge cap can hold ~10⁸ of
+#: them.  Fused vs distributed, median of 3, on 4 cores, random graphs
+#: (vertices, edges → wedges): 800, 60k → 2.8e6: 0.81 vs 1.83 s;
+#: 3000, 200k → 8.3e6: 2.29 vs 3.20 s; 1000, 120k → 9.1e6: 3.59 vs
+#: 2.94 s; 1200, 200k → 2.1e7: 9.48 vs 5.35 s.  The cap sits below the
+#: ~8e6 crossover.
+TRIANGLE_FUSE_WEDGES = 5_000_000
+
+
+def _py_triangles(rows, max_wedges):
+    """Per-vertex triangle counts ``{id: n}`` of canonical edges
+    ``rows`` by the degree-ordered compact-forward enumeration, in exact
+    Python ints; ``None`` when its wedge count Σ C(out-degree, 2) —
+    summed in O(edges) before any probe — exceeds ``max_wedges``."""
+    deg: dict = {}
+    for a, b in rows:
+        deg[a] = deg.get(a, 0) + 1
+        deg[b] = deg.get(b, 0) + 1
+    out_adj: dict = {}
+    for a, b in rows:
+        u, v = ((a, b) if (deg[a], a) < (deg[b], b) else (b, a))
+        out_adj.setdefault(u, []).append(v)
+    if sum(len(ns) * (len(ns) - 1) // 2
+           for ns in out_adj.values()) > max_wedges:
+        return None
+    dirset = {(u, v) for u, ns in out_adj.items() for v in ns}
+    # each triangle counted once, all three endpoints credited — parity
+    # with the distributed plan pinned by tests
+    tri = {v: 0 for v in deg}
+    for u, nbrs in out_adj.items():
+        ns = sorted(nbrs)
+        for i in range(len(ns) - 1):
+            for j in range(i + 1, len(ns)):
+                v, w = ns[i], ns[j]
+                if (v, w) in dirset or (w, v) in dirset:
+                    tri[u] += 1
+                    tri[v] += 1
+                    tri[w] += 1
+    return tri
+
+
 def triangle_counts(pairs: DataFrame, id_a: str = "id_a",
                     id_b: str = "id_b",
                     fuse_local_edges: int | None = None) -> DataFrame:
@@ -410,42 +453,22 @@ def triangle_counts(pairs: DataFrame, id_a: str = "id_a",
     construction).
 
     Graphs whose canonical edge set fits ``fuse_local_edges``
-    (default :data:`GRAPH_FUSE_LOCAL_EDGES`) run the identical
-    compact-forward enumeration on the driver in exact Python ints
-    (two-path parity tested) — the wedge self-join over a tiny graph
-    is pure job latency (optimization r13, the label_propagation /
-    pagerank fusion idiom)."""
+    (default :data:`GRAPH_FUSE_LOCAL_EDGES`) and whose wedge count fits
+    :data:`TRIANGLE_FUSE_WEDGES` run the identical compact-forward
+    enumeration on the driver in exact Python ints (two-path parity
+    tested) — the wedge self-join over a tiny graph is pure job
+    latency (optimization r13, the label_propagation / pagerank fusion
+    idiom)."""
     e = _undirected(pairs, id_a, id_b).localCheckpoint(eager=True)
     table = _fetch_small(e, fuse_local_edges)
-    if table is not None:
-        # driver fusion: same degree-ordered compact-forward plan in
-        # exact Python (each triangle counted once, all three
-        # endpoints credited — parity pinned by tests)
-        rows = _rows(table, "a", "b")
-        deg: dict = {}
-        for a, b in rows:
-            deg[a] = deg.get(a, 0) + 1
-            deg[b] = deg.get(b, 0) + 1
-        out_adj: dict = {}
-        dirset = set()
-        for a, b in rows:
-            u, v = ((a, b) if (deg[a], a) < (deg[b], b) else (b, a))
-            out_adj.setdefault(u, []).append(v)
-            dirset.add((u, v))
-        tri = {v: 0 for v in deg}
-        for u, nbrs in out_adj.items():
-            ns = sorted(nbrs)
-            for i in range(len(ns) - 1):
-                for j in range(i + 1, len(ns)):
-                    v, w = ns[i], ns[j]
-                    if (v, w) in dirset or (w, v) in dirset:
-                        tri[u] += 1
-                        tri[v] += 1
-                        tri[w] += 1
+    tri = (None if table is None
+           else _py_triangles(_rows(table, "a", "b"), TRIANGLE_FUSE_WEDGES))
+    if tri is not None:
         return local_frame(pairs.sparkSession,
                            [list(tri), list(tri.values())],
                            f"id {_id_type(e, 'a')}, "
                            "n_triangles bigint NOT NULL")
+    # over either cap: the distributed plan over the same checkpointed e
     deg = (e.select(F.col("a").alias("v"))
            .unionAll(e.select(F.col("b").alias("v")))
            .groupBy("v").agg(F.count(F.lit(1)).alias("d")))

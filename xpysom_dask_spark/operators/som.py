@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import json
 import os
+import time
 from collections import Counter, defaultdict
 from warnings import warn
 
@@ -65,15 +66,18 @@ class SparkSom:
         one Spark job instead of one per epoch — when the per-epoch
         kernel work n·K·d (times the distance kernel's relative cost)
         is at most ``plans.training.FUSE_WORK_CAP`` AND the feature
-        matrix is at most this many bytes.  The work cap sits below
-        the point where the driver loop stops beating the per-epoch
-        job, whose floor is ~0.4-0.5 s (driver round trip plus Python
-        worker set-up per task, measured on 4 cores): 5e8 euclidean
-        row·cell·features, e.g. 600k × 8 rows on a 10×10 grid.  This
+        matrix is at most this many bytes.  The work cap sits at half
+        the point where the driver loop, its BMU search on every driver
+        core, stops beating the per-epoch job, whose floor is ~0.4-0.5 s
+        (driver round trip plus Python worker set-up per task, measured
+        on 4 cores): 3e9 euclidean row·cell·features, e.g. 300k × 8
+        rows on a 35×35 grid.  This
         byte cap only bounds what is collected to the driver
         (``toArrow`` of 64 MiB takes ~0.4 s).  Large grids and large
         inputs stay on the distributed plan.  After a DataFrame fit,
-        ``training_info_`` records the path taken and why.
+        ``training_info_`` records the path taken and why, and on the
+        fused path the BMU thread count, whether OpenBLAS was pinned to
+        one thread, and per-epoch ``bmu_s`` / ``merge_s``.
     """
 
     def __init__(self, x, y, input_len,
@@ -222,6 +226,7 @@ class SparkSom:
         chunking (xpysom.py:389-398, 638, 665); materializing it whole
         for a large local ndarray is a driver OOM.
         """
+        from ..plans.training import bmu_indices
         w_flat = self._w_flat()
         kernel = euclidean if use_euclidean else self._distance
         w_sq = (codebook_sq_norms(w_flat)
@@ -229,9 +234,8 @@ class SparkSom:
         out = np.empty(len(X), np.int64)
         for s in range(0, len(X), self.batch_rows):
             chunk = X[s: s + self.batch_rows]
-            d = (kernel(chunk, w_flat) if use_euclidean
-                 else kernel(chunk, w_flat, w_sq))
-            out[s: s + len(chunk)] = d.argmin(axis=1)
+            bmu_indices(kernel, chunk, w_flat, w_sq,
+                        out=out[s: s + len(chunk)])
         return out
 
     # ------------------------------------------------------------------ #
@@ -326,15 +330,35 @@ class SparkSom:
         return num, den
 
     def _train_local(self, data, num_epochs, iter_beg, iter_end,
-                     verbose=False):
-        from ..plans.training import ProgressPrinter, bmu_cell_sums
-        progress = ProgressPrinter(iter_end - iter_beg) if verbose else None
+                     verbose=False, info=None):
+        """The driver-side epoch loop (ndarray fits and the fused
+        DataFrame path).  Per ``batch_rows`` block: BMU search split
+        over the driver cores (``plans.training.bmu_indices``), then
+        per-cell sums accumulated block by block in order.  ``info``
+        (the fused path's ``training_info_``) receives the thread count,
+        whether OpenBLAS was pinned and per-epoch ``bmu_s`` /
+        ``merge_s``."""
+        from ..plans.training import (ProgressPrinter, blas_pinned,
+                                      bmu_cell_sums, bmu_indices,
+                                      bmu_threads)
         X_all = self._as_matrix(data, dtype=self.dtype)
         n = len(X_all)
         shape = self._weights.shape
         K = self._x * self._y
         W = self._weights.astype(self.dtype)
+        idx_buf = np.empty(min(n, self.batch_rows), np.int64)
+        threads = bmu_threads(len(idx_buf))
+        pinned = blas_pinned()
+        epochs = []
+        if info is not None:
+            info.update(threads=threads, blas_pinned=pinned, epochs=epochs)
+        progress = None
+        if verbose:
+            print("driver loop: %d BMU thread(s), BLAS %s"
+                  % (threads, "pinned to 1" if pinned else "as configured"))
+            progress = ProgressPrinter(iter_end - iter_beg)
         for t in range(iter_beg, iter_end):
+            t0 = time.perf_counter()
             w_flat = W.reshape(-1, self._input_len)
             w_sq = (codebook_sq_norms(w_flat)
                     if self._distance.can_cache else None)
@@ -345,17 +369,22 @@ class SparkSom:
             S = np.zeros((K, self._input_len), dtype=np.float64)
             for s in range(0, n, self.batch_rows):
                 X = X_all[s: s + self.batch_rows]
-                idx = self._distance(X, w_flat, w_sq).argmin(axis=1)
+                idx = bmu_indices(self._distance, X, w_flat, w_sq,
+                                  out=idx_buf[:len(X)])
                 cc, SS = bmu_cell_sums(X, idx, K)
                 c += cc
                 S += SS
+            t1 = time.perf_counter()
             num, den = self._apply_influence(S, c, sig, eta)
             den3 = den.reshape(self._x, self._y)[:, :, None]
             W = np.where(den3 != 0, num.reshape(shape) / den3,
                          W).astype(self.dtype)
+            t2 = time.perf_counter()
+            epochs.append({"bmu_s": t1 - t0, "merge_s": t2 - t1})
             if progress is not None:
                 progress.step(t - iter_beg,
-                              "eta=%.4f sigma=%.4f" % (eta, sig))
+                              "eta=%.4f sigma=%.4f bmu %.3fs merge %.3fs"
+                              % (eta, sig, t1 - t0, t2 - t1))
         self._weights = W
         return self
 
@@ -728,13 +757,14 @@ class SparkSom:
         stores, HDFS, ...).  One row per codebook cell
         ``(i, j, weights array, params json)``; the params ride every
         row so the table is self-describing without a side file."""
-        params = self._param_json()
-        rows = [(int(i), int(j),
-                 [float(v) for v in self._weights[i, j]], params)
-                for i in range(self._x) for j in range(self._y)]
-        (spark.createDataFrame(
-            rows, "i int, j int, weights array<double>, params string")
-         .coalesce(1).write.mode(mode).parquet(path))
+        from ..plans.exchange import local_frame
+        K = self._x * self._y
+        cells = local_frame(
+            spark, [self._ux, self._uy,
+                    list(self._weights.reshape(K, -1).astype(np.float64)),
+                    [self._param_json()] * K],
+            "i int, j int, weights array<double>, params string")
+        cells.coalesce(1).write.mode(mode).parquet(path)
 
     @classmethod
     def load_table(cls, spark, path: str):

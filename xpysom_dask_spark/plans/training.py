@@ -37,8 +37,9 @@ measured on 4 cores (Spark 4.1.2, Python 3.11), one distributed epoch of
   task;
 * ~0.05 s of actual work: Arrow transfer, BMU argmin, bincount.
 
-The same two epochs take 0.25 s on the driver.  Running all epochs in
-one barrier stage (``mapInArrow(barrier=True)`` with a
+The same two epochs take ~0.16 s on the driver, the BMU search on
+every driver core (``bmu_indices``).  Running all epochs in one
+barrier stage (``mapInArrow(barrier=True)`` with a
 ``BarrierTaskContext.allGather`` of the (c, S) partials per epoch) does
 not remove that floor: each ``allGather`` took 1.0 s on the same box (1,
 2 and 5 rounds took 1.0, 2.0 and 5.0 s in-task), so it is no faster than
@@ -56,7 +57,13 @@ fills the plan's own cache) otherwise.
 
 from __future__ import annotations
 
+import ctypes
+import os
+import threading
 import time
+from concurrent.futures import ThreadPoolExecutor, wait
+from contextlib import contextmanager
+from functools import lru_cache
 
 import numpy as np
 
@@ -66,13 +73,14 @@ from .exchange import feature_matrix, ship_package
 _PARTIAL_SCHEMA = "bucket int, num binary, den binary"
 
 #: Largest per-epoch work n·K·d × kernel ``relative_cost`` the driver
-#: loop takes on.  Fused vs distributed fit, median of 5, on 4 cores with
-#: 300k × 8 cached float32 rows, euclidean, 2 epochs: 10×10 (2.4e8 per
-#: epoch) 0.38 vs 0.92 s; 20×20 (9.6e8) 0.98 vs 1.09 s; 40×40 (3.8e9)
-#: 3.93 vs 2.05 s.  One epoch over 1M rows on 10×10 (8e8) breaks even
-#: (0.73 vs 0.72 s).  The cap sits below the crossover, where the fused
-#: path clearly wins.
-FUSE_WORK_CAP = 5e8
+#: loop takes on.  Fused (BMU search on 4 threads) vs distributed fit,
+#: median of 5, on 4 cores with 300k × 8 cached float32 rows, euclidean,
+#: 2 epochs: 10×10 (2.4e8 per epoch) 0.43 vs 1.28 s; 20×20 (9.6e8) 0.51
+#: vs 1.45 s; 30×30 (2.2e9) 0.82 vs 1.93 s; 40×40 (3.8e9) 1.35 vs
+#: 2.57 s; 60×60 (8.6e9) 4.74 vs 3.99 s.  One epoch over 1M rows on
+#: 10×10 (8e8): 0.87 vs 1.48 s.  The crossover is near 6e9 (~1e9 for
+#: a whole-block, single-threaded BMU search); the cap sits at half.
+FUSE_WORK_CAP = 3e9
 
 
 class ProgressPrinter:
@@ -114,6 +122,126 @@ def bmu_cell_sums(X, idx, n_cells):
     for j in range(X.shape[1]):
         S[:, j] = np.bincount(idx, weights=X[:, j], minlength=n_cells)
     return c, S
+
+
+#: Rows per kernel call of the driver-side BMU search.  Each chunk's
+#: GEMM runs with OpenBLAS at one thread, so a chunk's activations are
+#: the same bits whichever thread computes it and however many share the
+#: chunks: the weights do not depend on the driver's core count.  (A
+#: GEMM's bits depend on its row count and on OpenBLAS's thread count —
+#: no split of one multi-threaded whole-block GEMM reproduces it.)  4096
+#: rows × K activations stay in cache at SOM sizes.
+BMU_CHUNK_ROWS = 4096
+
+
+def driver_threads():
+    """Cores the driver process may run on."""
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
+@lru_cache(maxsize=None)
+def _openblas_threads():
+    """``((get, set), ...)`` thread-count entry points of every OpenBLAS
+    mapped into this process (numpy's is ``openblas64_``-suffixed), or
+    ``()`` — no OpenBLAS (MKL, Accelerate) or no ``/proc/self/maps``."""
+    try:
+        with open("/proc/self/maps") as f:
+            paths = {line.split()[-1] for line in f
+                     if "openblas" in line.rsplit("/", 1)[-1].lower()}
+    except OSError:
+        return ()
+    found = []
+    for path in sorted(paths):
+        try:
+            lib = ctypes.CDLL(path)
+        except OSError:
+            continue
+        for suffix in ("", "64_"):
+            get = getattr(lib, "openblas_get_num_threads" + suffix, None)
+            set_ = getattr(lib, "openblas_set_num_threads" + suffix, None)
+            if get is not None and set_ is not None:
+                get.restype, get.argtypes = ctypes.c_int, []
+                set_.restype, set_.argtypes = None, [ctypes.c_int]
+                found.append((get, set_))
+                break
+    return tuple(found)
+
+
+_BLAS_LOCK = threading.Lock()
+#: (process id, thread count) -> ThreadPoolExecutor, created on first use;
+#: keyed by pid because a forked child inherits the dict, not the threads
+_pools = {}
+
+
+@contextmanager
+def _blas_single_threaded():
+    """Run the block with every OpenBLAS at one thread, restoring the
+    previous counts on exit; concurrent sections queue on one lock."""
+    libs = _openblas_threads()
+    with _BLAS_LOCK:
+        prev = [get() for get, _ in libs]
+        for _, set_ in libs:
+            set_(1)
+        try:
+            yield
+        finally:
+            for (_, set_), n in zip(libs, prev):
+                set_(n)
+
+
+def blas_pinned():
+    """Whether ``bmu_indices`` pins a BLAS (an OpenBLAS is loaded)."""
+    return bool(_openblas_threads())
+
+
+def bmu_threads(rows):
+    """Threads ``bmu_indices`` runs a ``rows``-row block's chunks on:
+    one per driver core, or 1 (inline, no pool) on one core, for a
+    single chunk, or without an OpenBLAS to pin (whose GEMMs, called
+    from several threads at once, would queue on its own thread team)."""
+    p = min(driver_threads(), -(-rows // BMU_CHUNK_ROWS))
+    return p if p > 1 and blas_pinned() else 1
+
+
+def bmu_indices(kernel, X, w_flat, w_sq, out=None):
+    """BMU index ``argmin_k kernel(X, w_flat, w_sq)[i, k]`` per row of
+    one block, into ``out`` (allocated when None).
+
+    The kernel runs per ``BMU_CHUNK_ROWS`` chunk with OpenBLAS pinned to
+    one thread, the chunks shared by ``bmu_threads`` pool threads (the
+    BLAS team would queue GEMMs issued from several threads, and a
+    pinned GEMM is the same bits on any thread).  The weights therefore
+    do not depend on the core count; callers keep summing per block
+    (``bmu_cell_sums``), in order.  Transient activations stay a few
+    ``chunk × K`` arrays per thread.
+    """
+    n = len(X)
+    if out is None:
+        out = np.empty(n, np.int64)
+    bounds = list(range(0, n, BMU_CHUNK_ROWS)) + [n]
+    chunks = list(zip(bounds, bounds[1:]))
+
+    def run(a, b):
+        np.argmin(kernel(X[a:b], w_flat, w_sq), axis=1, out=out[a:b])
+
+    p = bmu_threads(n)
+    with _blas_single_threaded():
+        if p == 1:
+            for a, b in chunks:
+                run(a, b)
+            return out
+        key = (os.getpid(), p)
+        pool = _pools.get(key)
+        if pool is None:
+            pool = _pools[key] = ThreadPoolExecutor(
+                p, thread_name_prefix="bmu")
+        futures = [pool.submit(run, a, b) for a, b in chunks]
+        wait(futures)
+    for f in futures:
+        f.result()
+    return out
 
 
 def _partial_update_factory(bc, kernel, shape, dtype, fanout):
@@ -273,7 +401,7 @@ def run_training(som, df, num_epochs, iter_beg=0, iter_end=None, verbose=False):
         if own_cache:
             feats.unpersist()
         return som._train_local(X, num_epochs, iter_beg, iter_end,
-                                verbose=verbose)
+                                verbose=verbose, info=info)
 
     n_parts = feats.rdd.getNumPartitions()
     two_level = n_parts > som.collect_threshold
