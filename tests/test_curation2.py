@@ -474,6 +474,43 @@ def test_near_dedup_incremental_across_batches(spark):
     assert set(idx2.columns) == {"id"} | {f"mh_{i}" for i in range(8)}
 
 
+def test_near_dedup_incremental_within_batch_matches_row_form(spark):
+    """Survivors and index from the per-document set table equal the
+    row-form chain (shingles → signatures → band pairs → jaccard_verify
+    → components keep-first), values and schema, over a repeated id, a
+    short doc, NULL text, a NULL id and shingles repeated in a doc."""
+    from xpysom_dask_spark.operators import dedup
+    from xpysom_dask_spark.operators.graph import connected_components
+
+    near = "one two three four five six seven eight nine ten eleven"
+    df = spark.createDataFrame(
+        [(1, near), (2, near.replace("eleven", "zebra")),
+         (3, near.replace("one", "uno")), (3, "red green blue cyan"),
+         (4, "a b"), (5, None), (None, near),
+         (6, "red green blue cyan magenta yellow black white"),
+         (7, "red green blue cyan magenta yellow black grey"),
+         (8, "p q r s t u p q r s t u w"), (9, "p q r s t u p q r s t u v")],
+        "doc_id bigint, text string")
+    surv, idx = dedup.near_dedup_incremental(df, "text", "doc_id",
+                                             threshold=0.5)
+
+    sh = dedup.word_shingles(df, "text", "doc_id")
+    sigs = dedup.minhash_signatures_from_shingles(sh)
+    verified = dedup.jaccard_verify(dedup.minhash_band_pairs(sigs), sh, 0.5)
+    comp = connected_components(verified.select("id_a", "id_b"))
+    ref_surv = df.join(comp.where("id != component")
+                       .selectExpr("id AS doc_id"), "doc_id", "left_anti")
+    ref_idx = sigs.join(ref_surv.selectExpr("doc_id AS id"), "id",
+                        "left_semi")
+    assert surv.schema == ref_surv.schema
+    assert idx.schema == ref_idx.schema
+    assert sorted(surv.collect(), key=repr) == \
+        sorted(ref_surv.collect(), key=repr)
+    assert sorted(idx.collect(), key=repr) == \
+        sorted(ref_idx.collect(), key=repr)
+    assert not {2, 9} & {r.doc_id for r in surv.collect()}
+
+
 def test_decontaminate_spans_excises_exact_windows(spark):
     """Span excision: every token covered by a test-matching 5-gram
     window goes, everything else stays (whitespace-normalized), docs

@@ -233,7 +233,12 @@ def word_shingles(df: DataFrame, text_col: str, id_col: str,
     document at every shingle position (O(tokens²) — measured 15.9 s for
     5 k docs) because the alias is substituted into the lambda body.  A
     multi-use, non-cheap alias blocks CollapseProject, so ``t`` is
-    computed once per document.
+    computed once per document.  The same inlining sinks per-document
+    ARRAY work done in a chain of narrow projections (an
+    ``array_distinct(transform(...))`` shingle set per row): measured
+    7.5 s per fuzzy-dedup op on 3,000 documents with a checkpoint and
+    17.5 s without, against ~1.2 s for exploding here and regrouping
+    with ``collect_set`` (:func:`_shingle_sets`).
     """
     from ..plans.exchange import ensure_min_parallelism
 
@@ -275,11 +280,37 @@ def minhash_signatures_from_shingles(sh: DataFrame, k: int = MINHASH_K,
     2³¹ parse as INT, ``h`` is BIGINT), so the optimized plan and its
     outputs are unchanged.
     """
-    a, b = minhash_coefficients(k, seed)
     return (sh.selectExpr("id", f"{_shingle_hash_expr('shingle')} AS h")
+            .groupBy("id").agg(*_minhash_aggs(k, seed)))
+
+
+def _minhash_aggs(k: int, seed: int) -> list:
+    """The k ``min((a_i·h + b_i) % p) AS mh_i`` aggregates over a
+    per-shingle hash column ``h``."""
+    a, b = minhash_coefficients(k, seed)
+    return [F.expr(f"min(({a[i]} * h + {b[i]}) % {HASH_PRIME}) AS mh_{i}")
+            for i in range(k)]
+
+
+def _shingle_sets(df: DataFrame, text_col: str, id_col: str, n: int,
+                  k: int) -> DataFrame:
+    """(id, shingles, mh_0 … mh_{k-1}): each document's distinct
+    shingle set and its MinHash signature from ONE ``groupBy("id")``.
+
+    ``collect_set`` dedups per id, so the shingle-text ``distinct()``
+    shuffle of :func:`word_shingles` is not needed; rows sharing an id
+    merge into one set, and documents with fewer than n tokens have no
+    row — both as in the row form.  One row per document feeds the band
+    keys and both sides of the exact-Jaccard verify
+    (:func:`_verify_shingle_sets`), so no shingle row is shuffled again
+    after this aggregate.
+    """
+    return (word_shingles(df, text_col, id_col, n, distinct=False)
+            .selectExpr("id", "shingle",
+                        f"{_shingle_hash_expr('shingle')} AS h")
             .groupBy("id")
-            .agg(*[F.expr(f"min(({a[i]} * h + {b[i]}) % {HASH_PRIME})"
-                          f" AS mh_{i}") for i in range(k)]))
+            .agg(F.expr("collect_set(shingle) AS shingles"),
+                 *_minhash_aggs(k, MINHASH_SEED)))
 
 
 def minhash_signatures(df: DataFrame, text_col: str, id_col: str,
@@ -435,6 +466,26 @@ def lsh_plan(threshold: float, k_max: int = 64,
             "s50": round((1.0 / b) ** (1.0 / r), 6)}
 
 
+def _bound_candidates(pairs: DataFrame,
+                      max_candidates: int | None) -> DataFrame:
+    """``pairs``, checkpointed and counted when ``max_candidates`` is
+    set; an over-bound count raises (see :func:`jaccard_verify`)."""
+    if max_candidates is None:
+        return pairs
+    pairs = pairs.localCheckpoint(eager=True)
+    n_cand = pairs.count()
+    if n_cand > max_candidates:
+        raise ValueError(
+            f"jaccard_verify: {n_cand} candidate pairs > "
+            f"max_candidates={max_candidates}; the exact-Jaccard "
+            "verify join fans out per shingle per pair and would "
+            "explode. Bound candidate generation with max_bucket "
+            "(star-pairs hot LSH buckets) or max_df (prunes "
+            "stop-shingle postings), or raise max_candidates if "
+            "the cluster really has the headroom.")
+    return pairs
+
+
 def jaccard_verify(pairs: DataFrame, shingles: DataFrame,
                    threshold: float = 0.5,
                    max_candidates: int | None = None) -> DataFrame:
@@ -453,18 +504,7 @@ def jaccard_verify(pairs: DataFrame, shingles: DataFrame,
     of spilling mid-join.  ``None`` (the oracle configuration) adds no
     extra job and leaves the plan byte-identical.
     """
-    if max_candidates is not None:
-        pairs = pairs.localCheckpoint(eager=True)
-        n_cand = pairs.count()
-        if n_cand > max_candidates:
-            raise ValueError(
-                f"jaccard_verify: {n_cand} candidate pairs > "
-                f"max_candidates={max_candidates}; the exact-Jaccard "
-                "verify join fans out per shingle per pair and would "
-                "explode. Bound candidate generation with max_bucket "
-                "(star-pairs hot LSH buckets) or max_df (prunes "
-                "stop-shingle postings), or raise max_candidates if "
-                "the cluster really has the headroom.")
+    pairs = _bound_candidates(pairs, max_candidates)
     # SQL strings, not Column expressions: one py4j call per method
     # instead of several per column (see minhash_signatures_from_shingles)
     sizes = shingles.groupBy("id").count()
@@ -483,33 +523,62 @@ def jaccard_verify(pairs: DataFrame, shingles: DataFrame,
             .where(f"jaccard >= {float(threshold)!r}D"))
 
 
+def _verify_shingle_sets(pairs: DataFrame, sets: DataFrame,
+                         threshold: float) -> DataFrame:
+    """:func:`jaccard_verify` over a :func:`_shingle_sets` table: the
+    same (id_a, id_b, jaccard ≥ threshold) rows and schema, from two
+    joins of the pairs to ONE row per document instead of the pairs ⋈
+    shingle rows fan-out and a separate per-document size aggregate."""
+    sa = sets.selectExpr("id AS id_a", "shingles AS s_a")
+    sb = sets.selectExpr("id AS id_b", "shingles AS s_b")
+    # n_inter comes out of a one-element explode: the threshold filter
+    # is pushed through projections by substituting their aliases, and
+    # a projected n_inter put array_intersect into the join condition
+    # twice and the output once (three intersections per pair, +20% on
+    # a 45k-pair exact-duplicate bucket).  A filter on a generated
+    # column stays above its Generate, so each pair intersects once.
+    return (pairs.join(sa, "id_a").join(sb, "id_b")
+            .selectExpr("id_a", "id_b", "size(s_a) + size(s_b) AS n_ab",
+                        "explode(array(size(array_intersect(s_a, s_b))))"
+                        " AS n_inter")
+            .selectExpr("id_a", "id_b",
+                        "n_inter / (n_ab - n_inter) AS jaccard")
+            .where(f"jaccard >= {float(threshold)!r}D"))
+
+
 def minhash_near_dups(df: DataFrame, text_col: str, id_col: str,
                       threshold: float = 0.5, k: int = MINHASH_K,
                       n: int = 3, max_bucket: int | None = None,
                       max_candidates: int | None = None) -> DataFrame:
     """End-to-end MinHash-LSH near-duplicate pairs with exact verification:
-    (id_a, id_b, jaccard ≥ threshold).
+    (id_a, id_b, jaccard ≥ threshold) — the rows and schema of
+    ``jaccard_verify(minhash_band_pairs(minhash_signatures_from_shingles(
+    sh)), sh)`` over ``sh = word_shingles(...)``.
 
-    The shingle relation feeds the signature step AND the verification
-    joins; without materialization the expensive explode/hash chain
-    re-executes once per downstream join.  ``localCheckpoint`` stores the
-    computed blocks on the executors and truncates the lineage, and its
-    storage is released with the plan — no unpersist bookkeeping, no
-    driver collection, scale-safe.  Eager: the downstream consumers are
-    *independent sibling stages* that the DAG scheduler submits
-    concurrently — a lazy checkpoint would be computed once per sibling
-    (measured 3× tokenization cost) because none sees the others' cache
-    in flight.
+    Plan: ONE per-document table (id, shingle set, mh_0 … mh_{k-1}) from
+    a single ``groupBy("id")`` (:func:`_shingle_sets`) feeds the band
+    keys and both sides of the exact verify, which intersects the two
+    sets of each candidate pair.  The verify therefore reads one row per
+    document, never one per shingle: the row form shuffles the
+    (id, shingle) relation once for its ``distinct()``, once for the
+    signatures, twice for the pairs ⋈ shingles joins and once for the
+    per-document sizes.  The table is checkpointed eagerly: band join
+    and verify are *independent sibling stages* that the DAG scheduler
+    submits concurrently, so a lazy checkpoint would be computed once
+    per sibling.  ``localCheckpoint`` keeps the blocks on the executors
+    and releases them with the plan — no driver collection.
 
     ``max_bucket`` is the scale knob for duplicate-heavy corpora: hot
     band buckets emit star pairs instead of all pairs (see
     band_self_join_pairs); ``None`` keeps exact all-pairs semantics.
+    ``max_candidates`` bounds the candidate set before the verify, as
+    in :func:`jaccard_verify`.
     """
-    sh = word_shingles(df, text_col, id_col, n).localCheckpoint(eager=True)
-    sigs = minhash_signatures_from_shingles(sh, k)
-    pairs = minhash_band_pairs(sigs, k, max_bucket=max_bucket)
-    return jaccard_verify(pairs, sh, threshold,
-                          max_candidates=max_candidates)
+    sets = _shingle_sets(df, text_col, id_col, n, k) \
+        .localCheckpoint(eager=True)
+    pairs = _bound_candidates(
+        minhash_band_pairs(sets, k, max_bucket=max_bucket), max_candidates)
+    return _verify_shingle_sets(pairs, sets, threshold)
 
 
 def ngram_jaccard_near_dups(df: DataFrame, text_col: str, id_col: str,
@@ -920,15 +989,14 @@ def near_dedup_incremental(new_df: DataFrame, text_col: str, id_col: str,
     updated_index)``; the index grows by the survivors' signatures
     only, so it stays O(distinct corpus docs) · k longs.
     """
-    sh = word_shingles(new_df, text_col, id_col, n) \
+    sets = _shingle_sets(new_df, text_col, id_col, n, k) \
         .localCheckpoint(eager=True)
-    sigs_new = minhash_signatures_from_shingles(sh, k) \
-        .localCheckpoint(eager=True)
+    sigs_new = sets.drop("shingles")
 
     # 1. within-batch: exact verify + components keep-first
     pairs = minhash_band_pairs(sigs_new, k, rows_per_band,
                                max_bucket=max_bucket)
-    verified = jaccard_verify(pairs, sh, threshold)
+    verified = _verify_shingle_sets(pairs, sets, threshold)
     from .graph import connected_components
     comp = connected_components(verified.select("id_a", "id_b"))
     drop_within = comp.where(F.col("id") != F.col("component")) \
