@@ -302,8 +302,16 @@ def test_n_parallel_zero_means_auto(spark):
         SparkSom(4, 4, 3, n_parallel=-1)
 
 
+def _chunk_argmin(som, chunk, w_flat, w_sq):
+    """Kernel argmin over ``chunk`` padded with copies of its last row
+    to whole ``BMU_PAD_ROWS``."""
+    pad = -len(chunk) % training.BMU_PAD_ROWS
+    full = np.concatenate([chunk, np.repeat(chunk[-1:], pad, axis=0)])
+    return som._distance(full, w_flat, w_sq)[:len(chunk)].argmin(axis=1)
+
+
 def _serial_fit(som, X, epochs):
-    """The single-threaded epoch loop: kernel + argmin per
+    """The single-threaded epoch loop: kernel + argmin per padded
     ``BMU_CHUNK_ROWS`` chunk with OpenBLAS at one thread, then per-cell
     sums accumulated block by block in order."""
     K, d = som._x * som._y, som._input_len
@@ -321,8 +329,7 @@ def _serial_fit(som, X, epochs):
             block = X[s: s + som.batch_rows]
             with training._blas_single_threaded():
                 idx = np.concatenate([
-                    som._distance(block[a: a + step], w_flat,
-                                  w_sq).argmin(axis=1)
+                    _chunk_argmin(som, block[a: a + step], w_flat, w_sq)
                     for a in range(0, len(block), step)])
             cc, SS = training.bmu_cell_sums(block, idx, K)
             c += cc
@@ -388,6 +395,62 @@ def test_bmu_indices_on_near_ties_same_on_any_thread_count(monkeypatch,
         got.append(training.bmu_indices(kernel, X, W, w_sq))
     for idx in got[1:]:
         np.testing.assert_array_equal(idx, got[0])
+
+
+@needs_openblas
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_executor_partial_equals_driver_sums(seed):
+    """The executor epoch closure, run in-process on Arrow batches with
+    every OpenBLAS at 4 threads (a worker started with
+    ``OMP_NUM_THREADS=4``), gives the (c, S) that ``epoch_sums`` gives
+    over the same rows in driver blocks.  Batches with odd row counts
+    and tails under 64 rows put rows into a GEMM's edge kernel, which a
+    whole-batch or unpadded GEMM would compute with other bits.  The
+    rows sit on a 2**-12 grid, so their float64 sums are exact in any
+    grouping, and the codebook rows come in pairs one float32 ulp apart,
+    so every BMU hangs on the last bit of its activations."""
+    import pyarrow as pa
+
+    rng = np.random.RandomState(seed)
+    X = (rng.randint(0, 1 << 12, (4351, 8)) / (1 << 12)).astype(np.float32)
+    W = rng.rand(12, 8).astype(np.float32)
+    W = np.vstack([W, W + np.float32(6e-8) * rng.choice([-1, 1], W.shape)
+                   ]).astype(np.float32)
+    kernel = resolve_distance("euclidean")
+    w_sq = codebook_sq_norms(W)
+    (x, y, d), K = (4, 6, X.shape[1]), len(W)
+    batches, start = [], 0
+    for rows in (2611, 1533, 37, 59, 43, 61, 7):
+        part = X[start: start + rows]
+        start += rows
+        offsets = pa.array(np.arange(0, (rows + 1) * d, d, dtype=np.int32))
+        batches.append(pa.RecordBatch.from_arrays(
+            [pa.ListArray.from_arrays(offsets, pa.array(part.ravel()))],
+            ["features"]))
+    assert start == len(X)
+
+    class Broadcast:
+        value = (W, w_sq)
+
+    fn = training._partial_update_factory(Broadcast(), kernel, (x, y, d),
+                                          np.float32, 1)
+    libs = training._openblas_threads()
+    before = [get() for get, _ in libs]
+    try:
+        for _, set_ in libs:
+            set_(4)
+        (partial,) = list(fn(iter(batches)))
+    finally:
+        for (_, set_), n in zip(libs, before):
+            set_(n)
+    S = np.frombuffer(partial.column("num")[0].as_py(),
+                      np.float64).reshape(K, d)
+    c = np.frombuffer(partial.column("den")[0].as_py(), np.float64)
+    want_c, want_S = training.epoch_sums(
+        kernel, (X[s: s + 1000] for s in range(0, len(X), 1000)),
+        W, w_sq, K, d)
+    np.testing.assert_array_equal(c, want_c)
+    np.testing.assert_array_equal(S, want_S)
 
 
 def test_one_core_runs_inline_with_same_weights(monkeypatch):

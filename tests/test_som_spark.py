@@ -1,6 +1,8 @@
-"""Distributed path vs local path — the Spark plan must reproduce the
-NumPy engine's results (partial sums are commutative, SURVEY.md §7), and
-the scoring stage must match driver-side winners exactly."""
+"""Distributed path vs local path — both run one epoch loop over one
+BMU search, so the Spark plan reproduces the NumPy engine's weights bit
+for bit, and the scoring stage matches driver-side winners exactly."""
+
+import warnings
 
 import numpy as np
 import pytest
@@ -33,21 +35,19 @@ def test_spark_train_matches_local(spark, rand_data):
     som_l = SparkSom(5, 4, 6, random_seed=7, dtype=np.float64)
     som_s.train(df, 4)
     som_l.train(rand_data, 4)
-    np.testing.assert_allclose(som_s.get_weights(), som_l.get_weights(),
-                               atol=1e-9)
+    np.testing.assert_array_equal(som_s.get_weights(), som_l.get_weights())
 
 
 def test_spark_train_float32_close_to_local(spark, rand_data):
-    """float32 partial sums depend on partitioning (same property as the
-    reference across dask chunkings — SURVEY.md §7 risk register), so
-    single-epoch comparison with a float32-association tolerance."""
+    """float32 features, float64 partial sums: the per-partition
+    partials of float32 rows add up to the driver loop's sums exactly,
+    so even the float32 codebook is the local one bit for bit."""
     df = make_feature_df(spark, rand_data)
     som_s = SparkSom(5, 4, 6, random_seed=7, fuse_local_bytes=0)
     som_l = SparkSom(5, 4, 6, random_seed=7)
     som_s.train(df, 1)
     som_l.train(rand_data, 1)
-    np.testing.assert_allclose(som_s.get_weights(), som_l.get_weights(),
-                               atol=1e-4)
+    np.testing.assert_array_equal(som_s.get_weights(), som_l.get_weights())
 
 
 def test_two_level_aggregation_path(spark, rand_data):
@@ -60,8 +60,7 @@ def test_two_level_aggregation_path(spark, rand_data):
                      fuse_local_bytes=0)
     som_a.train(df, 2)
     som_b.train(df, 2)
-    np.testing.assert_allclose(som_a.get_weights(), som_b.get_weights(),
-                               atol=1e-12)
+    np.testing.assert_array_equal(som_a.get_weights(), som_b.get_weights())
 
 
 def test_transform_matches_local_winners(spark, rand_data):
@@ -82,8 +81,8 @@ def test_transform_quantization_and_qe(spark, rand_data):
     rows = som.transform(df, ("quantized", "qe")).orderBy("id").collect()
     q_local = som.quantization(rand_data)
     for r in rows:
-        np.testing.assert_allclose(r["quantized"], q_local[r["id"]],
-                                   rtol=1e-6)
+        np.testing.assert_array_equal(
+            r["quantized"], q_local[r["id"]].astype(np.float32))
     qe_spark = som.quantization_error(df)
     qe_local = som.quantization_error(rand_data)
     assert qe_spark == pytest.approx(qe_local, rel=1e-5)
@@ -226,8 +225,7 @@ def test_epoch_fusion_matches_distributed(spark, rand_data, capsys):
     info = fused.training_info_
     assert info["path"] == "fused"
     assert dist.training_info_["path"] == "distributed"
-    np.testing.assert_allclose(fused.get_weights(), dist.get_weights(),
-                               atol=1e-9)
+    np.testing.assert_array_equal(fused.get_weights(), dist.get_weights())
     # the fused path keeps the same per-epoch record as the distributed one
     assert len(info["epochs"]) == len(dist.training_info_["epochs"]) == 4
     for epoch in info["epochs"]:
@@ -297,8 +295,21 @@ def test_work_cap_sends_fit_distributed(spark, rand_data, monkeypatch):
     assert set(epoch) == {"broadcast_s", "job_s", "merge_s"}
     som_l = SparkSom(5, 4, 6, random_seed=7)
     som_l.train(rand_data, 1)
-    np.testing.assert_allclose(som_s.get_weights(), som_l.get_weights(),
-                               atol=1e-4)
+    np.testing.assert_array_equal(som_s.get_weights(), som_l.get_weights())
+
+
+def test_empty_input_trains_without_warnings(spark):
+    """No rows leave every count at 0: both paths keep the codebook
+    and divide nowhere (no 0/0 ``RuntimeWarning``)."""
+    empty = spark.createDataFrame([], "features array<float>")
+    for fuse, path in ((64 << 20, "fused"), (0, "distributed")):
+        som = SparkSom(3, 3, 4, random_seed=1, fuse_local_bytes=fuse)
+        w0 = som.get_weights().astype(som.dtype)
+        with warnings.catch_warnings():
+            warnings.simplefilter("error")
+            som.train(empty, 2)
+        assert som.training_info_["path"] == path
+        np.testing.assert_array_equal(som.get_weights(), w0)
 
 
 def test_choose_path_weighs_kernel_cost():

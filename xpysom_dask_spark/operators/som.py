@@ -8,8 +8,10 @@ xpysom.py:72) so a reference user can switch with minimal edits:
   ``array<float>`` features column) — the distributed path, replacing the
   reference's ``use_dask=True`` — or a local ndarray/list-of-lists — the
   reference's host path (ingestion dispatch, xpysom.py:484-510).
-* training is the MLlib-style loop in ``plans.training`` (broadcast
-  codebook → Arrow partials → tree merge), scoring/metrics ride
+* training is one epoch loop (``SparkSom._epochs``) over per-cell sums
+  from the driver or from the MLlib-style job in ``plans.training``
+  (broadcast codebook → Arrow partials → tree merge), with the same
+  weights either way; scoring/metrics ride
   ``plans.scoring.attach`` plus plain declarative aggregates that Catalyst
   plans (``groupBy().count()``, ``collect_list``, ``avg`` — SURVEY.md §2.5
   X16, X21-X23).
@@ -74,7 +76,8 @@ class SparkSom:
         rows on a 35×35 grid.  This
         byte cap only bounds what is collected to the driver
         (``toArrow`` of 64 MiB takes ~0.4 s).  Large grids and large
-        inputs stay on the distributed plan.  After a DataFrame fit,
+        inputs stay on the distributed plan.  Both paths give the same
+        weights; the choice moves only the cost.  After a DataFrame fit,
         ``training_info_`` records the path taken and why, and on the
         fused path the BMU thread count, whether OpenBLAS was pinned to
         one thread, and per-epoch ``bmu_s`` / ``merge_s``.
@@ -219,24 +222,17 @@ class SparkSom:
         return w.reshape(-1, self._input_len)
 
     def _bmu_flat(self, X, use_euclidean=False):
-        """Chunked flat BMU indices for a local matrix.
-
-        The transient (n, x·y) activation is bounded to
-        ``(batch_rows, x·y)`` blocks — the reference's ``n_parallel``
-        chunking (xpysom.py:389-398, 638, 665); materializing it whole
-        for a large local ndarray is a driver OOM.
+        """Flat BMU indices for a local matrix, from one
+        ``plans.training.bmu_indices`` call: its chunks bound the (n, x·y)
+        activation like the reference's ``n_parallel`` (xpysom.py:389-398,
+        638, 665), where a whole one for a large ndarray is a driver OOM.
         """
         from ..plans.training import bmu_indices
         w_flat = self._w_flat()
-        kernel = euclidean if use_euclidean else self._distance
-        w_sq = (codebook_sq_norms(w_flat)
-                if not use_euclidean and self._distance.can_cache else None)
-        out = np.empty(len(X), np.int64)
-        for s in range(0, len(X), self.batch_rows):
-            chunk = X[s: s + self.batch_rows]
-            bmu_indices(kernel, chunk, w_flat, w_sq,
-                        out=out[s: s + len(chunk)])
-        return out
+        if use_euclidean:
+            return bmu_indices(euclidean, X, w_flat, None)
+        w_sq = codebook_sq_norms(w_flat) if self._distance.can_cache else None
+        return bmu_indices(self._distance, X, w_flat, w_sq)
 
     # ------------------------------------------------------------------ #
     # activation / BMU (X6, X7)
@@ -329,64 +325,75 @@ class SparkSom:
             den += Gb.T @ c[b:e]
         return num, den
 
-    def _train_local(self, data, num_epochs, iter_beg, iter_end,
-                     verbose=False, info=None):
-        """The driver-side epoch loop (ndarray fits and the fused
-        DataFrame path).  Per ``batch_rows`` block: BMU search split
-        over the driver cores (``plans.training.bmu_indices``), then
-        per-cell sums accumulated block by block in order.  ``info``
-        (the fused path's ``training_info_``) receives the thread count,
-        whether OpenBLAS was pinned and per-epoch ``bmu_s`` /
-        ``merge_s``."""
-        from ..plans.training import (ProgressPrinter, blas_pinned,
-                                      bmu_cell_sums, bmu_indices,
-                                      bmu_threads)
-        X_all = self._as_matrix(data, dtype=self.dtype)
-        n = len(X_all)
-        shape = self._weights.shape
-        K = self._x * self._y
+    def _update(self, W, S, c, sig, eta):
+        """``W ← num/den`` where ``den ≠ 0`` (else unchanged) for
+        ``(num, den) = η·Gᵀ·(S, c)`` (``_apply_influence``)."""
+        num, den = self._apply_influence(S, c, sig, eta)
+        den3 = den.reshape(self._x, self._y)[:, :, None]
+        out = W.astype(np.float64)
+        np.divide(num.reshape(W.shape), den3, out=out, where=den3 != 0)
+        return out.astype(self.dtype, copy=False)
+
+    def _epochs(self, sums, num_epochs, iter_beg, iter_end, verbose=False,
+                info=None):
+        """The epoch loop of every training path: decay η and σ, codebook
+        norms, the path's ``sums(w_flat, w_sq) → (c, S, laps)``, then
+        ``_update``.  ``laps`` are ``(stage, perf_counter())`` marks; the
+        record in ``info["epochs"]`` has each stage's seconds, then
+        ``merge_s``'s."""
+        from ..plans.training import ProgressPrinter
         W = self._weights.astype(self.dtype)
-        idx_buf = np.empty(min(n, self.batch_rows), np.int64)
-        threads = bmu_threads(len(idx_buf))
-        pinned = blas_pinned()
         epochs = []
         if info is not None:
-            info.update(threads=threads, blas_pinned=pinned, epochs=epochs)
-        progress = None
-        if verbose:
-            print("driver loop: %d BMU thread(s), BLAS %s"
-                  % (threads, "pinned to 1" if pinned else "as configured"))
-            progress = ProgressPrinter(iter_end - iter_beg)
+            info["epochs"] = epochs
+        progress = ProgressPrinter(iter_end - iter_beg) if verbose else None
         for t in range(iter_beg, iter_end):
-            t0 = time.perf_counter()
-            w_flat = W.reshape(-1, self._input_len)
-            w_sq = (codebook_sq_norms(w_flat)
-                    if self._distance.can_cache else None)
+            start = time.perf_counter()
             eta = self._decay(self._learning_rate, self._learning_rateN,
                               t, num_epochs)
             sig = self._decay(self._sigma, self._sigmaN, t, num_epochs)
-            c = np.zeros(K, dtype=np.float64)
-            S = np.zeros((K, self._input_len), dtype=np.float64)
-            for s in range(0, n, self.batch_rows):
-                X = X_all[s: s + self.batch_rows]
-                idx = bmu_indices(self._distance, X, w_flat, w_sq,
-                                  out=idx_buf[:len(X)])
-                cc, SS = bmu_cell_sums(X, idx, K)
-                c += cc
-                S += SS
-            t1 = time.perf_counter()
-            num, den = self._apply_influence(S, c, sig, eta)
-            den3 = den.reshape(self._x, self._y)[:, :, None]
-            W = np.where(den3 != 0, num.reshape(shape) / den3,
-                         W).astype(self.dtype)
-            t2 = time.perf_counter()
-            epochs.append({"bmu_s": t1 - t0, "merge_s": t2 - t1})
+            w_flat = W.reshape(-1, self._input_len)
+            w_sq = (codebook_sq_norms(w_flat)
+                    if self._distance.can_cache else None)
+            c, S, laps = sums(w_flat, w_sq)
+            W = self._update(W, S, c, sig, eta)
+            record = {}
+            for stage, mark in laps + [("merge", time.perf_counter())]:
+                record[stage + "_s"], start = mark - start, mark
+            epochs.append(record)
             if progress is not None:
-                progress.step(t - iter_beg,
-                              "eta=%.4f sigma=%.4f bmu %.3fs merge %.3fs"
-                              % (eta, sig, t1 - t0, t2 - t1))
+                progress.step(t - iter_beg, "eta=%.4f sigma=%.4f " % (
+                    eta, sig) + " ".join("%s %.3fs" % (k[:-2], v)
+                                         for k, v in record.items()))
         self._weights = W
         return self
+
+    def _train_local(self, data, num_epochs, iter_beg, iter_end,
+                     verbose=False, info=None):
+        """Driver-side epochs (ndarray fits, the fused DataFrame path):
+        ``epoch_sums`` of ``batch_rows`` slices, each BMU search split
+        over the driver cores.  ``info`` (the fused ``training_info_``)
+        gets the thread count, whether OpenBLAS was pinned and per-epoch
+        ``bmu_s`` / ``merge_s``."""
+        from ..plans.training import blas_pinned, bmu_threads, epoch_sums
+        X = self._as_matrix(data, dtype=self.dtype)
+        step = self.batch_rows
+        threads, pinned = bmu_threads(min(len(X), step)), blas_pinned()
+        if info is not None:
+            info.update(threads=threads, blas_pinned=pinned)
+        if verbose:
+            print("driver loop: %d BMU thread(s), BLAS %s"
+                  % (threads, "pinned to 1" if pinned else "as configured"))
+
+        def sums(w_flat, w_sq):
+            c, S = epoch_sums(self._distance,
+                              (X[s: s + step] for s in range(0, len(X), step)),
+                              w_flat, w_sq, self._x * self._y,
+                              self._input_len)
+            return c, S, [("bmu", time.perf_counter())]
+
+        return self._epochs(sums, num_epochs, iter_beg, iter_end,
+                            verbose=verbose, info=info)
 
     def train_batch(self, data, num_iteration, verbose=False):
         """MiniSom-compat alias (xpysom.py:597-599)."""

@@ -29,6 +29,7 @@ import pyarrow as pa
 
 from ..functions.distances import codebook_sq_norms, euclidean
 from .exchange import feature_matrix, matrix_to_list_array, ship_package
+from .training import bmu_indices
 
 #: output column name → (Spark DDL type, Arrow type)
 OUTPUT_TYPES = {
@@ -42,7 +43,6 @@ OUTPUT_TYPES = {
 }
 
 _NEEDS_ACT = {"bmu_x", "bmu_y", "cluster_id"}
-_NEEDS_EUC = {"quantized", "qe", "te_err", "distances"}
 
 
 def attach(som, df, outputs=("bmu_x", "bmu_y", "cluster_id"), keep=None,
@@ -86,7 +86,8 @@ def attach(som, df, outputs=("bmu_x", "bmu_y", "cluster_id"), keep=None,
     feat_name = feat_col
     outputs = tuple(outputs)
     need_act = any(o in _NEEDS_ACT for o in outputs)
-    need_euc = any(o in _NEEDS_EUC for o in outputs)
+    need_quant = "quantized" in outputs or "qe" in outputs
+    need_dist = "distances" in outputs or "te_err" in outputs
 
     from pyspark.sql.types import StructType, _parse_datatype_string
 
@@ -105,17 +106,12 @@ def attach(som, df, outputs=("bmu_x", "bmu_y", "cluster_id"), keep=None,
             n = len(X)
             cols = {}
             if need_act:
-                idx = (kernel(X, wf, wsq).argmin(axis=1)
-                       if n else np.empty(0, np.int64))
+                idx = bmu_indices(kernel, X, wf, wsq)
                 cols["bmu_x"] = pa.array(ux[idx].astype(np.int32), pa.int32())
                 cols["bmu_y"] = pa.array(uy[idx].astype(np.int32), pa.int32())
-                cols["cluster_id"] = pa.array(idx.astype(np.int64), pa.int64())
-            if need_euc:
-                dist = euclidean(X, wf) if n else np.empty((0, x * y))
-                if "distances" in outputs:
-                    cols["distances"] = matrix_to_list_array(
-                        dist.astype(np.float32))
-                eidx = dist.argmin(axis=1) if n else np.empty(0, np.int64)
+                cols["cluster_id"] = pa.array(idx, pa.int64())
+            if need_quant:
+                eidx = bmu_indices(euclidean, X, wf, None)
                 if "quantized" in outputs:
                     cols["quantized"] = matrix_to_list_array(
                         wf[eidx].astype(np.float32))
@@ -123,6 +119,11 @@ def attach(som, df, outputs=("bmu_x", "bmu_y", "cluster_id"), keep=None,
                     cols["qe"] = pa.array(
                         np.linalg.norm(X - wf[eidx], axis=1).astype(np.float64),
                         pa.float64())
+            if need_dist:
+                dist = euclidean(X, wf) if n else np.empty((0, x * y))
+                if "distances" in outputs:
+                    cols["distances"] = matrix_to_list_array(
+                        dist.astype(np.float32))
                 if "te_err" in outputs:
                     cols["te_err"] = pa.array(
                         _topographic_indicator(dist, ux, uy, xx, yy, topology),

@@ -45,14 +45,17 @@ not remove that floor: each ``allGather`` took 1.0 s on the same box (1,
 2 and 5 rounds took 1.0, 2.0 and 5.0 s in-task), so it is no faster than
 a job per epoch.
 
-The choice between the two paths (``choose_path``) is a deterministic
-function of the input: the two paths group float sums differently, so
-the same input must always take the same path, and nothing is timed at
-run time.  It fuses while the per-epoch kernel work n·K·d × the kernel's
-``relative_cost`` is at most ``FUSE_WORK_CAP`` and the features fit
-``SparkSom.fuse_local_bytes``.  n comes from the input's cache statistics
-when the caller materialized a cache, and from a ``count()`` (which also
-fills the plan's own cache) otherwise.
+Both paths run ``SparkSom._epochs`` over ``epoch_sums`` of blocks
+(driver ``batch_rows`` slices, executor Arrow batches), whose
+``bmu_indices`` gives a row one BMU in any block, thread or worker BLAS
+setting: forced-distributed fits equal fused ones bit for bit (measured
+with executor BLAS at 1 and 4 threads).  So ``choose_path`` moves only
+the cost; it stays a function of the input, nothing timed at run time,
+so one input always pays the same.  It fuses while the per-epoch kernel
+work n·K·d × the kernel's ``relative_cost`` is at most ``FUSE_WORK_CAP``
+and the features fit ``SparkSom.fuse_local_bytes``.  n comes from the
+input's cache statistics when the caller materialized a cache, and from
+a ``count()`` (which also fills the plan's own cache) otherwise.
 """
 
 from __future__ import annotations
@@ -67,7 +70,6 @@ from functools import lru_cache
 
 import numpy as np
 
-from ..functions.distances import codebook_sq_norms
 from .exchange import feature_matrix, ship_package
 
 _PARTIAL_SCHEMA = "bucket int, num binary, den binary"
@@ -124,18 +126,32 @@ def bmu_cell_sums(X, idx, n_cells):
     return c, S
 
 
-#: Rows per kernel call of the driver-side BMU search.  Each chunk's
-#: GEMM runs with OpenBLAS at one thread, so a chunk's activations are
-#: the same bits whichever thread computes it and however many share the
-#: chunks: the weights do not depend on the driver's core count.  (A
-#: GEMM's bits depend on its row count and on OpenBLAS's thread count —
-#: no split of one multi-threaded whole-block GEMM reproduces it.)  4096
-#: rows × K activations stay in cache at SOM sizes.
+#: Rows per kernel call of the BMU search.  Each chunk's GEMM runs with
+#: OpenBLAS at one thread, so a chunk's activations are the same bits
+#: whichever thread computes it and however many share the chunks: the
+#: weights do not depend on the core count.  (A GEMM's bits depend on
+#: OpenBLAS's thread count — no split of one multi-threaded whole-block
+#: GEMM reproduces it.)  4096 rows × K activations stay in cache at SOM
+#: sizes.
 BMU_CHUNK_ROWS = 4096
+
+#: Chunks are padded with copies of their last row to a multiple of this:
+#: a GEMM's last (rows mod unroll) output rows take an edge kernel with
+#: other float grouping (OpenBLAS, AVX-512: unroll 4 float32, 2 float64),
+#: which would tie a row's BMU to where its block ends.
+BMU_PAD_ROWS = 64
 
 
 def driver_threads():
-    """Cores the driver process may run on."""
+    """Cores the BMU search may use: inside a Spark task the task's
+    ``cpus()``, elsewhere the cores this process may run on."""
+    try:
+        from pyspark import TaskContext
+        ctx = TaskContext.get()
+    except ImportError:  # Spark is optional for local fits
+        ctx = None
+    if ctx is not None:
+        return ctx.cpus()
     if hasattr(os, "sched_getaffinity"):
         return len(os.sched_getaffinity(0))
     return os.cpu_count() or 1
@@ -198,24 +214,26 @@ def blas_pinned():
 
 def bmu_threads(rows):
     """Threads ``bmu_indices`` runs a ``rows``-row block's chunks on:
-    one per driver core, or 1 (inline, no pool) on one core, for a
-    single chunk, or without an OpenBLAS to pin (whose GEMMs, called
-    from several threads at once, would queue on its own thread team)."""
+    one per ``driver_threads`` core, or 1 (inline, no pool) on one core,
+    for a single chunk, or without an OpenBLAS to pin (whose GEMMs,
+    called from several threads at once, would queue on its own thread
+    team)."""
     p = min(driver_threads(), -(-rows // BMU_CHUNK_ROWS))
     return p if p > 1 and blas_pinned() else 1
 
 
 def bmu_indices(kernel, X, w_flat, w_sq, out=None):
     """BMU index ``argmin_k kernel(X, w_flat, w_sq)[i, k]`` per row of
-    one block, into ``out`` (allocated when None).
+    one block, into ``out`` (allocated when None); the BMU search of
+    training, scoring and local prediction alike.
 
-    The kernel runs per ``BMU_CHUNK_ROWS`` chunk with OpenBLAS pinned to
-    one thread, the chunks shared by ``bmu_threads`` pool threads (the
-    BLAS team would queue GEMMs issued from several threads, and a
-    pinned GEMM is the same bits on any thread).  The weights therefore
-    do not depend on the core count; callers keep summing per block
-    (``bmu_cell_sums``), in order.  Transient activations stay a few
-    ``chunk × K`` arrays per thread.
+    The kernel runs per padded ``BMU_CHUNK_ROWS`` chunk with OpenBLAS
+    pinned to one thread, the chunks shared by ``bmu_threads`` pool
+    threads (the BLAS team would queue GEMMs issued from several
+    threads, and a pinned GEMM is the same bits on any thread).  A
+    row's index depends neither on the core count, nor on the worker's
+    BLAS threads, nor on the block it arrives in.  Transient
+    activations stay a few ``chunk × K`` arrays per thread.
     """
     n = len(X)
     if out is None:
@@ -224,7 +242,10 @@ def bmu_indices(kernel, X, w_flat, w_sq, out=None):
     chunks = list(zip(bounds, bounds[1:]))
 
     def run(a, b):
-        np.argmin(kernel(X[a:b], w_flat, w_sq), axis=1, out=out[a:b])
+        rows, pad = X[a:b], -(b - a) % BMU_PAD_ROWS
+        if pad:
+            rows = np.pad(rows, ((0, pad), (0, 0)), mode="edge")
+        np.argmin(kernel(rows, w_flat, w_sq)[:b - a], axis=1, out=out[a:b])
 
     p = bmu_threads(n)
     with _blas_single_threaded():
@@ -244,38 +265,39 @@ def bmu_indices(kernel, X, w_flat, w_sq, out=None):
     return out
 
 
-def _partial_update_factory(bc, kernel, shape, dtype, fanout):
-    """Build the per-partition update for ``mapInArrow``.
+def epoch_sums(kernel, blocks, w_flat, w_sq, n_cells, d):
+    """One epoch's per-cell ``(c, S)`` over ``blocks`` of ``(rows, d)``
+    matrices (driver ``batch_rows`` slices or a task's Arrow batches):
+    ``bmu_cell_sums`` of each block's ``bmu_indices``, added in order."""
+    c = np.zeros(n_cells, dtype=np.float64)
+    S = np.zeros((n_cells, d), dtype=np.float64)
+    for X in blocks:
+        cc, SS = bmu_cell_sums(X, bmu_indices(kernel, X, w_flat, w_sq),
+                               n_cells)
+        c += cc
+        S += SS
+    return c, S
 
-    The closure carries only the tiny model plumbing (kernel, shape);
-    the per-epoch codebook and its cached norms travel via the
-    broadcast ``bc``.  Inside, per Arrow batch (= mini-batch,
-    SURVEY.md §4 O7): BMU argmin → per-cell count/sum scatters.  The
-    partial is the G-FREE per-cell statistics ``(c, S)`` in float64 —
-    by linearity ``Gᵀ·ΣS_p = Σ(Gᵀ·S_p)``, so the influence matrix
-    applies once on the driver after the merge (math parity with
-    xpysom.py:420-443 via the factorization ``Σ_i g(bmu_i)⊗x_i =
-    Gᵀ·S``); workers never see the neighborhood function, and the
-    per-sample (n, x·y) influence tensor never materializes anywhere.
+
+def _partial_update_factory(bc, kernel, shape, dtype, fanout):
+    """The per-partition update for ``mapInArrow``: ``epoch_sums`` of
+    the partition's Arrow batches (SURVEY.md §4 O7) against the
+    codebook and norms broadcast in ``bc``.  The partial is the G-FREE
+    per-cell ``(c, S)`` in float64 — by linearity ``Gᵀ·ΣS_p =
+    Σ(Gᵀ·S_p)``, so the influence matrix applies once on the driver
+    after the merge (parity with xpysom.py:420-443 via ``Σ_i
+    g(bmu_i)⊗x_i = Gᵀ·S``); workers never see the neighborhood.
     """
     x, y, d = shape
-    K = x * y
 
     def fn(batches):
         import pyarrow as pa
         from pyspark import TaskContext
 
         w_flat, w_sq = bc.value
-        c = np.zeros(K, dtype=np.float64)
-        S = np.zeros((K, d), dtype=np.float64)
-        for batch in batches:
-            X = feature_matrix(batch.column(0), d, dtype)
-            if len(X) == 0:
-                continue
-            idx = kernel(X, w_flat, w_sq).argmin(axis=1)
-            cc, SS = bmu_cell_sums(X, idx, K)
-            c += cc
-            S += SS
+        c, S = epoch_sums(
+            kernel, (feature_matrix(b.column(0), d, dtype) for b in batches),
+            w_flat, w_sq, x * y, d)
         ctx = TaskContext.get()
         pid = ctx.partitionId() if ctx is not None else 0
         yield pa.RecordBatch.from_pydict(
@@ -289,32 +311,39 @@ def _partial_update_factory(bc, kernel, shape, dtype, fanout):
     return fn
 
 
-def _sum_partial_rows(rows, shape):
-    """Merge (S, c) float64 partial blobs → (K, d) sums + (K,) counts."""
-    x, y, d = shape
-    S = np.zeros((x * y, d), dtype=np.float64)
-    c = np.zeros(x * y, dtype=np.float64)
-    for r in rows:
-        S += np.frombuffer(r["num"], dtype=np.float64).reshape(x * y, d)
-        c += np.frombuffer(r["den"], dtype=np.float64)
-    return S, c
+def _sum_partials(blobs, n_cells, d):
+    """Merge ``(num, den)`` = (S, c) float64 partial blobs → ``(c, S)``,
+    on the driver and in each bucket of the tree merge."""
+    c = np.zeros(n_cells, dtype=np.float64)
+    S = np.zeros((n_cells, d), dtype=np.float64)
+    for num, den in blobs:
+        S += np.frombuffer(num, dtype=np.float64).reshape(n_cells, d)
+        c += np.frombuffer(den, dtype=np.float64)
+    return c, S
 
 
-def _make_bucket_reducer(shape):
-    x, y, d = shape
+def _epoch_partials(som, feats, bc, two_level):
+    """One distributed epoch's Spark job: a ``(c, S)`` partial per
+    partition, first merged into ``som.agg_fanout`` bucket rows when
+    ``two_level``; returns the collected rows."""
+    ship_package(feats.sparkSession)
+    x, y, d = shape = som._weights.shape
+    fanout = som.agg_fanout if two_level else 1
 
     def reduce_bucket(pdf):
         import pandas as pd
 
-        S = np.zeros((x * y, d), dtype=np.float64)
-        c = np.zeros(x * y, dtype=np.float64)
-        for blob in pdf["num"]:
-            S += np.frombuffer(blob, dtype=np.float64).reshape(x * y, d)
-        for blob in pdf["den"]:
-            c += np.frombuffer(blob, dtype=np.float64)
+        c, S = _sum_partials(zip(pdf["num"], pdf["den"]), x * y, d)
         return pd.DataFrame({"num": [S.tobytes()], "den": [c.tobytes()]})
 
-    return reduce_bucket
+    partials = feats.mapInArrow(
+        _partial_update_factory(bc, som._distance, shape, som.dtype,
+                                fanout),
+        _PARTIAL_SCHEMA)
+    if two_level:
+        partials = partials.groupBy("bucket").applyInPandas(
+            reduce_bucket, "num binary, den binary")
+    return partials.collect()
 
 
 def choose_path(rows, cells, dim, itemsize, relative_cost, byte_cap):
@@ -371,9 +400,7 @@ def run_training(som, df, num_epochs, iter_beg=0, iter_end=None, verbose=False):
 
     if iter_end is None:
         iter_end = num_epochs
-    spark = df.sparkSession
-    ship_package(spark)
-    sc = spark.sparkContext
+    sc = df.sparkSession.sparkContext
 
     # a select over a cached input reads that cache with column pruning,
     # so only an uncached input gets a cache of its own (so that epochs
@@ -403,57 +430,20 @@ def run_training(som, df, num_epochs, iter_beg=0, iter_end=None, verbose=False):
         return som._train_local(X, num_epochs, iter_beg, iter_end,
                                 verbose=verbose, info=info)
 
-    n_parts = feats.rdd.getNumPartitions()
-    two_level = n_parts > som.collect_threshold
-    shape = (x, y, d)
-    W = som._weights.astype(som.dtype)
-    kernel = som._distance
-    info["epochs"] = epochs = []
+    two_level = feats.rdd.getNumPartitions() > som.collect_threshold
 
-    progress = ProgressPrinter(iter_end - iter_beg) if verbose else None
+    def sums(w_flat, w_sq):
+        bc = sc.broadcast((w_flat, w_sq))
+        t1 = time.perf_counter()
+        rows = _epoch_partials(som, feats, bc, two_level)
+        t2 = time.perf_counter()
+        c, S = _sum_partials(((r["num"], r["den"]) for r in rows), x * y, d)
+        bc.unpersist(blocking=False)
+        return c, S, [("broadcast", t1), ("job", t2)]
+
     try:
-        for t in range(iter_beg, iter_end):
-            t0 = time.perf_counter()
-            eta = float(som._decay(som._learning_rate, som._learning_rateN,
-                                   t, num_epochs))
-            sig = float(som._decay(som._sigma, som._sigmaN, t, num_epochs))
-            w_flat = W.reshape(-1, d)
-            w_sq = codebook_sq_norms(w_flat) if kernel.can_cache else None
-            bc = sc.broadcast((w_flat, w_sq))
-            t1 = time.perf_counter()
-
-            fn = _partial_update_factory(
-                bc, kernel, shape, som.dtype,
-                som.agg_fanout if two_level else 1,
-            )
-            partials = feats.mapInArrow(fn, _PARTIAL_SCHEMA)
-            if two_level:
-                partials = partials.groupBy("bucket").applyInPandas(
-                    _make_bucket_reducer(shape),
-                    "num binary, den binary",
-                )
-            collected = partials.collect()
-            t2 = time.perf_counter()
-            S, c = _sum_partial_rows(collected, shape)
-            bc.unpersist(blocking=False)
-
-            # influence applies driver-side, blockwise above the memory
-            # budget — no O(K²) broadcast, no per-partition (K,K) GEMM
-            num, den = som._apply_influence(S, c, sig, eta)
-            den3 = den.reshape(x, y)[:, :, None]
-            W = np.where(den3 != 0, num.reshape(shape) / den3,
-                         W).astype(som.dtype)
-            t3 = time.perf_counter()
-            epochs.append({"broadcast_s": t1 - t0, "job_s": t2 - t1,
-                           "merge_s": t3 - t2})
-            if progress is not None:
-                progress.step(t - iter_beg,
-                              "eta=%.4f sigma=%.4f broadcast %.3fs job "
-                              "%.3fs merge %.3fs"
-                              % (eta, sig, t1 - t0, t2 - t1, t3 - t2))
+        return som._epochs(sums, num_epochs, iter_beg, iter_end,
+                           verbose=verbose, info=info)
     finally:
         if own_cache:
             feats.unpersist()
-
-    som._weights = W
-    return som
