@@ -135,17 +135,19 @@ def test_qe_decreases_after_training():
     assert som.quantization_error(data) < q1
 
 
-def test_batch_size_invariance():
-    """Partial sums are commutative: mini-batch split must not change the
-    result beyond float32 association noise — the property that makes the
-    distributed path correct (SURVEY.md §7 risk register)."""
+def test_batch_size_invariance(monkeypatch):
+    """Partial sums are commutative: neither the chunk size nor the cut
+    of the input into blocks may change the result beyond float64
+    association noise — the property that makes the distributed path
+    correct (SURVEY.md §7 risk register)."""
     rng = np.random.RandomState(5)
     data = rng.rand(257, 3)
     w = None
-    for br in (16, 64, 257):
-        som = SparkSom(4, 4, 3, random_seed=9, batch_rows=br,
-                       dtype=np.float64)
-        som.train(data, 3)
+    for cells, cuts in ((64 * 16, (257,)), (128 * 16, (16, 100, 257)),
+                        (10**9, (64, 257))):
+        monkeypatch.setattr(training, "CHUNK_CELLS", cells)
+        som = SparkSom(4, 4, 3, random_seed=9, dtype=np.float64)
+        som._train_local(np.split(data, cuts[:-1]), 3, 0, 3)
         if w is None:
             w = som.get_weights()
         else:
@@ -235,35 +237,35 @@ def test_train_input_width_check():
         som.train(np.ones((10, 3)), 1)
 
 
-def test_chunked_activation_matches_whole():
-    """batch_rows chunking of the local winner/predict/quantization/
-    topographic paths (reference n_parallel parity, xpysom.py:389-398)
-    must match the unchunked computation.  (Training itself is compared
-    on shared weights: accumulation order across chunk sizes legitimately
-    differs in float, exactly as the reference's n_parallel does.)"""
+def test_chunked_activation_matches_whole(monkeypatch):
+    """Kernel chunking of the local activate/winner/predict/quantization/
+    distance/topographic paths (reference n_parallel parity,
+    xpysom.py:389-398) matches one whole-input chunk bit for bit: 257
+    rows in 64-row chunks, the last one a single padded row."""
     rng = np.random.RandomState(3)
     X = rng.rand(257, 6)
-    whole = SparkSom(6, 5, 6, random_seed=9, batch_rows=10**9)
-    whole.train(X, 2)
-    chunked = SparkSom(6, 5, 6, random_seed=9, batch_rows=17)
-    chunked._weights = whole._weights.copy()
-    np.testing.assert_array_equal(whole.predict(X), chunked.predict(X))
-    assert whole.winner(X) == chunked.winner(X)
-    np.testing.assert_array_equal(whole.quantization(X),
-                                  chunked.quantization(X))
-    np.testing.assert_array_equal(whole.distance_from_weights(X),
-                                  chunked.distance_from_weights(X))
-    assert (whole.topographic_error(X) == chunked.topographic_error(X))
-    assert (whole.quantization_error(X) == chunked.quantization_error(X))
-    np.testing.assert_array_equal(whole.activation_response(X),
-                                  chunked.activation_response(X))
+    som = SparkSom(6, 5, 6, random_seed=9)
+    som.train(X, 2)
+
+    def outputs():
+        return (som.activate(X), som.predict(X), som.winner(X),
+                som.quantization(X), som.distance_from_weights(X),
+                som.topographic_error(X), som.quantization_error(X),
+                som.activation_response(X))
+
+    monkeypatch.setattr(training, "CHUNK_CELLS", 10**9)
+    whole = outputs()
+    monkeypatch.setattr(training, "CHUNK_CELLS", 64 * 30)
+    for got, want in zip(outputs(), whole):
+        np.testing.assert_array_equal(got, want)
 
 
 def test_reference_backend_knobs_accepted(spark):
     """Reference constructor call sites run unchanged: xp/use_dask/
-    dask_chunks are accepted (warned, ignored — backend selection has
-    no meaning on Spark), n_parallel maps to batch_rows, and the model
-    is bit-identical to one built without the knobs."""
+    dask_chunks/n_parallel are accepted (warned, ignored — backend
+    selection has no meaning on Spark, and the kernel chunks are sized
+    by the grid), and the model is bit-identical to one built without
+    the knobs."""
     import warnings
 
     import numpy as np
@@ -274,32 +276,39 @@ def test_reference_backend_knobs_accepted(spark):
         warnings.simplefilter("always")
         som = SparkSom(4, 4, 3, random_seed=7, xp=np, use_dask=True,
                        dask_chunks=(128, 3), n_parallel=4096)
-    assert som.batch_rows == 4096
     msgs = " ".join(str(x.message) for x in w)
     assert "use_dask" in msgs and "dask_chunks" in msgs
+    assert "n_parallel" in msgs
     ref = SparkSom(4, 4, 3, random_seed=7)
     np.testing.assert_array_equal(som.get_weights(), ref.get_weights())
 
 
 def test_n_parallel_zero_means_auto(spark):
     """The reference's documented default n_parallel=0 means
-    'auto-infer' (xpysom.py:242-249) — it must keep the batch_rows
-    default, not set it to 0 (which would make every chunked method's
-    range() step zero).  Negative values get an actionable error."""
+    'auto-infer' (xpysom.py:242-249) — what the grid-sized kernel
+    chunks always do, so it is accepted without a warning.  Negative
+    values get an actionable error."""
+    import warnings
+
     import numpy as np
     import pytest
 
     from xpysom_dask_spark import SparkSom
 
-    auto = SparkSom(4, 4, 3, random_seed=7, n_parallel=0)
-    ref = SparkSom(4, 4, 3, random_seed=7)
-    assert auto.batch_rows == ref.batch_rows > 0
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        auto = SparkSom(4, 4, 3, random_seed=7, n_parallel=0)
     # the reference default call site trains unchanged
     X = np.random.RandomState(0).rand(50, 3).astype(np.float32)
     auto.train(X, 1)
     assert np.isfinite(auto.quantization_error(X))
     with pytest.raises(ValueError, match="n_parallel"):
         SparkSom(4, 4, 3, n_parallel=-1)
+
+
+def _chunk_rows(n_cells):
+    """Rows per kernel chunk: max(64, CHUNK_CELLS // K) in whole 64s."""
+    return max(64, training.CHUNK_CELLS // n_cells // 64 * 64)
 
 
 def _chunk_argmin(som, chunk, w_flat, w_sq):
@@ -311,13 +320,13 @@ def _chunk_argmin(som, chunk, w_flat, w_sq):
 
 
 def _serial_fit(som, X, epochs):
-    """The single-threaded epoch loop: kernel + argmin per padded
-    ``BMU_CHUNK_ROWS`` chunk with OpenBLAS at one thread, then per-cell
-    sums accumulated block by block in order."""
+    """The single-threaded epoch loop: per chunk of ``_chunk_rows(K)``
+    rows, kernel + argmin over the padded chunk with OpenBLAS at one
+    thread and the chunk's per-cell sums, added in chunk order."""
     K, d = som._x * som._y, som._input_len
     X = np.asarray(X, dtype=som.dtype)
     W = som._weights.astype(som.dtype)
-    step = training.BMU_CHUNK_ROWS
+    step = _chunk_rows(K)
     for t in range(epochs):
         w_flat = W.reshape(-1, d)
         w_sq = codebook_sq_norms(w_flat) if som._distance.can_cache else None
@@ -325,13 +334,11 @@ def _serial_fit(som, X, epochs):
         sig = som._decay(som._sigma, som._sigmaN, t, epochs)
         c = np.zeros(K)
         S = np.zeros((K, d))
-        for s in range(0, len(X), som.batch_rows):
-            block = X[s: s + som.batch_rows]
+        for a in range(0, len(X), step):
+            chunk = X[a: a + step]
             with training._blas_single_threaded():
-                idx = np.concatenate([
-                    _chunk_argmin(som, block[a: a + step], w_flat, w_sq)
-                    for a in range(0, len(block), step)])
-            cc, SS = training.bmu_cell_sums(block, idx, K)
+                idx = _chunk_argmin(som, chunk, w_flat, w_sq)
+            cc, SS = training.bmu_cell_sums(chunk, idx, K)
             c += cc
             S += SS
         num, den = som._apply_influence(S, c, sig, eta)
@@ -352,21 +359,20 @@ needs_openblas = pytest.mark.skipif(
 @pytest.mark.parametrize("distance", ["euclidean", "cosine", "manhattan"])
 def test_threaded_fit_bit_identical_to_serial(monkeypatch, distance,
                                               topology, n):
-    """Sharing the BMU chunks among driver threads changes no bit of the
-    weights: 1000 rows in 256-row blocks (the last one 232 rows) of
-    64-row chunks on four threads, and 3 rows, one chunk, inline."""
+    """Sharing the kernel chunks among driver threads changes no bit of
+    the weights: 1000 rows in 64-row chunks (the last one 40 rows) on
+    four threads, and 3 rows, one chunk."""
     monkeypatch.setattr(training, "driver_threads", lambda: 4)
-    monkeypatch.setattr(training, "BMU_CHUNK_ROWS", 64)
+    monkeypatch.setattr(training, "CHUNK_CELLS", 64 * 30)
     X = np.random.RandomState(11).rand(n, 5).astype(np.float32)
 
     def model():
-        return SparkSom(6, 5, 5, random_seed=4, batch_rows=256,
+        return SparkSom(6, 5, 5, random_seed=4,
                         topology=topology, activation_distance=distance)
 
     som = model()
-    som._train_local(X, 3, 0, 3, info=(info := {}))
-    assert (info["threads"], len(info["epochs"])) == (
-        (4, 3) if n > 64 else (1, 3))
+    som._train_local([X], 3, 0, 3, info=(info := {}))
+    assert (info["threads"], len(info["epochs"])) == (4, 3)
     np.testing.assert_array_equal(som.get_weights(),
                                   _serial_fit(model(), X, 3))
 
@@ -379,8 +385,9 @@ def test_bmu_indices_on_near_ties_same_on_any_thread_count(monkeypatch,
     """Codebook rows in pairs one float32 ulp apart: every row's argmin
     hangs on the last bit of its activations.  A GEMM's bits depend on
     its row count and on OpenBLAS's thread count, so the chunks are
-    fixed-size and pinned: 1, 2, 3 and 4 threads give the same cells."""
-    monkeypatch.setattr(training, "BMU_CHUNK_ROWS", 500)
+    sized by the grid and pinned: 1, 2, 3 and 4 threads give the same
+    cells."""
+    monkeypatch.setattr(training, "CHUNK_CELLS", 512 * 24)
     rng = np.random.RandomState(21)
     X = rng.rand(4000, 8).astype(np.float32)
     W = rng.rand(12, 8).astype(np.float32)
@@ -391,7 +398,7 @@ def test_bmu_indices_on_near_ties_same_on_any_thread_count(monkeypatch,
     got = []
     for threads in (1, 2, 3, 4):
         monkeypatch.setattr(training, "driver_threads", lambda: threads)
-        assert training.bmu_threads(len(X)) == threads
+        assert training.map_threads() == threads
         got.append(training.bmu_indices(kernel, X, W, w_sq))
     for idx in got[1:]:
         np.testing.assert_array_equal(idx, got[0])
@@ -455,13 +462,13 @@ def test_executor_partial_equals_driver_sums(seed):
 
 def test_one_core_runs_inline_with_same_weights(monkeypatch):
     X = np.random.RandomState(12).rand(700, 4).astype(np.float32)
-    monkeypatch.setattr(training, "BMU_CHUNK_ROWS", 100)
-    threaded = SparkSom(5, 5, 4, random_seed=2, batch_rows=300)
+    monkeypatch.setattr(training, "CHUNK_CELLS", 128 * 25)
+    threaded = SparkSom(5, 5, 4, random_seed=2)
     monkeypatch.setattr(training, "driver_threads", lambda: 4)
     threaded.train(X, 2)
     monkeypatch.setattr(training, "driver_threads", lambda: 1)
-    inline = SparkSom(5, 5, 4, random_seed=2, batch_rows=300)
-    inline._train_local(X, 2, 0, 2, info=(info := {}))
+    inline = SparkSom(5, 5, 4, random_seed=2)
+    inline._train_local([X], 2, 0, 2, info=(info := {}))
     assert info["threads"] == 1
     np.testing.assert_array_equal(inline.get_weights(),
                                   threaded.get_weights())
@@ -473,10 +480,10 @@ def test_blas_thread_count_restored(monkeypatch):
     previous count afterwards — also when the kernel raises on a pool
     thread, which fails the fit and leaves the pool usable."""
     monkeypatch.setattr(training, "driver_threads", lambda: 4)
-    monkeypatch.setattr(training, "BMU_CHUNK_ROWS", 50)
+    monkeypatch.setattr(training, "CHUNK_CELLS", 64 * 16)
     get, set_ = training._openblas_threads()[0]
     X = np.random.RandomState(13).rand(500, 3).astype(np.float32)
-    som = SparkSom(4, 4, 3, random_seed=1, batch_rows=200)
+    som = SparkSom(4, 4, 3, random_seed=1)
     kernel = som._distance
     seen, calls = [], []
 
@@ -486,7 +493,7 @@ def test_blas_thread_count_restored(monkeypatch):
 
     def failing(x, w, w_sq=None):
         calls.append(len(x))
-        if len(calls) == 6:   # a chunk of the second block
+        if len(calls) == 6:   # the sixth of eight 64-row chunks
             raise RuntimeError("kernel failed")
         return kernel(x, w, w_sq)
 
@@ -504,18 +511,18 @@ def test_blas_thread_count_restored(monkeypatch):
         assert get() == 3
     finally:
         set_(original)
-    fresh = SparkSom(4, 4, 3, random_seed=1, batch_rows=200)
+    fresh = SparkSom(4, 4, 3, random_seed=1)
     fresh.train(X, 2)
     np.testing.assert_array_equal(
-        fresh.get_weights(),
-        _serial_fit(SparkSom(4, 4, 3, random_seed=1, batch_rows=200), X, 2))
+        fresh.get_weights(), _serial_fit(SparkSom(4, 4, 3, random_seed=1),
+                                         X, 2))
 
 
 def test_concurrent_callers_get_serial_indices(monkeypatch):
     """Eight Python threads calling bmu_indices at once — their pinned
     sections queue on one lock and share one pool — each get the
     one-thread result, and the BLAS thread counts are back afterwards."""
-    monkeypatch.setattr(training, "BMU_CHUNK_ROWS", 100)
+    monkeypatch.setattr(training, "CHUNK_CELLS", 128 * 30)
     kernel = resolve_distance("euclidean")
     rng = np.random.RandomState(14)
     W = rng.rand(30, 5).astype(np.float32)
@@ -545,7 +552,7 @@ def test_forked_child_gets_its_own_pool(monkeypatch):
     not its threads: it must build its own instead of queueing work no
     thread will ever run."""
     monkeypatch.setattr(training, "driver_threads", lambda: 4)
-    monkeypatch.setattr(training, "BMU_CHUNK_ROWS", 100)
+    monkeypatch.setattr(training, "CHUNK_CELLS", 128 * 30)
     kernel = resolve_distance("euclidean")
     rng = np.random.RandomState(15)
     X = rng.rand(1000, 5).astype(np.float32)
@@ -570,3 +577,125 @@ def test_forked_child_gets_its_own_pool(monkeypatch):
         time.sleep(0.05)
     assert os.read(r, 1) == b"1"
     os.close(r)
+
+
+@needs_openblas
+def test_kernel_chunks_sized_by_grid_and_window_bounded(monkeypatch):
+    """On a 100×100 grid every kernel call gets at most
+    max(64, CHUNK_CELLS // K) rows (a fixed 4096-row chunk held 164 MB
+    of float32 activations per thread there), and at most 2·P chunks
+    are started and not yet consumed."""
+    p = 4
+    monkeypatch.setattr(training, "driver_threads", lambda: p)
+    rng = np.random.RandomState(16)
+    W = rng.rand(100 * 100, 8).astype(np.float32)
+    X = rng.rand(3000, 8).astype(np.float32)
+    kernel = resolve_distance("euclidean")
+    limit = max(64, training.CHUNK_CELLS // len(W))
+    sizes, started = [], []
+
+    def counting(x, w, w_sq=None):
+        sizes.append(len(x))
+        started.append(1)
+        return kernel(x, w, w_sq)
+
+    counting.can_cache = True
+    w_sq = codebook_sq_norms(W)
+    for consumed, idx in enumerate(training.kernel_map(
+            counting, [X[:1000], X[1000:]], W, w_sq,
+            lambda rows, act: act.argmin(axis=1))):
+        assert len(started) - consumed <= 2 * p
+    assert max(sizes) == _chunk_rows(len(W)) == 64 <= limit
+    assert len(sizes) == 16 + 32     # 15 × 64 + 40 rows, 31 × 64 + 16
+    monkeypatch.setattr(training, "driver_threads", lambda: 1)
+    np.testing.assert_array_equal(
+        training.epoch_sums(counting, [X], W, w_sq, len(W), 8)[0],
+        training.bmu_cell_sums(X, training.bmu_indices(kernel, X, W, w_sq),
+                               len(W))[0])
+
+
+@pytest.mark.parametrize("threads", [1, 4])
+def test_blocks_pulled_lazily(monkeypatch, threads):
+    """A generator of blocks (an executor's Arrow batches) is pulled as
+    the window needs it, not drained up front."""
+    monkeypatch.setattr(training, "driver_threads", lambda: threads)
+    p = training.map_threads()
+    monkeypatch.setattr(training, "CHUNK_CELLS", 64 * 30)
+    rng = np.random.RandomState(17)
+    W = rng.rand(30, 5).astype(np.float32)
+    kernel = resolve_distance("euclidean")
+    pulled = []
+
+    def blocks():
+        for i in range(40):
+            pulled.append(i)
+            yield rng.rand(64, 5).astype(np.float32)
+
+    n = 0
+    for n, _ in enumerate(training.kernel_map(
+            kernel, blocks(), W, codebook_sq_norms(W),
+            lambda rows, act: act.argmin(axis=1)), 1):
+        assert len(pulled) <= n + 2 * p
+    assert (n, len(pulled)) == (40, 40)
+
+
+@needs_openblas
+def test_epoch_sums_stress_concurrent_callers(monkeypatch):
+    """Eight callers of epoch_sums at once, with the interpreter
+    switching threads every microsecond, each get the one-thread sums:
+    the chunk-ordered merge does not depend on which pool thread
+    finishes first.  float64 rows, whose sums depend on the order they
+    are added in.  Runs for a bounded time."""
+    monkeypatch.setattr(training, "CHUNK_CELLS", 64 * 30)
+    kernel = resolve_distance("euclidean")
+    rng = np.random.RandomState(18)
+    W = rng.rand(30, 5)
+    w_sq = codebook_sq_norms(W)
+    inputs = [[rng.rand(n, 5) for n in (301, 64, 7)] for _ in range(8)]
+
+    def sums(blocks):
+        return training.epoch_sums(kernel, blocks, W, w_sq, 30, 5)
+
+    monkeypatch.setattr(training, "driver_threads", lambda: 1)
+    want = [sums(b) for b in inputs]
+    monkeypatch.setattr(training, "driver_threads", lambda: 4)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    deadline, rounds = time.monotonic() + 5, 0
+    try:
+        with ThreadPoolExecutor(8) as callers:
+            while rounds < 2 or time.monotonic() < deadline:
+                got = list(callers.map(sums, inputs, timeout=120))
+                for (c, S), (wc, wS) in zip(got, want):
+                    np.testing.assert_array_equal(c, wc)
+                    np.testing.assert_array_equal(S, wS)
+                rounds += 1
+    finally:
+        sys.setswitchinterval(interval)
+
+
+@pytest.mark.parametrize("topology,neighborhood", [
+    ("rectangular", "gaussian"), ("rectangular", "triangle"),
+    ("hexagonal", "mexican_hat")])
+def test_influence_row_blocks_equal_whole_block_evaluation(topology,
+                                                           neighborhood):
+    """Past ``influence_block_bytes`` the influence streams in row
+    blocks, each filled by 64-row calls into one reused float64 buffer;
+    the products are those of each block evaluated whole, scaled by η,
+    bit for bit (77-row blocks straddle the 64-row calls)."""
+    som = SparkSom(30, 40, 5, random_seed=1, topology=topology,
+                   neighborhood_function=neighborhood)
+    K = 30 * 40
+    som.influence_block_bytes = 8 * K * 77
+    rng = np.random.RandomState(19)
+    S, c = rng.rand(K, 5), rng.rand(K)
+    num, den = som._apply_influence(S, c, 2.3, 0.4)
+    want_num, want_den = np.zeros((K, 5)), np.zeros(K)
+    for b in range(0, K, 77):
+        e = min(b + 77, K)
+        G = np.asarray(som._influence(som._ux[b:e], som._uy[b:e], 2.3),
+                       dtype=np.float64).reshape(e - b, K) * 0.4
+        want_num += G.T @ S[b:e]
+        want_den += G.T @ c[b:e]
+    np.testing.assert_array_equal(num, want_num)
+    np.testing.assert_array_equal(den, want_den)

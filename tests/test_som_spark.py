@@ -81,11 +81,75 @@ def test_transform_quantization_and_qe(spark, rand_data):
     rows = som.transform(df, ("quantized", "qe")).orderBy("id").collect()
     q_local = som.quantization(rand_data)
     for r in rows:
-        np.testing.assert_array_equal(
-            r["quantized"], q_local[r["id"]].astype(np.float32))
+        np.testing.assert_array_equal(r["quantized"], q_local[r["id"]])
     qe_spark = som.quantization_error(df)
     qe_local = som.quantization_error(rand_data)
     assert qe_spark == pytest.approx(qe_local, rel=1e-5)
+
+
+def _near_tie_som(seed, x=4, y=6, d=6):
+    """An untrained float32 model whose codebook rows come in pairs one
+    float32 ulp apart, held in float64 as an untrained model holds it:
+    every BMU hangs on the last bit of its activations."""
+    rng = np.random.RandomState(seed)
+    W = rng.rand(x * y // 2, d).astype(np.float32)
+    W = np.vstack([W, W + np.float32(6e-8) * rng.choice([-1, 1], W.shape)])
+    som = SparkSom(x, y, d, random_seed=seed)
+    som._weights = W.astype(np.float32).astype(np.float64).reshape(x, y, d)
+    return som
+
+
+def _by_id(df, col):
+    return [r[col] for r in df.orderBy("id").collect()]
+
+
+def test_untrained_local_scoring_matches_transform_on_near_ties(spark):
+    """An untrained float32 model's local predict/quantization search
+    the codebook in the model dtype, like transform: the same BMUs and
+    rows bit for bit even where they hang on the last bit."""
+    X = np.random.RandomState(31).rand(3001, 6).astype(np.float32)
+    df = make_feature_df(spark, X)
+    som = _near_tie_som(31)
+    assert som.get_weights().dtype == np.float64
+    np.testing.assert_array_equal(
+        som.predict(X), _by_id(som.transform(df, ("cluster_id",)),
+                               "cluster_id"))
+    q = som.quantization(X)
+    assert q.dtype == np.float32
+    np.testing.assert_array_equal(
+        q, np.array(_by_id(som.transform(df, ("quantized",)), "quantized"),
+                    np.float32))
+    assert som.quantization_error(X) == pytest.approx(
+        som.quantization_error(df), rel=1e-6)
+
+
+def test_euclidean_outputs_together_equal_each_alone(spark):
+    """quantized, qe, distances and te_err asked for together come from
+    one chunked euclidean pass per batch, and equal each asked for
+    alone: near-tie codebook, Arrow batches of 37 rows (plus tails), so
+    batch lengths are not multiples of 4."""
+    X = np.random.RandomState(32).rand(1001, 6).astype(np.float32)
+    som = _near_tie_som(32)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "37")
+    try:
+        df = make_feature_df(spark, X, n_partitions=3).cache()
+        outs = ("quantized", "qe", "distances", "te_err")
+        both = som.transform(df, outs, keep=("id",))
+        for o in outs:
+            alone = _by_id(som.transform(df, (o,), keep=("id",)), o)
+            assert _by_id(both, o) == alone, o
+        np.testing.assert_array_equal(
+            np.array(_by_id(both, "quantized"), np.float32),
+            som.quantization(X))
+        np.testing.assert_array_equal(
+            np.array(_by_id(both, "distances"), np.float32),
+            som.distance_from_weights(X))
+        assert np.mean(_by_id(both, "te_err")) == som.topographic_error(X)
+        df.unpersist()
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_topographic_error_spark_matches_local(spark, rand_data):
@@ -231,10 +295,10 @@ def test_epoch_fusion_matches_distributed(spark, rand_data, capsys):
     for epoch in info["epochs"]:
         assert set(epoch) == {"bmu_s", "merge_s"}
         assert epoch["bmu_s"] > 0 and epoch["merge_s"] > 0
-    assert info["threads"] == training.bmu_threads(len(rand_data))
+    assert info["threads"] == training.map_threads()
     assert info["blas_pinned"] == training.blas_pinned()
     out = capsys.readouterr().out
-    assert "driver loop: %d BMU thread(s)" % info["threads"] in out
+    assert "driver loop: %d kernel thread(s)" % info["threads"] in out
     assert out.count(" bmu ") == 4 and out.count(" merge ") == 4
 
 

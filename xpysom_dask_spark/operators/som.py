@@ -56,8 +56,8 @@ class SparkSom:
     features_col : name of the ``array<float>`` column to read.
     dtype : np.float32 (reference hot-path parity, SURVEY.md §4 O10) or
         np.float64 for oracle-grade comparisons.
-    batch_rows : local-path mini-batch size (the ``n_parallel`` analog;
-        on Spark the Arrow batch size plays this role).
+    n_parallel : the reference's mini-batch bound, ignored (warned): every
+        kernel pass runs in grid-sized ``plans.training.kernel_map`` chunks.
     agg_fanout / collect_threshold : scale knobs for the partial-tensor
         tree merge — with more partitions than ``collect_threshold`` the
         per-partition partials are first reduced into ``agg_fanout``
@@ -79,8 +79,8 @@ class SparkSom:
         inputs stay on the distributed plan.  Both paths give the same
         weights; the choice moves only the cost.  After a DataFrame fit,
         ``training_info_`` records the path taken and why, and on the
-        fused path the BMU thread count, whether OpenBLAS was pinned to
-        one thread, and per-epoch ``bmu_s`` / ``merge_s``.
+        fused path the kernel thread count, whether OpenBLAS was pinned
+        to one thread, and per-epoch ``bmu_s`` / ``merge_s``.
     """
 
     def __init__(self, x, y, input_len,
@@ -93,7 +93,7 @@ class SparkSom:
                  activation_distance_kwargs=None,
                  random_seed=None, compact_support=False,
                  features_col="features", dtype=np.float32,
-                 batch_rows=32768, agg_fanout=64, collect_threshold=512,
+                 agg_fanout=64, collect_threshold=512,
                  fuse_local_bytes=64 << 20,
                  n_parallel=None, xp=None, use_dask=None,
                  dask_chunks=None):
@@ -104,17 +104,13 @@ class SparkSom:
         # sites run unchanged, map what maps, and say what replaced
         # the rest rather than failing.
         if n_parallel:
-            # the reference's mini-batch bound (xpysom.py:140-144) —
-            # ours is batch_rows, same contract.  The reference's
-            # default n_parallel=0 means "auto-infer from the backend"
-            # (xpysom.py:242-249); our auto choice IS the batch_rows
-            # default, so 0/None keep it rather than producing a
-            # zero-length chunk range.
+            # its reference default 0 means auto (xpysom.py:242-249)
             if int(n_parallel) < 0:
                 raise ValueError(
                     f"n_parallel must be >= 0 (got {n_parallel}); "
-                    "0 means auto (keep batch_rows)")
-            batch_rows = int(n_parallel)
+                    "0 means auto")
+            warn("n_parallel ignored: kernel chunks are sized by the "
+                 "grid (plans.training.CHUNK_CELLS)")
         if xp is not None:
             name = getattr(xp, "__name__", str(xp))
             if name not in ("numpy",):
@@ -148,7 +144,6 @@ class SparkSom:
         self.topology = topology
         self.features_col = features_col
         self.dtype = np.dtype(dtype).type
-        self.batch_rows = int(batch_rows)
         self.agg_fanout = int(agg_fanout)
         self.collect_threshold = int(collect_threshold)
         self.fuse_local_bytes = int(fuse_local_bytes)
@@ -217,22 +212,25 @@ class SparkSom:
                              % (X.shape[-1], self._input_len))
         return X
 
-    def _w_flat(self, dtype=None):
-        w = self._weights if dtype is None else self._weights.astype(dtype)
-        return w.reshape(-1, self._input_len)
+    def _w_flat(self):
+        """The flat codebook in the model dtype, as ``transform`` has it."""
+        return self._weights.astype(self.dtype, copy=False).reshape(
+            -1, self._input_len)
+
+    def _kernel_rows(self, X, fn, use_euclidean=False):
+        """``plans.training.map_rows`` of ``fn`` over a local matrix in the
+        model dtype: its chunks bound the (n, x·y) activation like the
+        reference's ``n_parallel`` (xpysom.py:389-398, 638, 665)."""
+        from ..plans.training import map_rows
+        X, w_flat = np.asarray(X, dtype=self.dtype), self._w_flat()
+        if use_euclidean:
+            return map_rows(euclidean, X, w_flat, None, fn)
+        w_sq = codebook_sq_norms(w_flat) if self._distance.can_cache else None
+        return map_rows(self._distance, X, w_flat, w_sq, fn)
 
     def _bmu_flat(self, X, use_euclidean=False):
-        """Flat BMU indices for a local matrix, from one
-        ``plans.training.bmu_indices`` call: its chunks bound the (n, x·y)
-        activation like the reference's ``n_parallel`` (xpysom.py:389-398,
-        638, 665), where a whole one for a large ndarray is a driver OOM.
-        """
-        from ..plans.training import bmu_indices
-        w_flat = self._w_flat()
-        if use_euclidean:
-            return bmu_indices(euclidean, X, w_flat, None)
-        w_sq = codebook_sq_norms(w_flat) if self._distance.can_cache else None
-        return bmu_indices(self._distance, X, w_flat, w_sq)
+        return self._kernel_rows(X, lambda rows, act: act.argmin(axis=1),
+                                 use_euclidean)
 
     # ------------------------------------------------------------------ #
     # activation / BMU (X6, X7)
@@ -243,13 +241,11 @@ class SparkSom:
         NB under the default ``'euclidean'`` these are *partial* squared
         distances — argmin-comparable only (SURVEY.md §4 O1).
         """
-        X = self._as_matrix(x)
-        return self._distance(X, self._w_flat())
+        return self._kernel_rows(self._as_matrix(x), lambda rows, act: act)
 
     def winner(self, x):
         """BMU coordinates for one sample (tuple) or a batch (list of
-        tuples). Local/driver computation, parity xpysom.py:370-408;
-        activation chunked by ``batch_rows``."""
+        tuples). Local/driver computation, parity xpysom.py:370-408."""
         X = self._as_matrix(x)
         idx = self._bmu_flat(X)
         if np.asarray(x).ndim == 1:
@@ -272,7 +268,8 @@ class SparkSom:
             from ..plans.training import run_training
             return run_training(self, data, num_epochs, iter_beg, iter_end,
                                 verbose)
-        return self._train_local(data, num_epochs, iter_beg, iter_end,
+        return self._train_local([self._as_matrix(data, dtype=self.dtype)],
+                                 num_epochs, iter_beg, iter_end,
                                  verbose=verbose)
 
     def _cell_influence(self, sig):
@@ -316,11 +313,17 @@ class SparkSom:
         rows_per_block = max(1, self.influence_block_bytes // (K * 8))
         num = np.zeros((K, d), dtype=np.float64)
         den = np.zeros(K, dtype=np.float64)
+        # one float64 block buffer, filled by 64-row influence calls: a
+        # block's float32 influence and its float64 copy never coexist
+        block = np.empty((min(rows_per_block, K), K))
         for b in range(0, K, rows_per_block):
             e = min(b + rows_per_block, K)
-            Gb = np.asarray(
-                self._influence(self._ux[b:e], self._uy[b:e], sig),
-                dtype=np.float64).reshape(e - b, K) * eta
+            Gb = block[:e - b]
+            for r in range(b, e, 64):
+                Gb[r - b: r - b + 64] = self._influence(
+                    self._ux[r:min(r + 64, e)], self._uy[r:min(r + 64, e)],
+                    sig).reshape(-1, K)
+            Gb *= eta
             num += Gb.T @ S[b:e]
             den += Gb.T @ c[b:e]
         return num, den
@@ -368,28 +371,24 @@ class SparkSom:
         self._weights = W
         return self
 
-    def _train_local(self, data, num_epochs, iter_beg, iter_end,
+    def _train_local(self, blocks, num_epochs, iter_beg, iter_end,
                      verbose=False, info=None):
         """Driver-side epochs (ndarray fits, the fused DataFrame path):
-        ``epoch_sums`` of ``batch_rows`` slices, each BMU search split
-        over the driver cores.  ``info`` (the fused ``training_info_``)
-        gets the thread count, whether OpenBLAS was pinned and per-epoch
-        ``bmu_s`` / ``merge_s``."""
-        from ..plans.training import blas_pinned, bmu_threads, epoch_sums
-        X = self._as_matrix(data, dtype=self.dtype)
-        step = self.batch_rows
-        threads, pinned = bmu_threads(min(len(X), step)), blas_pinned()
+        ``epoch_sums`` of ``blocks``, a list of feature matrices in the
+        model dtype (one ndarray, or the fused fit's Arrow chunks).
+        ``info`` (the fused ``training_info_``) gets the thread count,
+        whether OpenBLAS was pinned and per-epoch ``bmu_s`` / ``merge_s``."""
+        from ..plans.training import blas_pinned, epoch_sums, map_threads
+        threads, pinned = map_threads(), blas_pinned()
         if info is not None:
             info.update(threads=threads, blas_pinned=pinned)
         if verbose:
-            print("driver loop: %d BMU thread(s), BLAS %s"
+            print("driver loop: %d kernel thread(s), BLAS %s"
                   % (threads, "pinned to 1" if pinned else "as configured"))
 
         def sums(w_flat, w_sq):
-            c, S = epoch_sums(self._distance,
-                              (X[s: s + step] for s in range(0, len(X), step)),
-                              w_flat, w_sq, self._x * self._y,
-                              self._input_len)
+            c, S = epoch_sums(self._distance, blocks, w_flat, w_sq,
+                              self._x * self._y, self._input_len)
             return c, S, [("bmu", time.perf_counter())]
 
         return self._epochs(sums, num_epochs, iter_beg, iter_end,
@@ -425,17 +424,15 @@ class SparkSom:
         ndarray → int64 array (parity xpysom.py:608-617)."""
         if _is_df(data):
             return self.transform(data, ("cluster_id",))
-        X = self._as_matrix(data)
-        return self._bmu_flat(X)
+        return self._bmu_flat(self._as_matrix(data))
 
     def quantization(self, data):
         """BMU codebook row per sample, always under full euclidean
         distance (parity xpysom.py:620-645)."""
         if _is_df(data):
             return self.transform(data, ("quantized",))
-        X = self._as_matrix(data)
-        idx = self._bmu_flat(X, use_euclidean=True)
-        return self._w_flat()[idx]
+        return self._w_flat()[self._bmu_flat(self._as_matrix(data),
+                                             use_euclidean=True)]
 
     def distance_from_weights(self, data):
         """Full (n, x·y) euclidean distance matrix (xpysom.py:647-671).
@@ -443,13 +440,8 @@ class SparkSom:
         when a downstream op needs the whole matrix."""
         if _is_df(data):
             return self.transform(data, ("distances",))
-        X = self._as_matrix(data)
-        w_flat = self._w_flat()
-        # the output IS (n, x·y); chunking bounds the transient peak
-        # (intermediate cross-term buffers), parity xpysom.py:655-668
-        return np.vstack([euclidean(X[s: s + self.batch_rows], w_flat)
-                          for s in range(0, len(X), self.batch_rows)]) \
-            if len(X) else np.empty((0, self._x * self._y))
+        return self._kernel_rows(self._as_matrix(data),
+                                 lambda rows, dist: dist, use_euclidean=True)
 
     # ------------------------------------------------------------------ #
     # map-quality metrics (X16, X17)
@@ -474,13 +466,12 @@ class SparkSom:
             scored = self.transform(data, ("te_err",), keep=())
             return float(scored.agg(F.avg("te_err")).collect()[0][0])
         from ..plans.scoring import _topographic_indicator
-        X = self._as_matrix(data, dtype=self.dtype)
-        w_flat = self._w_flat()
-        errs = [_topographic_indicator(
-                    euclidean(X[s: s + self.batch_rows], w_flat),
-                    self._ux, self._uy, self._xx, self._yy, self.topology)
-                for s in range(0, len(X), self.batch_rows)]
-        return float(np.concatenate(errs).mean()) if errs else float("nan")
+        errs = self._kernel_rows(
+            self._as_matrix(data),
+            lambda rows, dist: _topographic_indicator(
+                dist, self._ux, self._uy, self._xx, self._yy, self.topology),
+            use_euclidean=True)
+        return float(errs.mean()) if len(errs) else float("nan")
 
     # ------------------------------------------------------------------ #
     # map summaries (X20-X23)
@@ -495,8 +486,7 @@ class SparkSom:
             for r in rows:
                 a[r["bmu_x"], r["bmu_y"]] = r["count"]
             return a
-        X = self._as_matrix(data)
-        idx = self._bmu_flat(X)
+        idx = self._bmu_flat(self._as_matrix(data))
         np.add.at(a, (self._ux[idx], self._uy[idx]), 1)
         return a
 

@@ -29,7 +29,7 @@ import pyarrow as pa
 
 from ..functions.distances import codebook_sq_norms, euclidean
 from .exchange import feature_matrix, matrix_to_list_array, ship_package
-from .training import bmu_indices
+from .training import bmu_indices, map_rows
 
 #: output column name → (Spark DDL type, Arrow type)
 OUTPUT_TYPES = {
@@ -86,8 +86,16 @@ def attach(som, df, outputs=("bmu_x", "bmu_y", "cluster_id"), keep=None,
     feat_name = feat_col
     outputs = tuple(outputs)
     need_act = any(o in _NEEDS_ACT for o in outputs)
-    need_quant = "quantized" in outputs or "qe" in outputs
-    need_dist = "distances" in outputs or "te_err" in outputs
+    # per-chunk reads of the euclidean distance matrix: one kernel pass
+    # gives the euclidean BMU (quantized, qe), distances and te_err
+    dist_parts = {}
+    if "quantized" in outputs or "qe" in outputs:
+        dist_parts["eidx"] = lambda dist: dist.argmin(axis=1)
+    if "distances" in outputs:
+        dist_parts["distances"] = lambda dist: dist.astype(np.float32)
+    if "te_err" in outputs:
+        dist_parts["te_err"] = lambda dist: _topographic_indicator(
+            dist, ux, uy, xx, yy, topology)
 
     from pyspark.sql.types import StructType, _parse_datatype_string
 
@@ -103,31 +111,27 @@ def attach(som, df, outputs=("bmu_x", "bmu_y", "cluster_id"), keep=None,
         for batch in batches:
             names = batch.schema.names
             X = feature_matrix(batch.column(names.index(feat_name)), d, dtype)
-            n = len(X)
             cols = {}
             if need_act:
                 idx = bmu_indices(kernel, X, wf, wsq)
                 cols["bmu_x"] = pa.array(ux[idx].astype(np.int32), pa.int32())
                 cols["bmu_y"] = pa.array(uy[idx].astype(np.int32), pa.int32())
                 cols["cluster_id"] = pa.array(idx, pa.int64())
-            if need_quant:
-                eidx = bmu_indices(euclidean, X, wf, None)
-                if "quantized" in outputs:
-                    cols["quantized"] = matrix_to_list_array(
-                        wf[eidx].astype(np.float32))
-                if "qe" in outputs:
-                    cols["qe"] = pa.array(
-                        np.linalg.norm(X - wf[eidx], axis=1).astype(np.float64),
-                        pa.float64())
-            if need_dist:
-                dist = euclidean(X, wf) if n else np.empty((0, x * y))
-                if "distances" in outputs:
-                    cols["distances"] = matrix_to_list_array(
-                        dist.astype(np.float32))
-                if "te_err" in outputs:
-                    cols["te_err"] = pa.array(
-                        _topographic_indicator(dist, ux, uy, xx, yy, topology),
-                        pa.float64())
+            got = dict(zip(dist_parts, map_rows(
+                euclidean, X, wf, None, lambda rows, dist: tuple(
+                    f(dist) for f in dist_parts.values())))) \
+                if dist_parts else {}
+            if "quantized" in outputs:
+                cols["quantized"] = matrix_to_list_array(
+                    wf[got["eidx"]].astype(np.float32))
+            if "qe" in outputs:
+                cols["qe"] = pa.array(
+                    np.linalg.norm(X - wf[got["eidx"]], axis=1).astype(
+                        np.float64), pa.float64())
+            if "distances" in outputs:
+                cols["distances"] = matrix_to_list_array(got["distances"])
+            if "te_err" in outputs:
+                cols["te_err"] = pa.array(got["te_err"], pa.float64())
             kept_idx = [i for i, nm in enumerate(batch.schema.names)
                         if nm in keep_names]
             arrays = ([batch.column(i) for i in kept_idx]

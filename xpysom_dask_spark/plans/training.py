@@ -37,8 +37,8 @@ measured on 4 cores (Spark 4.1.2, Python 3.11), one distributed epoch of
   task;
 * ~0.05 s of actual work: Arrow transfer, BMU argmin, bincount.
 
-The same two epochs take ~0.16 s on the driver, the BMU search on
-every driver core (``bmu_indices``).  Running all epochs in one
+The same two epochs take ~0.16 s on the driver, the kernel chunks on
+every driver core (``kernel_map``).  Running all epochs in one
 barrier stage (``mapInArrow(barrier=True)`` with a
 ``BarrierTaskContext.allGather`` of the (c, S) partials per epoch) does
 not remove that floor: each ``allGather`` took 1.0 s on the same box (1,
@@ -46,12 +46,13 @@ not remove that floor: each ``allGather`` took 1.0 s on the same box (1,
 a job per epoch.
 
 Both paths run ``SparkSom._epochs`` over ``epoch_sums`` of blocks
-(driver ``batch_rows`` slices, executor Arrow batches), whose
-``bmu_indices`` gives a row one BMU in any block, thread or worker BLAS
-setting: forced-distributed fits equal fused ones bit for bit (measured
-with executor BLAS at 1 and 4 threads).  So ``choose_path`` moves only
-the cost; it stays a function of the input, nothing timed at run time,
-so one input always pays the same.  It fuses while the per-epoch kernel
+(the fused fit's Arrow chunks, a task's Arrow batches), and every SOM
+kernel pass runs in ``kernel_map`` chunks, which give a row the same
+activations in any block, thread or worker BLAS setting:
+forced-distributed fits equal fused ones bit for bit (measured with
+executor BLAS at 1 and 4 threads).  So ``choose_path`` moves only the
+cost; it stays a function of the input, nothing timed at run time, so
+one input always pays the same.  It fuses while the per-epoch kernel
 work n·K·d × the kernel's ``relative_cost`` is at most ``FUSE_WORK_CAP``
 and the features fit ``SparkSom.fuse_local_bytes``.  n comes from the
 input's cache statistics when the caller materialized a cache, and from
@@ -126,24 +127,20 @@ def bmu_cell_sums(X, idx, n_cells):
     return c, S
 
 
-#: Rows per kernel call of the BMU search.  Each chunk's GEMM runs with
-#: OpenBLAS at one thread, so a chunk's activations are the same bits
-#: whichever thread computes it and however many share the chunks: the
-#: weights do not depend on the core count.  (A GEMM's bits depend on
-#: OpenBLAS's thread count — no split of one multi-threaded whole-block
-#: GEMM reproduces it.)  4096 rows × K activations stay in cache at SOM
-#: sizes.
-BMU_CHUNK_ROWS = 4096
-
 #: Chunks are padded with copies of their last row to a multiple of this:
 #: a GEMM's last (rows mod unroll) output rows take an edge kernel with
 #: other float grouping (OpenBLAS, AVX-512: unroll 4 float32, 2 float64),
-#: which would tie a row's BMU to where its block ends.
+#: which would tie a row's activations to where its chunk ends.
 BMU_PAD_ROWS = 64
+
+#: Activations (rows × cells) per kernel chunk: a chunk on a K-cell grid
+#: has CHUNK_CELLS // K rows, rounded down to whole ``BMU_PAD_ROWS`` and at
+#: least ``BMU_PAD_ROWS``, so a thread's (rows, K) arrays stay small.
+CHUNK_CELLS = 1 << 20
 
 
 def driver_threads():
-    """Cores the BMU search may use: inside a Spark task the task's
+    """Cores the kernel chunks may use: inside a Spark task the task's
     ``cpus()``, elsewhere the cores this process may run on."""
     try:
         from pyspark import TaskContext
@@ -208,72 +205,79 @@ def _blas_single_threaded():
 
 
 def blas_pinned():
-    """Whether ``bmu_indices`` pins a BLAS (an OpenBLAS is loaded)."""
+    """Whether ``kernel_map`` pins a BLAS (an OpenBLAS is loaded)."""
     return bool(_openblas_threads())
 
 
-def bmu_threads(rows):
-    """Threads ``bmu_indices`` runs a ``rows``-row block's chunks on:
-    one per ``driver_threads`` core, or 1 (inline, no pool) on one core,
-    for a single chunk, or without an OpenBLAS to pin (whose GEMMs,
-    called from several threads at once, would queue on its own thread
-    team)."""
-    p = min(driver_threads(), -(-rows // BMU_CHUNK_ROWS))
-    return p if p > 1 and blas_pinned() else 1
+def map_threads():
+    """Threads ``kernel_map`` runs chunks on: one per core, or 1 without
+    an OpenBLAS to pin (its own thread team would queue them)."""
+    return driver_threads() if blas_pinned() else 1
 
 
-def bmu_indices(kernel, X, w_flat, w_sq, out=None):
-    """BMU index ``argmin_k kernel(X, w_flat, w_sq)[i, k]`` per row of
-    one block, into ``out`` (allocated when None); the BMU search of
-    training, scoring and local prediction alike.
+def kernel_map(kernel, blocks, w_flat, w_sq, fn):
+    """``fn(rows, kernel(rows, w_flat, w_sq))`` per ``CHUNK_CELLS`` chunk
+    of every ``(n, d)`` matrix in ``blocks``, in chunk order.  A chunk is
+    padded with copies of its last row to whole ``BMU_PAD_ROWS`` and run
+    with OpenBLAS pinned to one thread: a row's activations are the same
+    bits in any block, on any thread, at any thread count.  Kernel and
+    ``fn`` run on ``map_threads()`` threads, at most 2·P chunks ahead of
+    the consumer, so ``blocks`` is pulled lazily.  The pinned section
+    spans the generator: consume it before starting another map."""
+    step = max(1, CHUNK_CELLS // (len(w_flat) * BMU_PAD_ROWS)) * BMU_PAD_ROWS
 
-    The kernel runs per padded ``BMU_CHUNK_ROWS`` chunk with OpenBLAS
-    pinned to one thread, the chunks shared by ``bmu_threads`` pool
-    threads (the BLAS team would queue GEMMs issued from several
-    threads, and a pinned GEMM is the same bits on any thread).  A
-    row's index depends neither on the core count, nor on the worker's
-    BLAS threads, nor on the block it arrives in.  Transient
-    activations stay a few ``chunk × K`` arrays per thread.
-    """
-    n = len(X)
-    if out is None:
-        out = np.empty(n, np.int64)
-    bounds = list(range(0, n, BMU_CHUNK_ROWS)) + [n]
-    chunks = list(zip(bounds, bounds[1:]))
+    def run(rows):
+        pad = -len(rows) % BMU_PAD_ROWS
+        full = np.pad(rows, ((0, pad), (0, 0)), mode="edge") if pad else rows
+        return fn(rows, kernel(full, w_flat, w_sq)[:len(rows)])
 
-    def run(a, b):
-        rows, pad = X[a:b], -(b - a) % BMU_PAD_ROWS
-        if pad:
-            rows = np.pad(rows, ((0, pad), (0, 0)), mode="edge")
-        np.argmin(kernel(rows, w_flat, w_sq)[:b - a], axis=1, out=out[a:b])
-
-    p = bmu_threads(n)
+    chunks = (X[a:a + step] for X in blocks for a in range(0, len(X), step))
+    p = map_threads()
     with _blas_single_threaded():
-        if p == 1:
-            for a, b in chunks:
-                run(a, b)
-            return out
         key = (os.getpid(), p)
         pool = _pools.get(key)
         if pool is None:
             pool = _pools[key] = ThreadPoolExecutor(
-                p, thread_name_prefix="bmu")
-        futures = [pool.submit(run, a, b) for a, b in chunks]
-        wait(futures)
-    for f in futures:
-        f.result()
-    return out
+                p, thread_name_prefix="kernel")
+        window = []
+        try:
+            for rows in chunks:
+                window.append(pool.submit(run, rows))
+                if len(window) == 2 * p:
+                    yield window.pop(0).result()
+            while window:
+                yield window.pop(0).result()
+        finally:
+            # no chunk may still run once the BLAS counts are restored
+            wait(window)
+
+
+def map_rows(kernel, X, w_flat, w_sq, fn):
+    """``kernel_map`` over one block ``X``, ``fn``'s per-row outputs
+    joined along the rows (element-wise when ``fn`` returns a tuple)."""
+    parts = list(kernel_map(kernel, (X,), w_flat, w_sq, fn))
+    if not parts:   # no rows: fn of the empty block gives the shapes
+        parts = [fn(X, kernel(X, w_flat, w_sq))]
+    if isinstance(parts[0], tuple):
+        return tuple(np.concatenate(p) for p in zip(*parts))
+    return np.concatenate(parts)
+
+
+def bmu_indices(kernel, X, w_flat, w_sq):
+    """BMU index per row of ``X``, the argmin of ``kernel_map``: the BMU
+    search of training, scoring and local prediction alike."""
+    return map_rows(kernel, X, w_flat, w_sq,
+                    lambda rows, act: act.argmin(axis=1))
 
 
 def epoch_sums(kernel, blocks, w_flat, w_sq, n_cells, d):
     """One epoch's per-cell ``(c, S)`` over ``blocks`` of ``(rows, d)``
-    matrices (driver ``batch_rows`` slices or a task's Arrow batches):
-    ``bmu_cell_sums`` of each block's ``bmu_indices``, added in order."""
+    matrices: each chunk's ``bmu_cell_sums`` of its BMUs, computed on a
+    ``kernel_map`` thread and added in chunk order."""
     c = np.zeros(n_cells, dtype=np.float64)
     S = np.zeros((n_cells, d), dtype=np.float64)
-    for X in blocks:
-        cc, SS = bmu_cell_sums(X, bmu_indices(kernel, X, w_flat, w_sq),
-                               n_cells)
+    for cc, SS in kernel_map(kernel, blocks, w_flat, w_sq, lambda rows, act:
+                             bmu_cell_sums(rows, act.argmin(axis=1), n_cells)):
         c += cc
         S += SS
     return c, S
@@ -424,10 +428,11 @@ def run_training(som, df, num_epochs, iter_beg=0, iter_end=None, verbose=False):
     if verbose:
         print(_describe(info))
     if info["path"] == "fused":
-        X = feature_matrix(feats.toArrow().column("features"), d, som.dtype)
+        col = feats.toArrow().column("features")
+        blocks = [feature_matrix(chunk, d, som.dtype) for chunk in col.chunks]
         if own_cache:
             feats.unpersist()
-        return som._train_local(X, num_epochs, iter_beg, iter_end,
+        return som._train_local(blocks, num_epochs, iter_beg, iter_end,
                                 verbose=verbose, info=info)
 
     two_level = feats.rdd.getNumPartitions() > som.collect_threshold
