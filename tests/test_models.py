@@ -237,17 +237,18 @@ def test_logreg_hashed_fold_bigrams_variant_trains(spark):
     assert acc >= 0.95
 
 
-def test_logreg_hashed_tree_reduce_bit_identical(spark):
+def test_logreg_hashed_tree_reduce_bit_identical(spark, monkeypatch):
     # the bucketed applyInPandas partial reduce (the >64 MB-of-blobs
     # path a 1000-partition cluster takes) must produce EXACTLY the
     # driver-summed weights — integer partial sums commute
+    from xpysom_dask_spark.plans import exchange
+
     df = _vocab_docs(spark, n=80, seed=11).repartition(6)
     flat = models.logreg_fit_hashed(df, "text", "id", "y",
-                                    n_buckets=512, n_iter=4,
-                                    tree_reduce=False)
+                                    n_buckets=512, n_iter=4)
+    monkeypatch.setattr(exchange, "TREE_MERGE_BYTES", 0)
     tree = models.logreg_fit_hashed(df, "text", "id", "y",
-                                    n_buckets=512, n_iter=4,
-                                    tree_reduce=True)
+                                    n_buckets=512, n_iter=4)
     assert np.array_equal(flat["w"], tree["w"])
     assert flat["intercept"] == tree["intercept"]
 

@@ -115,3 +115,40 @@ def test_registry_validation():
         make_neighborhood("triangle", "hexagonal", 3, 3)
     assert "triangle" in neighborhood_names("rectangular")
     assert "triangle" not in neighborhood_names("hexagonal")
+
+
+def test_compact_mexican_hat_needs_square_rectangular_grid():
+    """The reference's compact mexican hat masks px with the y mask too,
+    which is defined only when x == y: a non-square rectangular grid
+    fails at construction with the config named, not with a broadcast
+    error in the first epoch.  Hexagonal grids mask on the meshgrids
+    and take any shape."""
+    from xpysom_dask_spark import SparkSom
+
+    with pytest.raises(ValueError, match="mexican_hat.*3x5"):
+        make_neighborhood("mexican_hat", "rectangular", 3, 5,
+                          compact_support=True)
+    with pytest.raises(ValueError, match="mexican_hat.*3x5"):
+        SparkSom(3, 5, 4, neighborhood_function="mexican_hat",
+                 compact_support=True)
+    make_neighborhood("mexican_hat", "rectangular", 3, 5)
+    xx, yy = np.meshgrid(np.arange(3.0), np.arange(5.0))
+    make_neighborhood("mexican_hat", "hexagonal", 3, 5,
+                      compact_support=True, xx=xx, yy=yy)
+
+
+def test_compact_mexican_hat_square_quirk_bit_for_bit():
+    """On a square grid the quirk stays: px masked by both axis masks,
+    py by none (neighborhoods.py:69-71), in float32."""
+    n, sigma, d = 6, 1.7, 2.0 * 0.5**2 * 1.7**2
+    cx, cy = np.repeat(np.arange(n), n), np.tile(np.arange(n), n)
+    got = make_neighborhood("mexican_hat", "rectangular", n, n,
+                            compact_support=True)(cx, cy, sigma)
+    dx = np.arange(n)[None, :] - cx[:, None]
+    dy = np.arange(n)[None, :] - cy[:, None]
+    px = np.power(dx, 2, dtype=np.float32)
+    px *= np.abs(dx) < sigma
+    px *= np.abs(dy) < sigma
+    p = px[:, :, None] + np.power(dy, 2, dtype=np.float32)[:, None, :]
+    np.testing.assert_array_equal(
+        got, np.exp(-p / d) * (1.0 - (2.0 / d) * p))

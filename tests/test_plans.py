@@ -434,3 +434,96 @@ def test_fetch_if_small_bounds_and_local_frame_schema(spark):
     assert [f.nullable for f in lf.schema] == [False, True]
     assert sorted(lf.collect()) == [(1, None), (3, "c")]
     assert "LocalTableScan" in _plan(lf)
+
+
+def _both_merges(monkeypatch, fit):
+    """``fit()`` under the flat merge, then under a zero byte budget
+    (every partial goes through the bucketed merge); also the number
+    of rows the driver adds in each."""
+    from xpysom_dask_spark.plans import exchange
+
+    driver_rows = []
+    add_blobs = exchange._add_blobs
+
+    def spy(acc, rows):
+        rows = list(rows)
+        driver_rows.append(len(rows))
+        return add_blobs(acc, rows)
+
+    monkeypatch.setattr(exchange, "_add_blobs", spy)
+    flat = fit()
+    n_flat = driver_rows[-1]
+    monkeypatch.setattr(exchange, "TREE_MERGE_BYTES", 0)
+    bucketed = fit()
+    return flat, bucketed, n_flat, driver_rows[-1]
+
+
+@pytest.fixture(scope="module")
+def grid_vectors(spark):
+    """400 × 16 float64 rows on a 2**-12 grid (their float64 sums are
+    exact in any grouping) in 8 partitions."""
+    rng = np.random.RandomState(5)
+    X = rng.randint(0, 1 << 12, (400, 16)) / (1 << 12)
+    return spark.createDataFrame(
+        [(i, row.tolist()) for i, row in enumerate(X)],
+        "vec_id bigint, embedding array<double>").repartition(8)
+
+
+@pytest.mark.parametrize("fit", ["covariance", "pca", "kmeans", "pq"])
+def test_bucketed_partial_merge_equals_flat(spark, grid_vectors, fit,
+                                            monkeypatch):
+    """Every driver-merged fit runs ``exchange.partial_sums``: its
+    ⌈√P⌉-group merge (3 rows for 8 partitions) gives the flat merge's
+    result bit for bit.  The SOM and the hashed logistic regression
+    are pinned by ``test_two_level_aggregation_path`` and
+    ``test_logreg_hashed_tree_reduce_bit_identical``."""
+    from xpysom_dask_spark.operators import clustering, embeddings, pq
+    from xpysom_dask_spark.plans.exchange import feature_covariance
+
+    df = grid_vectors
+    fits = {
+        "covariance": lambda: feature_covariance(
+            df.select("embedding"), 16)[1],
+        "pca": lambda: embeddings.pca_fit(
+            df, dim=16, n_components=4)["components"],
+        "kmeans": lambda: clustering.kmeans_fit(df, k=5, max_iter=2),
+        "pq": lambda: pq.pq_fit(df, m=4, k=8, max_iter=2),
+    }
+    flat, bucketed, n_flat, n_bucketed = _both_merges(monkeypatch,
+                                                      fits[fit])
+    assert (n_flat, n_bucketed) == (8, 3)
+    np.testing.assert_array_equal(flat, bucketed)
+
+
+def test_partial_sums_empty_partitions_and_empty_input(spark, monkeypatch):
+    """Partitions without rows add zeros, so a partly empty input sums
+    its rows, and an input with no rows (with or without partitions)
+    returns the zeros template, shapes and dtypes included — under
+    both merges."""
+    from xpysom_dask_spark.plans.exchange import partial_sums
+
+    zeros = (np.zeros((), np.int64), np.zeros((2, 3)))
+
+    def parts(batches):
+        for b in batches:
+            v = b.column(0).to_numpy().astype(np.float64)
+            yield len(v), np.outer([1.0, 2.0], [v.sum(), len(v), 0.0])
+
+    some = spark.range(0, 3, 1, 6)                    # 3 of 6 filled
+    assert some.rdd.getNumPartitions() == 6
+    empty = spark.range(0, 10, 1, 4).where("id < 0")  # 4, all empty
+    none = spark.range(0)                             # no partitions
+    assert none.rdd.getNumPartitions() == 0
+
+    def fit():
+        return [partial_sums(df, zeros, parts) for df in (some, empty, none)]
+
+    flat, bucketed, _, _ = _both_merges(monkeypatch, fit)
+    for got in (flat, bucketed):
+        (n, S), *rest = got
+        assert int(n) == 3
+        np.testing.assert_array_equal(S, [[3.0, 3.0, 0.0], [6.0, 6.0, 0.0]])
+        for n, S in rest:
+            assert (n.shape, n.dtype, int(n)) == ((), np.int64, 0)
+            assert (S.shape, S.dtype) == ((2, 3), np.float64)
+            assert not S.any()

@@ -18,7 +18,7 @@ import pytest
 from xpysom_dask_spark import SparkSom
 from xpysom_dask_spark.functions.distances import (codebook_sq_norms,
                                                    resolve_distance)
-from xpysom_dask_spark.plans import training
+from xpysom_dask_spark.plans import exchange, training
 
 
 @pytest.fixture
@@ -439,8 +439,9 @@ def test_executor_partial_equals_driver_sums(seed):
     class Broadcast:
         value = (W, w_sq)
 
-    fn = training._partial_update_factory(Broadcast(), kernel, (x, y, d),
-                                          np.float32, 1)
+    fn = exchange._task_fold(
+        [((K,), np.float64), ((K, d), np.float64)],
+        training._epoch_parts(Broadcast(), kernel, x * y, d, np.float32))
     libs = training._openblas_threads()
     before = [get() for get, _ in libs]
     try:
@@ -450,9 +451,9 @@ def test_executor_partial_equals_driver_sums(seed):
     finally:
         for (_, set_), n in zip(libs, before):
             set_(n)
-    S = np.frombuffer(partial.column("num")[0].as_py(),
+    c = np.frombuffer(partial.column("p0")[0].as_py(), np.float64)
+    S = np.frombuffer(partial.column("p1")[0].as_py(),
                       np.float64).reshape(K, d)
-    c = np.frombuffer(partial.column("den")[0].as_py(), np.float64)
     want_c, want_S = training.epoch_sums(
         kernel, (X[s: s + 1000] for s in range(0, len(X), 1000)),
         W, w_sq, K, d)
@@ -699,3 +700,23 @@ def test_influence_row_blocks_equal_whole_block_evaluation(topology,
         want_den += G.T @ c[b:e]
     np.testing.assert_array_equal(num, want_num)
     np.testing.assert_array_equal(den, want_den)
+
+
+@pytest.mark.parametrize("topology,neighborhood", [
+    ("rectangular", "gaussian"), ("rectangular", "mexican_hat"),
+    ("hexagonal", "gaussian"), ("hexagonal", "bubble")])
+def test_influence_one_block_equals_whole_matrix(topology, neighborhood):
+    """While K²·8 ≤ ``influence_block_bytes`` the influence is one row
+    block, filled by 64-row calls: the products are those of the whole
+    (K, K) matrix evaluated in one call and scaled by η, bit for bit."""
+    som = SparkSom(30, 40, 5, random_seed=1, topology=topology,
+                   neighborhood_function=neighborhood)
+    K = 30 * 40
+    assert K * K * 8 <= som.influence_block_bytes
+    rng = np.random.RandomState(23)
+    S, c = rng.rand(K, 5), rng.rand(K)
+    num, den = som._apply_influence(S, c, 2.3, 0.4)
+    G = np.asarray(som._influence(som._ux, som._uy, 2.3),
+                   dtype=np.float64).reshape(K, K) * 0.4
+    np.testing.assert_array_equal(num, G.T @ S)
+    np.testing.assert_array_equal(den, G.T @ c)

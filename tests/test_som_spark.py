@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from xpysom_dask_spark import SparkSom
 from xpysom_dask_spark.functions.distances import resolve_distance
-from xpysom_dask_spark.plans import training
+from xpysom_dask_spark.plans import exchange, training
 from xpysom_dask_spark.sources.readers import lineitem_features
 
 from conftest import SF_TINY
@@ -50,16 +50,19 @@ def test_spark_train_float32_close_to_local(spark, rand_data):
     np.testing.assert_array_equal(som_s.get_weights(), som_l.get_weights())
 
 
-def test_two_level_aggregation_path(spark, rand_data):
-    """Force the bucketed tree merge (collect_threshold=1) and check it
-    produces the same weights as the direct-collect path."""
-    df = make_feature_df(spark, rand_data, n_partitions=8)
-    som_a = SparkSom(4, 4, 6, random_seed=3, dtype=np.float64,
-                     collect_threshold=1, agg_fanout=3, fuse_local_bytes=0)
+def test_two_level_aggregation_path(spark, rand_data, monkeypatch):
+    """Force the bucketed tree merge (a zero byte budget) and check it
+    produces the same weights as the direct-collect path.  The rows sit
+    on a 2**-12 grid, so their float64 sums are exact in any grouping."""
+    grid = np.floor(rand_data * 4096) / 4096
+    df = make_feature_df(spark, grid, n_partitions=8)
     som_b = SparkSom(4, 4, 6, random_seed=3, dtype=np.float64,
                      fuse_local_bytes=0)
-    som_a.train(df, 2)
     som_b.train(df, 2)
+    monkeypatch.setattr(exchange, "TREE_MERGE_BYTES", 0)
+    som_a = SparkSom(4, 4, 6, random_seed=3, dtype=np.float64,
+                     fuse_local_bytes=0)
+    som_a.train(df, 2)
     np.testing.assert_array_equal(som_a.get_weights(), som_b.get_weights())
 
 

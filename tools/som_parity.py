@@ -13,9 +13,20 @@ the fused ``train(DataFrame)`` and ``train(DataFrame)`` with
 fit's weights with its local ``qe``/``te``, as perfbench computes them,
 plus the DataFrame ``qe``/``te`` of the ndarray fit.
 
+It then fits the five other fits whose partial sums merge on the
+driver on fixed inputs of each seed — ``SparkSom._distributed_covariance``,
+``pca_fit`` and ``kmeans_fit`` / ``pq_fit`` (5 Lloyd steps) over
+20k x 16 Gaussian-mixture rows, and ``logreg_fit_hashed`` (1024
+buckets, 6 steps) over a 2000-document Zipf corpus labelled by whether
+a document has a planted near-duplicate — once with the flat merge and
+once with ``exchange.partial_sums``'s bucketed merge forced by a zero
+``TREE_MERGE_BYTES``.  A tree without ``TREE_MERGE_BYTES`` has one merge
+for these fits; its result is stored for both.
+
 ``compare`` lists every entry that is not ``np.array_equal`` between
-two dumps (and entries only one of them has) and exits 1 if any is.
-Run ``dump`` once per tree, then ``compare`` the two files.
+two dumps, with its max |difference| (and entries only one of them
+has), and exits 1 if any is.  Run ``dump`` once per tree, then
+``compare`` the two files.
 """
 
 from __future__ import annotations
@@ -88,9 +99,66 @@ def dump(out, root, seeds):
                       flush=True)
             for _, df in inputs.values():
                 df.unpersist()
+            res.update(_merged_fits(spark, seed, nproc, work))
+            print(f"seed {seed}: merged fits", flush=True)
     spark.stop()
     np.savez(out, **res)
     print(f"{len(res)} entries -> {out}")
+
+
+def _merged_fits(spark, seed, nproc, work):
+    """The five non-SOM driver-merged fits on ``seed``'s inputs, under
+    the flat and the forced bucketed merge."""
+    import numpy as np
+
+    from perfbench import gen
+    from perfbench.run import write_features
+    from xpysom_dask_spark import SparkSom
+    from xpysom_dask_spark.operators import clustering, embeddings, models, pq
+    from xpysom_dask_spark.plans import exchange
+
+    path = write_features(os.path.join(work, f"v{seed}.parquet"),
+                          gen.gaussian_mixture(20_000, seed, 16),
+                          with_id=True)
+    vecs = spark.read.parquet(path).repartition(nproc).persist()
+    ids, texts, cluster = gen.near_dup_corpus(2000, seed)
+    docs = spark.createDataFrame(
+        list(zip(ids.tolist(), texts, (cluster >= 0).astype(int).tolist())),
+        "id bigint, text string, y int").repartition(nproc).persist()
+    vecs.count(), docs.count()
+    fits = {
+        "covariance": lambda: {"cov": SparkSom(
+            2, 2, 16)._distributed_covariance(vecs)},
+        "pca": lambda: embeddings.pca_fit(vecs, "features", 16, 4),
+        "kmeans": lambda: {"C": clustering.kmeans_fit(
+            vecs, "features", "id", k=8, max_iter=5)},
+        "pq": lambda: {"C": pq.pq_fit(vecs, "features", "id", m=4, k=16,
+                                      max_iter=5)},
+        "logreg": lambda: models.logreg_fit_hashed(
+            docs, "text", "id", "y", n_buckets=1024, n_iter=6),
+    }
+    res = {}
+    budget = getattr(exchange, "TREE_MERGE_BYTES", None)
+    try:
+        for merge in ("flat", "bucket"):
+            if merge == "bucket" and budget is not None:
+                exchange.TREE_MERGE_BYTES = 0
+            for name, fit in fits.items():
+                key = f"s{seed}/{name}/{merge}"
+                if merge == "bucket" and budget is None:
+                    out = {k[len(f"s{seed}/{name}/flat/"):]: v
+                           for k, v in res.items()
+                           if k.startswith(f"s{seed}/{name}/flat/")}
+                else:
+                    out = fit()
+                for k, v in out.items():
+                    res[f"{key}/{k}"] = np.asarray(v)
+    finally:
+        if budget is not None:
+            exchange.TREE_MERGE_BYTES = budget
+        vecs.unpersist()
+        docs.unpersist()
+    return res
 
 
 def compare(a, b):
@@ -98,12 +166,21 @@ def compare(a, b):
 
     A, B = np.load(a), np.load(b)
     bad = sorted(set(A.files) ^ set(B.files))
-    bad += [k for k in sorted(set(A.files) & set(B.files))
-            if not np.array_equal(A[k], B[k])]
     for k in bad:
-        print("DIFFERS:", k)
-    print(f"{len(set(A.files) | set(B.files))} entries, {len(bad)} differ")
-    return 1 if bad else 0
+        print("ONLY IN", a if k in A.files else b, k)
+    n_bad = len(bad)
+    for k in sorted(set(A.files) & set(B.files)):
+        x, y = A[k], B[k]
+        if np.array_equal(x, y):
+            continue
+        n_bad += 1
+        if x.shape != y.shape or x.dtype.kind not in "fiub":
+            print("DIFFERS:", k, x.shape, y.shape)
+        else:
+            print("DIFFERS: %s max |d| %.3g" % (k, np.max(np.abs(
+                x.astype(np.float64) - y.astype(np.float64)))))
+    print(f"{len(set(A.files) | set(B.files))} entries, {n_bad} differ")
+    return 1 if n_bad else 0
 
 
 def main(argv=None):

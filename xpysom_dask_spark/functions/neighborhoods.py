@@ -17,7 +17,9 @@ Parity notes (reference: /root/reference/xpysom_dask/neighborhoods.py):
 * the mexican-hat compact-support quirk — both the x- and y-axis masks are
   applied to the x-term only (neighborhoods.py:69-71) — is preserved
   deliberately, because correctness is judged against the reference
-  (SURVEY.md §5);
+  (SURVEY.md §5); it is defined only on square rectangular grids (the
+  y mask has the x mask's shape only when x = y), so ``make_neighborhood``
+  rejects a non-square one;
 * float32 transcendental evaluation (``dtype=float32`` on the squared
   offsets) matches neighborhoods.py:26-27/66-67/88-89.
 """
@@ -145,6 +147,11 @@ def make_neighborhood(name, topology, x, y, std_coeff=0.5,
         return lambda cx, cy, sigma: _rect_gaussian(
             neigx, neigy, std_coeff, compact_support, cx, cy, sigma, dtype)
     if name == "mexican_hat":
+        if compact_support and not hex_grid and x != y:
+            raise ValueError(
+                "rectangular mexican_hat with compact_support=True needs a "
+                "square grid (the reference masks the x term with the y "
+                f"mask too), got {x}x{y}")
         if hex_grid:
             return lambda cx, cy, sigma: _generic_mexican_hat(
                 xx, yy, std_coeff, compact_support, cx, cy, sigma, dtype)

@@ -80,7 +80,7 @@ def learn_bpe(df: DataFrame, text_col: str, num_merges: int,
     ordered merge list [(left, right), ...].  Stops early when the best
     remaining pair's weighted count falls below ``min_count``.
 
-    Two-level execution (the SparkSom collect_threshold pattern): the
+    Two-level execution (the SparkSom fused-or-distributed pattern): the
     corpus-sized tokenize+count always runs distributed; the merge
     LOOP runs driver-side when the distinct-word vocabulary fits
     (``driver_vocab_limit`` rows — vocabularies grow ~Heaps' law, so

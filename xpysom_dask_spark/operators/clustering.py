@@ -12,11 +12,12 @@ Spark-first shape (mirrors the SOM epoch, NOT a crossJoin):
 
 * **assignment** — the (k, dim) centroid matrix broadcasts (k·dim·8 B,
   KBs for any sane k); one Arrow pass over the corpus computes the
-  per-batch ‖x−c‖² GEMM and the argmin.  The corpus never shuffles.
-* **update** — the same pass emits per-batch per-cluster partial sums
-  (count, Σx): ≤ batches·k tiny rows collect to the driver, which
-  applies the mean — the SOM partial-aggregation shape, traffic
-  O(partitions · k · dim) regardless of row count.
+  ‖x−c‖² GEMM and the argmin.  The corpus never shuffles.
+* **update** — the same pass sums per-cluster (count, Σx) per task —
+  the SOM epoch's ``epoch_sums`` with the euclidean kernel — and
+  ``plans.exchange.partial_sums`` adds the tasks' partials on the
+  driver, which applies the mean: traffic O(partitions · k · dim)
+  regardless of row count.
 * **iteration** — T Lloyd steps are T jobs + T driver barriers
   (irreducible in Spark's execution model, same argument as the SOM
   epoch loop); the feature column is persisted across them.
@@ -52,12 +53,10 @@ def kmeans_init(df: DataFrame, vec_col: str = "embedding",
     return _as_matrix([r["v"] for r in rows])
 
 
-def _assign_kernel(bc, emit_partials: bool, k: int,
-                   keep: list[str] | None = None):
+def _assign_kernel(bc, keep: list[str] | None = None):
     """mapInPandas kernel: per-batch argmin over the broadcast centroid
-    matrix; optionally also emits per-cluster (count, Σx) partials.
-    ``keep`` columns pass through untouched (no join needed to carry
-    payloads alongside the assignment)."""
+    matrix.  ``keep`` columns pass through untouched (no join needed to
+    carry payloads alongside the assignment)."""
     import pandas as pd
 
     def fn(batches):
@@ -71,28 +70,38 @@ def _assign_kernel(bc, emit_partials: bool, k: int,
             # the argmin only needs the GEMM term
             scores = -2.0 * (X @ C.T) + c_sq[None, :]
             a = scores.argmin(axis=1)      # ties → lowest index
-            if emit_partials:
-                cnt = np.bincount(a, minlength=k)
-                S = np.zeros((k, X.shape[1]))
-                np.add.at(S, a, X)
-                yield pd.DataFrame({
-                    "cluster": np.arange(k, dtype=np.int32),
-                    "cnt": cnt.astype(np.int64),
-                    "vsum": [s.tobytes() for s in S],
-                })
-            else:
-                x_sq = (X * X).sum(axis=1)
-                d2 = x_sq + scores[np.arange(len(a)), a]
-                out = {
-                    "id": pdf["id"].to_numpy(np.int64),
-                    "cluster_id": a.astype(np.int32),
-                    "dist2": np.maximum(d2, 0.0),
-                }
-                for c in (keep or []):
-                    out[c] = pdf[c]
-                yield pd.DataFrame(out)
+            x_sq = (X * X).sum(axis=1)
+            d2 = x_sq + scores[np.arange(len(a)), a]
+            out = {
+                "id": pdf["id"].to_numpy(np.int64),
+                "cluster_id": a.astype(np.int32),
+                "dist2": np.maximum(d2, 0.0),
+            }
+            for c in (keep or []):
+                out[c] = pdf[c]
+            yield pd.DataFrame(out)
 
     return fn
+
+
+def _lloyd_parts(bc, k: int, dim: int):
+    """A task's part of one Lloyd step (``plans.exchange.partial_sums``):
+    per-cluster (count, Σx) of its Arrow batches against the broadcast
+    centroids — ``epoch_sums`` under the euclidean kernel, whose
+    argmin is the nearest centroid (ties → lowest index)."""
+    from ..functions.distances import codebook_sq_norms, resolve_distance
+    from ..plans.exchange import feature_matrix
+    from ..plans.training import epoch_sums
+
+    kernel = resolve_distance("euclidean")
+
+    def parts(batches):
+        C = bc.value
+        yield epoch_sums(
+            kernel, (feature_matrix(b.column(0), dim, np.float64)
+                     for b in batches), C, codebook_sq_norms(C), k, dim)
+
+    return parts
 
 
 def kmeans_fit(df: DataFrame, vec_col: str = "embedding",
@@ -107,28 +116,20 @@ def kmeans_fit(df: DataFrame, vec_col: str = "embedding",
     """
     from pyspark.storagelevel import StorageLevel
 
-    from ..plans.exchange import ship_package
+    from ..plans.exchange import partial_sums
 
-    spark = df.sparkSession
-    ship_package(spark)
-    sc = spark.sparkContext
+    sc = df.sparkSession.sparkContext
     C = kmeans_init(df, vec_col, id_col, k) if init is None \
         else np.asarray(init, np.float64)
-    k = len(C)
+    k, dim = C.shape
+    zeros = (np.zeros(k), np.zeros((k, dim)))
     feats = df.select(F.col(vec_col).alias("v")) \
         .persist(StorageLevel.MEMORY_AND_DISK)
     try:
         for _ in range(int(max_iter)):
             bc = sc.broadcast(C)
-            partials = feats.mapInPandas(
-                _assign_kernel(bc, True, k),
-                "cluster int, cnt bigint, vsum binary").collect()
+            cnt, S = partial_sums(feats, zeros, _lloyd_parts(bc, k, dim))
             bc.unpersist(blocking=False)
-            cnt = np.zeros(k, np.int64)
-            S = np.zeros_like(C)
-            for r in partials:
-                cnt[r["cluster"]] += r["cnt"]
-                S[r["cluster"]] += np.frombuffer(r["vsum"], np.float64)
             nz = cnt > 0
             new = C.copy()
             new[nz] = S[nz] / cnt[nz, None]
@@ -167,7 +168,7 @@ def kmeans_assign(df: DataFrame, centroids: np.ndarray,
     keep_schema = "".join(
         f", {c} {df.schema[c].dataType.simpleString()}" for c in keep)
     out = slim.mapInPandas(
-        _assign_kernel(bc, False, len(C), keep),
+        _assign_kernel(bc, keep),
         f"id bigint, cluster_id int, dist2 double{keep_schema}")
     out = out.withColumnRenamed("id", id_col) \
              .withColumnRenamed("cluster_id", out_col)

@@ -387,12 +387,13 @@ def pca_fit(df: DataFrame, vec_col: str = "embedding", dim: int = 64,
             n_components: int = 2) -> dict:
     """Fit a PCA basis over an embedding column in ONE distributed pass.
 
-    Each partition reduces to (n, Σx, ΣxxT) — the same moments shape as
-    the SOM's distributed covariance (operators/som.py
-    ``_distributed_covariance``, reference parity xpysom.py:762-785) —
-    so driver traffic is O(partitions · dim²) regardless of rows; the
-    dim×dim eigensolve runs on the driver (dim ≤ a few thousand — an
-    embedding column, not a feature explosion).
+    One ``plans.exchange.feature_covariance`` job — the moments
+    (n, Σx, ΣxxT) that the SOM's distributed covariance also uses
+    (operators/som.py ``_distributed_covariance``, reference parity
+    xpysom.py:762-785), per Arrow batch, summed per task — so driver
+    traffic is O(partitions · dim²) regardless of rows; the dim×dim
+    eigensolve runs on the driver (dim ≤ a few thousand — an embedding
+    column, not a feature explosion).
 
     Sign convention: each component's largest-|entry| coordinate is made
     positive, so the basis is deterministic (eigh's sign is arbitrary).
@@ -400,40 +401,12 @@ def pca_fit(df: DataFrame, vec_col: str = "embedding", dim: int = 64,
     Returns ``{"mean": (dim,), "components": (n_components, dim),
     "explained_variance": (n_components,), "explained_ratio": ...}``.
     """
-    from ..plans.exchange import ship_package
+    from ..plans.exchange import feature_covariance
 
     if not (1 <= n_components <= dim):
         raise ValueError(f"n_components must be in [1, {dim}], got "
                          f"{n_components}")
-    spark = df.sparkSession
-    ship_package(spark)
-
-    def partials(batches):
-        import pandas as pd
-        n = 0
-        sx = np.zeros(dim)
-        sxx = np.zeros((dim, dim))
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.stack([np.asarray(v, np.float64) for v in pdf["v"]])
-            n += len(X)
-            sx += X.sum(axis=0)
-            sxx += X.T @ X
-        yield pd.DataFrame({"n": [n], "sx": [sx.tobytes()],
-                            "sxx": [sxx.tobytes()]})
-
-    rows = df.select(F.col(vec_col).alias("v")).mapInPandas(
-        partials, "n bigint, sx binary, sxx binary").collect()
-    n = sum(r["n"] for r in rows)
-    if n < 2:
-        raise ValueError(f"pca_fit: need >= 2 rows, got {n}")
-    sx = np.sum([np.frombuffer(r["sx"]).reshape(dim) for r in rows],
-                axis=0)
-    sxx = np.sum([np.frombuffer(r["sxx"]).reshape(dim, dim)
-                  for r in rows], axis=0)
-    mean = sx / n
-    cov = (sxx - n * np.outer(mean, mean)) / (n - 1)
+    mean, cov = feature_covariance(df.select(vec_col), dim)
     evals, evecs = np.linalg.eigh(cov)          # ascending
     order = np.argsort(-evals)[:n_components]
     comps = evecs[:, order].T                   # (n_components, dim)

@@ -155,17 +155,10 @@ def ridge_score(df: DataFrame, model: dict,
 GRAD_DECIMALS = 9
 
 #: hashed-feature weight vectors travel by broadcast (8 B/bucket) and
-#: come back as one int64 partial blob per partition per step; 2^20
-#: buckets = an 8 MB broadcast and 16 MB blobs — the fastText-scale
-#: ceiling.  Above the tree threshold the blobs reduce through one
-#: bucketed applyInPandas level so the driver never materializes
-#: O(partitions) of them (the SOM trainer's fanout idiom).
+#: come back as one int64 partial blob pair per partition per step
+#: (``plans.exchange.partial_sums``); 2^20 buckets = an 8 MB broadcast
+#: and 16 MB blobs — the fastText-scale ceiling.
 MAX_HASHED_DIM = 1 << 20
-
-#: collect partials directly while partitions × blob stays under this;
-#: beyond it, insert the tree level
-_TREE_REDUCE_BYTES = 64 << 20
-_TREE_FANOUT = 8
 
 
 def _q(col: "F.Column") -> "F.Column":
@@ -377,19 +370,16 @@ def _featurize_factory(text_name: str, carry: list,
     return fn
 
 
-def _grad_kernel_factory(bc, n_buckets: int, fanout: int = _TREE_FANOUT):
-    """mapInArrow gradient/curvature partials — the SOM-trainer shape
-    (plans/training.py:82): weights travel via broadcast, each
-    partition emits ONE row of exact int64 e9-quantized sums
-    (index 0 = intercept, 1.. = buckets), tagged ``pid % fanout`` for
-    the optional tree-reduce level.  Per-bucket |Σ| stays under int64
-    below ~9e9 documents per bucket — far beyond any corpus."""
+def _grad_kernel_factory(bc, n_buckets: int):
+    """A task's gradient/curvature partial for
+    ``plans.exchange.partial_sums`` — the SOM-epoch job: weights travel
+    via broadcast, each partition sums ONE pair of exact int64
+    e9-quantized vectors (index 0 = intercept, 1.. = buckets).
+    Per-bucket |Σ| stays under int64 below ~9e9 documents per bucket —
+    far beyond any corpus."""
     s = float(10 ** GRAD_DECIMALS)
 
     def fn(batches):
-        import pyarrow as pa
-        from pyspark import TaskContext
-
         w, b = bc.value
         g_acc = np.zeros(n_buckets + 1, dtype=np.int64)
         h_acc = np.zeros(n_buckets + 1, dtype=np.int64)
@@ -429,29 +419,7 @@ def _grad_kernel_factory(bc, n_buckets: int, fanout: int = _TREE_FANOUT):
                          / (ntr * ntr) * s).astype(np.int64)
             np.add.at(g_acc, flat_bs + 1, gq)
             np.add.at(h_acc, flat_bs + 1, hq)
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        yield pa.RecordBatch.from_pydict(
-            {"blk": pa.array([pid % fanout], pa.int32()),
-             "g": pa.array([g_acc.tobytes()], pa.binary()),
-             "h": pa.array([h_acc.tobytes()], pa.binary())})
-
-    return fn
-
-
-def _blob_reducer(n_buckets: int):
-    """applyInPandas per-block partial merge: sums of int64 blobs."""
-    def fn(pdf):
-        import pandas as pd
-
-        g = np.zeros(n_buckets + 1, dtype=np.int64)
-        h = np.zeros(n_buckets + 1, dtype=np.int64)
-        for blob in pdf["g"]:
-            g += np.frombuffer(blob, dtype=np.int64)
-        for blob in pdf["h"]:
-            h += np.frombuffer(blob, dtype=np.int64)
-        return pd.DataFrame({"blk": [int(pdf["blk"].iloc[0])],
-                             "g": [g.tobytes()], "h": [h.tobytes()]})
+        yield g_acc, h_acc
 
     return fn
 
@@ -461,7 +429,6 @@ def logreg_fit_hashed(df: DataFrame, text_col: str, id_col: str,
                       n_iter: int = 15, lr: float = 1.0,
                       l2: float = 1e-6, max_step: float = 1.0,
                       fold_bigrams: bool = False,
-                      tree_reduce: bool | None = None,
                       weight_col: str | None = None) -> dict:
     """fastText/CCNet-shape quality classifier: logistic regression
     over hashed unigram+bigram bag-of-ngrams features (length-
@@ -482,16 +449,13 @@ def logreg_fit_hashed(df: DataFrame, text_col: str, id_col: str,
       mapInPandas pass (whitespace tokens + the engine-wide 48-bit
       md5 fold), persisted as per-doc (bucket, count) arrays; no
       shuffle, the text never moves again;
-    * per step, weights broadcast (8 B/bucket) and each partition's
-      mapInArrow kernel returns ONE pair of exact int64 e9-quantized
-      blobs — gradient Σ resid·x_b and curvature Σ p(1−p)·x_b²,
-      intercept at index 0.  Per-step traffic is
-      partitions × 16 B × (n_buckets+1), independent of corpus size;
-    * when partitions × blob outgrows ``_TREE_REDUCE_BYTES`` the
-      blobs reduce through one bucketed applyInPandas level (the SOM
-      trainer's fanout idiom) so the driver sums ``fanout`` blobs,
-      never O(partitions).  ``tree_reduce`` forces either path (the
-      two are bit-identical — integer sums commute; pinned by test).
+    * per step, weights broadcast (8 B/bucket) and each partition
+      returns ONE pair of exact int64 e9-quantized blobs — gradient
+      Σ resid·x_b and curvature Σ p(1−p)·x_b², intercept at index 0 —
+      through ``plans.exchange.partial_sums``, the SOM epoch's job.
+      Per-step traffic is partitions × 16 B × (n_buckets+1),
+      independent of corpus size; integer sums commute, so its
+      bucketed merge gives the same bits as the flat one.
 
     d ≤ 2^20 (the fastText-scale ceiling: an 8 MB broadcast per
     step); above that, shard the model or cut the hash space.
@@ -502,7 +466,7 @@ def logreg_fit_hashed(df: DataFrame, text_col: str, id_col: str,
     "intercept", "n_buckets", "fold_bigrams", "n", "n_iter_run",
     "lr", "l2"}``.
     """
-    from ..plans.exchange import ship_package
+    from ..plans.exchange import partial_sums, ship_package
 
     ship_package(df.sparkSession)
     if not 2 <= n_buckets <= MAX_HASHED_DIM:
@@ -547,26 +511,12 @@ def logreg_fit_hashed(df: DataFrame, text_col: str, id_col: str,
         w = np.zeros(n_buckets)
         b = 0.0
         s = float(10 ** GRAD_DECIMALS)
-        blob = 16 * (n_buckets + 1)
-        n_parts = docs.rdd.getNumPartitions()
-        tree = (n_parts * blob > _TREE_REDUCE_BYTES
-                if tree_reduce is None else bool(tree_reduce))
+        zeros = (np.zeros(n_buckets + 1, dtype=np.int64),) * 2
         for it in range(1, n_iter + 1):
             bc = sc.broadcast((w, b))
-            partials = docs.mapInArrow(
-                _grad_kernel_factory(bc, n_buckets),
-                "blk int, g binary, h binary")
-            if tree:
-                partials = partials.groupBy("blk").applyInPandas(
-                    _blob_reducer(n_buckets),
-                    "blk int, g binary, h binary")
-            parts = partials.collect()
+            g_tot, h_tot = partial_sums(
+                docs, zeros, _grad_kernel_factory(bc, n_buckets))
             bc.destroy()
-            g_tot = np.zeros(n_buckets + 1, dtype=np.int64)
-            h_tot = np.zeros(n_buckets + 1, dtype=np.int64)
-            for row in parts:
-                g_tot += np.frombuffer(row["g"], dtype=np.int64)
-                h_tot += np.frombuffer(row["h"], dtype=np.int64)
             g = g_tot.astype(np.float64) / s
             hh = h_tot.astype(np.float64) / s
             step_b = g[0] / (hh[0] + 1e-9)

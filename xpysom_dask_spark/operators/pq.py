@@ -12,11 +12,11 @@ it is expressed Spark-first:
 * **fit** (:func:`pq_fit`) — the m sub-space KMeans problems share ONE
   Arrow pass per Lloyd iteration: the kernel reshapes each batch to
   (n, m, dsub), computes all m argmins against the broadcast
-  (m, k, dsub) codebook, and emits per-(sub, cluster) partial
-  (count, Σx) rows — ≤ partitions·m·k tiny rows to the driver per
-  step, the same partial-aggregation shape as the SOM epoch
-  (plans/training.py) and :func:`~.clustering.kmeans_fit`.  The corpus
-  never shuffles; driver state is (m·k·dsub) doubles.
+  (m, k, dsub) codebook, and sums (count, Σx) per (sub, cluster) with
+  ``bmu_cell_sums`` — one (m, k) + (m, k, dsub) partial per task,
+  summed on the driver by ``plans.exchange.partial_sums``, the job of
+  the SOM epoch (plans/training.py) and :func:`~.clustering.kmeans_fit`.
+  The corpus never shuffles; driver state is (m·k·dsub) doubles.
 * **encode** (:func:`pq_encode`) — broadcast codebook, one narrow
   mapInPandas pass → `codes array<int>` (+ optional reconstruction
   error).  No shuffle: at 100 TB this is a scan-speed re-writing of
@@ -102,59 +102,37 @@ def pq_fit(df: DataFrame, vec_col: str = "embedding",
     rule); stops after ``max_iter`` steps or when the max codeword
     shift² ≤ ``tol``.  Broadcast bound: m·k·dsub·8 B — ~131 KB at the
     FAISS-standard m=8, k=256, dim=64."""
-    import pandas as pd
-
     from pyspark.storagelevel import StorageLevel
 
-    from ..plans.exchange import ship_package
+    from ..plans.exchange import feature_matrix, partial_sums
+    from ..plans.training import bmu_cell_sums
 
-    spark = df.sparkSession
-    ship_package(spark)
-    sc = spark.sparkContext
+    sc = df.sparkSession.sparkContext
     C = pq_init(df, vec_col, id_col, m, k) if init is None \
         else np.asarray(init, np.float64)
     m, k, dsub = C.shape
 
-    def make_kernel(bc):
-        def fn(batches):
+    def make_parts(bc):
+        def parts(batches):
             Cb = bc.value                      # (m, k, dsub)
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                X = _as_matrix(pdf["v"]).reshape(len(pdf), m, dsub)
-                subs, clus, cnts, sums = [], [], [], []
+            for b in batches:
+                X = feature_matrix(b.column(0), m * dsub, np.float64) \
+                    .reshape(-1, m, dsub)
+                cnt, S = np.empty((m, k)), np.empty((m, k, dsub))
                 for s in range(m):
                     a = _seq_sq_dists(X[:, s, :], Cb[s]).argmin(axis=1)
-                    cnt = np.bincount(a, minlength=k)
-                    S = np.zeros((k, dsub))
-                    np.add.at(S, a, X[:, s, :])
-                    subs.append(np.full(k, s, np.int32))
-                    clus.append(np.arange(k, dtype=np.int32))
-                    cnts.append(cnt.astype(np.int64))
-                    sums.extend(row.tobytes() for row in S)
-                yield pd.DataFrame({
-                    "sub": np.concatenate(subs),
-                    "cluster": np.concatenate(clus),
-                    "cnt": np.concatenate(cnts),
-                    "vsum": sums,
-                })
-        return fn
+                    cnt[s], S[s] = bmu_cell_sums(X[:, s, :], a, k)
+                yield cnt, S
+        return parts
 
+    zeros = (np.zeros((m, k)), np.zeros_like(C))
     feats = df.select(F.col(vec_col).alias("v")) \
         .persist(StorageLevel.MEMORY_AND_DISK)
     try:
         for _ in range(int(max_iter)):
             bc = sc.broadcast(C)
-            partials = feats.mapInPandas(
-                make_kernel(bc),
-                "sub int, cluster int, cnt bigint, vsum binary").collect()
+            cnt, S = partial_sums(feats, zeros, make_parts(bc))
             bc.unpersist(blocking=False)
-            cnt = np.zeros((m, k), np.int64)
-            S = np.zeros_like(C)
-            for r in partials:
-                cnt[r["sub"], r["cluster"]] += r["cnt"]
-                S[r["sub"], r["cluster"]] += np.frombuffer(
-                    r["vsum"], np.float64)
             nz = cnt > 0
             new = C.copy()
             new[nz] = S[nz] / cnt[nz][:, None]

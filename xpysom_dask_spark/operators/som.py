@@ -10,8 +10,8 @@ xpysom.py:72) so a reference user can switch with minimal edits:
   reference's host path (ingestion dispatch, xpysom.py:484-510).
 * training is one epoch loop (``SparkSom._epochs``) over per-cell sums
   from the driver or from the MLlib-style job in ``plans.training``
-  (broadcast codebook → Arrow partials → tree merge), with the same
-  weights either way; scoring/metrics ride
+  (broadcast codebook → Arrow partials → ``plans.exchange.partial_sums``),
+  with the same weights either way; scoring/metrics ride
   ``plans.scoring.attach`` plus plain declarative aggregates that Catalyst
   plans (``groupBy().count()``, ``collect_list``, ``avg`` — SURVEY.md §2.5
   X16, X21-X23).
@@ -58,10 +58,6 @@ class SparkSom:
         np.float64 for oracle-grade comparisons.
     n_parallel : the reference's mini-batch bound, ignored (warned): every
         kernel pass runs in grid-sized ``plans.training.kernel_map`` chunks.
-    agg_fanout / collect_threshold : scale knobs for the partial-tensor
-        tree merge — with more partitions than ``collect_threshold`` the
-        per-partition partials are first reduced into ``agg_fanout``
-        buckets so the driver never collects O(partitions) tensors.
     fuse_local_bytes : driver-memory guard of the fused training path
         (0 disables fusion).  ``train(DataFrame)`` fuses — collects the
         features once through Arrow and runs every epoch driver-side,
@@ -80,7 +76,11 @@ class SparkSom:
         weights; the choice moves only the cost.  After a DataFrame fit,
         ``training_info_`` records the path taken and why, and on the
         fused path the kernel thread count, whether OpenBLAS was pinned
-        to one thread, and per-epoch ``bmu_s`` / ``merge_s``.
+        to one thread, and per-epoch ``bmu_s`` / ``merge_s``.  The
+        distributed epochs sum their per-partition partials through
+        ``plans.exchange.partial_sums``, which merges them in buckets
+        first once partitions × partial bytes pass its budget; there is
+        no merge option.
     """
 
     def __init__(self, x, y, input_len,
@@ -93,7 +93,6 @@ class SparkSom:
                  activation_distance_kwargs=None,
                  random_seed=None, compact_support=False,
                  features_col="features", dtype=np.float32,
-                 agg_fanout=64, collect_threshold=512,
                  fuse_local_bytes=64 << 20,
                  n_parallel=None, xp=None, use_dask=None,
                  dask_chunks=None):
@@ -144,8 +143,6 @@ class SparkSom:
         self.topology = topology
         self.features_col = features_col
         self.dtype = np.dtype(dtype).type
-        self.agg_fanout = int(agg_fanout)
-        self.collect_threshold = int(collect_threshold)
         self.fuse_local_bytes = int(fuse_local_bytes)
 
         self._random_generator = np.random.RandomState(random_seed)
@@ -272,10 +269,15 @@ class SparkSom:
                                  num_epochs, iter_beg, iter_end,
                                  verbose=verbose)
 
-    def _cell_influence(self, sig):
-        """(x·y, x·y) neighborhood matrix ``G[k, c]`` = influence of a
-        BMU at flat cell ``k`` on cell ``c`` — the per-epoch
-        factorization of the batch update.
+    #: influence row-block budget for _apply_influence: one float64
+    #: block of rows × K bytes (64 MB: the whole (K, K) matrix up to a
+    #: 2900-cell grid)
+    influence_block_bytes = 64 * 1024 * 1024
+
+    def _apply_influence(self, S, c, sig, eta):
+        """``(num, den) = η·Gᵀ·(S, c)`` for the (x·y, x·y) neighborhood
+        matrix ``G[k, c]`` = influence of a BMU at flat cell ``k`` on
+        cell ``c`` — the per-epoch factorization of the batch update.
 
         A sample's influence row depends only on its WINNER CELL, so
         the epoch sums factor through per-cell statistics:
@@ -286,30 +288,13 @@ class SparkSom:
         scatters remain, and the neighborhood function is evaluated on
         x·y points once per epoch instead of n (the big win for the
         non-separable hexagonal kernels).
-        """
-        K = self._x * self._y
-        return np.asarray(self._influence(self._ux, self._uy, sig),
-                          dtype=np.float64).reshape(K, K)
 
-    #: single-block G budget for _apply_influence: full (K, K) float64
-    #: materialization is allowed up to this many bytes (64 MB ≈ a
-    #: 2900-cell grid); beyond it the product streams in row blocks
-    influence_block_bytes = 64 * 1024 * 1024
-
-    def _apply_influence(self, S, c, sig, eta):
-        """``(num, den) = η·Gᵀ·(S, c)`` without bounding the grid size
-        (VERDICT r03 #4): for small grids evaluate the full (K, K)
-        influence matrix in one GEMM; above ``influence_block_bytes``
-        stream over ROW blocks of G — ``num = Σ_b G[b]ᵀ·S[b]`` — so peak
-        memory is O(block·K) and the neighborhood closure evaluates each
-        winner-cell row exactly once either way (identical arithmetic
-        per element; only the float64 accumulation grouping differs,
-        and only on grids past the budget)."""
+        G streams in ROW blocks of ``influence_block_bytes`` —
+        ``num = Σ_b G[b]ᵀ·S[b]`` — so peak memory is O(block·K) on any
+        grid (VERDICT r03 #4); one block holds all of G while
+        K²·8 ≤ ``influence_block_bytes``."""
         K = self._x * self._y
         d = S.shape[1]
-        if K * K * 8 <= self.influence_block_bytes:
-            G = self._cell_influence(sig) * eta
-            return G.T @ S, G.T @ c
         rows_per_block = max(1, self.influence_block_bytes // (K * 8))
         num = np.zeros((K, d), dtype=np.float64)
         den = np.zeros(K, dtype=np.float64)
@@ -677,36 +662,9 @@ class SparkSom:
                 self._weights[i, j] = c1 * pc[pc_order[0]] + c2 * pc[pc_order[1]]
 
     def _distributed_covariance(self, df):
-        from ..plans.exchange import feature_matrix, ship_package
-        ship_package(df.sparkSession)
-        d = self._input_len
-        feat = self.features_col
-
-        def partials(batches):
-            import pyarrow as pa
-            n = 0
-            sx = np.zeros(d)
-            sxx = np.zeros((d, d))
-            for batch in batches:
-                X = feature_matrix(
-                    batch.column(batch.schema.names.index(feat)), d,
-                    np.float64)
-                n += len(X)
-                sx += X.sum(axis=0)
-                sxx += X.T @ X
-            yield pa.RecordBatch.from_pydict({
-                "n": pa.array([n], pa.int64()),
-                "sx": pa.array([sx.tobytes()], pa.binary()),
-                "sxx": pa.array([sxx.tobytes()], pa.binary()),
-            })
-
-        rows = df.mapInArrow(partials, "n bigint, sx binary, sxx binary").collect()
-        n = sum(r["n"] for r in rows)
-        sx = np.sum([np.frombuffer(r["sx"]).reshape(d) for r in rows], axis=0)
-        sxx = np.sum([np.frombuffer(r["sxx"]).reshape(d, d) for r in rows],
-                     axis=0)
-        mean = sx / n
-        return (sxx - n * np.outer(mean, mean)) / (n - 1)
+        from ..plans.exchange import feature_covariance
+        return feature_covariance(df.select(self.features_col),
+                                  self._input_len)[1]
 
     # ------------------------------------------------------------------ #
     # persistence (X24, S7)

@@ -11,10 +11,16 @@ by ``spark.sql.execution.arrow.maxRecordsPerBatch``.
 how the SparkSession was created (it zips the source tree and registers it
 via ``sc.addPyFile`` once per session) so UDF closures can be pickled by
 reference.
+
+``partial_sums`` is the one job of every fit merged on the driver (SOM
+epochs, k-means and PQ Lloyd steps, covariance, the hashed logistic
+regression): commutative partial sums per task, one row of blobs each,
+summed on the driver — PAPER.md §1.1's epoch accumulators.
 """
 
 from __future__ import annotations
 
+import math
 import os
 import tempfile
 import zipfile
@@ -154,3 +160,108 @@ def matrix_to_list_array(mat: np.ndarray, value_type=pa.float32()) -> pa.ListArr
     offsets = pa.array(np.arange(0, (n + 1) * d, d, dtype=np.int32))
     values = pa.array(np.ascontiguousarray(mat).ravel(), type=value_type)
     return pa.ListArray.from_arrays(offsets, values)
+
+
+#: ``partial_sums`` collects one partial per partition while partitions ×
+#: partial bytes stay at most this; beyond it the partials first merge in
+#: ⌈√P⌉ bucketed groups, so the driver never holds O(P) of them.
+TREE_MERGE_BYTES = 64 << 20
+
+
+def _zeros(spec):
+    return [np.zeros(shape, dtype) for shape, dtype in spec]
+
+
+def _add_blobs(acc, rows):
+    """Add each row's blobs, one per array of ``acc``, into ``acc``."""
+    for blobs in rows:
+        for a, blob in zip(acc, blobs):
+            a += np.frombuffer(blob, a.dtype).reshape(a.shape)
+    return acc
+
+
+def _task_fold(spec, parts):
+    """The ``mapInArrow`` function of ``partial_sums``: the partial
+    tuples ``parts`` computes from the task's Arrow batches, added into
+    zeros of ``spec`` ((shape, dtype) per array) and emitted as one row
+    ``(pid, p0, p1, ...)`` of blobs."""
+
+    def fn(batches):
+        from pyspark import TaskContext
+
+        acc = _zeros(spec)
+        for part in parts(batches):
+            for a, p in zip(acc, part):
+                a += p
+        ctx = TaskContext.get()
+        pid = ctx.partitionId() if ctx is not None else 0
+        yield pa.RecordBatch.from_arrays(
+            [pa.array([pid], pa.int32())]
+            + [pa.array([a.tobytes()], pa.binary()) for a in acc],
+            ["pid"] + [f"p{i}" for i in range(len(acc))])
+
+    return fn
+
+
+def partial_sums(df, zeros, parts):
+    """One Spark job over ``df`` that returns a fit's partial sums,
+    summed on the driver into arrays shaped like ``zeros`` (a tuple of
+    float64 or int64 arrays).
+
+    ``parts(batches)`` maps a task's Arrow batches of ``df`` to partial
+    tuples shaped like ``zeros`` — one per block, or one for the whole
+    task.  Each task adds them into one set of accumulators and emits
+    them as one row of blobs.  When partitions × blob bytes exceed
+    ``TREE_MERGE_BYTES`` the rows first merge in ⌈√P⌉ groups of
+    consecutive partitions (``groupBy().applyInPandas``).  Every merge
+    adds in partition order, so the result is a function of the
+    partitioning alone; integer sums, and float sums of values on a
+    coarse enough grid, are the same bits either way.
+    """
+    ship_package(df.sparkSession)
+    spec = [(z.shape, z.dtype) for z in zeros]
+    names = [f"p{i}" for i in range(len(spec))]
+    schema = "pid int, " + ", ".join(f"{n} binary" for n in names)
+    rows = df.mapInArrow(_task_fold(spec, parts), schema)
+    n_parts = df.rdd.getNumPartitions()
+    if n_parts * sum(z.nbytes for z in zeros) > TREE_MERGE_BYTES:
+        groups = math.isqrt(n_parts - 1) + 1          # ⌈√P⌉
+        per = -(-n_parts // groups)
+
+        def merge(pdf):
+            import pandas as pd
+
+            pdf = pdf.sort_values("pid")
+            acc = _add_blobs(_zeros(spec), zip(*(pdf[n] for n in names)))
+            return pd.DataFrame({"pid": [int(pdf["pid"].iloc[0])],
+                                 **{n: [a.tobytes()]
+                                    for n, a in zip(names, acc)}})
+
+        from pyspark.sql import functions as F
+        rows = (rows.withColumn("bucket", F.expr(f"pid div {per}"))
+                .groupBy("bucket").applyInPandas(merge, schema))
+    collected = sorted(rows.collect(), key=lambda r: r["pid"])
+    acc = _add_blobs(_zeros(spec),
+                     (tuple(r[n] for n in names) for r in collected))
+    return tuple(acc)
+
+
+def feature_covariance(df, d):
+    """``(mean, cov)`` of the ``d``-wide rows of ``df``'s first column
+    (array<float> or array<double>): one ``partial_sums`` job over
+    per-batch moments (n, Σx, ΣxxT) in float64, then the sample
+    covariance ``(ΣxxT − n·x̄x̄ᵀ)/(n − 1)`` on the driver.  Driver traffic
+    is O(partitions · d²) whatever the row count."""
+
+    def parts(batches):
+        for b in batches:
+            X = feature_matrix(b.column(0), d, np.float64)
+            yield len(X), X.sum(axis=0), X.T @ X
+
+    n, sx, sxx = partial_sums(
+        df, (np.zeros((), np.int64), np.zeros(d), np.zeros((d, d))), parts)
+    n = int(n)
+    if n < 2:
+        raise ValueError(f"covariance needs >= 2 rows, got {n}")
+    mean = sx / n
+    return mean, (sxx - n * np.outer(mean, mean)) / (n - 1)

@@ -7,16 +7,17 @@ One Spark job per epoch, shaped exactly like MLlib's KMeans iteration
     executors: mapInArrow over the persisted features — per partition, one
                (cell-count, cell-feature-sum) partial pair from BMU argmin
                + bincount scatters; the neighborhood NEVER runs on workers
-    exchange:  partials collected directly when the partition count is
-               small; at scale, a bucketed ``groupBy().applyInPandas`` tree
-               level first reduces P partials to ``agg_fanout`` rows so the
-               driver never materializes O(P) tensors
+    exchange:  ``exchange.partial_sums`` — one row of (c, S) blobs per
+               partition, summed on the driver in partition order; past
+               its byte budget a bucketed ``groupBy().applyInPandas``
+               level first merges them in ⌈√P⌉ groups
     driver:    (num, den) = Gᵀ·(S, c) via SparkSom._apply_influence —
                by linearity the (K, K) influence matrix applies AFTER the
-               merge, so it is never broadcast and never shipped; above a
-               memory budget it evaluates in row blocks (O(block·K), VERDICT
-               r03 #4), so a 100×100 grid trains without any O(K²) tensor
-               leaving the driver — then W ← where(den ≠ 0, num/den, W)
+               merge, so it is never broadcast and never shipped; it
+               evaluates in row blocks of a memory budget (O(block·K),
+               VERDICT r03 #4; one block up to ~53×53), so a 100×100 grid
+               trains without any O(K²) tensor — then
+               W ← where(den ≠ 0, num/den, W)
 
 Contrasts with the reference's dask path (xpysom.py:545-558), which
 re-ships the codebook inside every task closure: we torrent-broadcast it
@@ -71,9 +72,7 @@ from functools import lru_cache
 
 import numpy as np
 
-from .exchange import feature_matrix, ship_package
-
-_PARTIAL_SCHEMA = "bucket int, num binary, den binary"
+from .exchange import feature_matrix, partial_sums
 
 #: Largest per-epoch work n·K·d × kernel ``relative_cost`` the driver
 #: loop takes on.  Fused (BMU search on 4 threads) vs distributed fit,
@@ -283,71 +282,23 @@ def epoch_sums(kernel, blocks, w_flat, w_sq, n_cells, d):
     return c, S
 
 
-def _partial_update_factory(bc, kernel, shape, dtype, fanout):
-    """The per-partition update for ``mapInArrow``: ``epoch_sums`` of
-    the partition's Arrow batches (SURVEY.md §4 O7) against the
+def _epoch_parts(bc, kernel, n_cells, d, dtype):
+    """A task's part of a distributed epoch (``exchange.partial_sums``):
+    ``epoch_sums`` of its Arrow batches (SURVEY.md §4 O7) against the
     codebook and norms broadcast in ``bc``.  The partial is the G-FREE
     per-cell ``(c, S)`` in float64 — by linearity ``Gᵀ·ΣS_p =
     Σ(Gᵀ·S_p)``, so the influence matrix applies once on the driver
     after the merge (parity with xpysom.py:420-443 via ``Σ_i
     g(bmu_i)⊗x_i = Gᵀ·S``); workers never see the neighborhood.
     """
-    x, y, d = shape
 
-    def fn(batches):
-        import pyarrow as pa
-        from pyspark import TaskContext
-
+    def parts(batches):
         w_flat, w_sq = bc.value
-        c, S = epoch_sums(
+        yield epoch_sums(
             kernel, (feature_matrix(b.column(0), d, dtype) for b in batches),
-            w_flat, w_sq, x * y, d)
-        ctx = TaskContext.get()
-        pid = ctx.partitionId() if ctx is not None else 0
-        yield pa.RecordBatch.from_pydict(
-            {
-                "bucket": pa.array([pid % fanout], pa.int32()),
-                "num": pa.array([S.tobytes()], pa.binary()),
-                "den": pa.array([c.tobytes()], pa.binary()),
-            }
-        )
+            w_flat, w_sq, n_cells, d)
 
-    return fn
-
-
-def _sum_partials(blobs, n_cells, d):
-    """Merge ``(num, den)`` = (S, c) float64 partial blobs → ``(c, S)``,
-    on the driver and in each bucket of the tree merge."""
-    c = np.zeros(n_cells, dtype=np.float64)
-    S = np.zeros((n_cells, d), dtype=np.float64)
-    for num, den in blobs:
-        S += np.frombuffer(num, dtype=np.float64).reshape(n_cells, d)
-        c += np.frombuffer(den, dtype=np.float64)
-    return c, S
-
-
-def _epoch_partials(som, feats, bc, two_level):
-    """One distributed epoch's Spark job: a ``(c, S)`` partial per
-    partition, first merged into ``som.agg_fanout`` bucket rows when
-    ``two_level``; returns the collected rows."""
-    ship_package(feats.sparkSession)
-    x, y, d = shape = som._weights.shape
-    fanout = som.agg_fanout if two_level else 1
-
-    def reduce_bucket(pdf):
-        import pandas as pd
-
-        c, S = _sum_partials(zip(pdf["num"], pdf["den"]), x * y, d)
-        return pd.DataFrame({"num": [S.tobytes()], "den": [c.tobytes()]})
-
-    partials = feats.mapInArrow(
-        _partial_update_factory(bc, som._distance, shape, som.dtype,
-                                fanout),
-        _PARTIAL_SCHEMA)
-    if two_level:
-        partials = partials.groupBy("bucket").applyInPandas(
-            reduce_bucket, "num binary, den binary")
-    return partials.collect()
+    return parts
 
 
 def choose_path(rows, cells, dim, itemsize, relative_cost, byte_cap):
@@ -435,14 +386,14 @@ def run_training(som, df, num_epochs, iter_beg=0, iter_end=None, verbose=False):
         return som._train_local(blocks, num_epochs, iter_beg, iter_end,
                                 verbose=verbose, info=info)
 
-    two_level = feats.rdd.getNumPartitions() > som.collect_threshold
+    zeros = (np.zeros(x * y), np.zeros((x * y, d)))
 
     def sums(w_flat, w_sq):
         bc = sc.broadcast((w_flat, w_sq))
         t1 = time.perf_counter()
-        rows = _epoch_partials(som, feats, bc, two_level)
+        c, S = partial_sums(feats, zeros, _epoch_parts(
+            bc, som._distance, x * y, d, som.dtype))
         t2 = time.perf_counter()
-        c, S = _sum_partials(((r["num"], r["den"]) for r in rows), x * y, d)
         bc.unpersist(blocking=False)
         return c, S, [("broadcast", t1), ("job", t2)]
 
