@@ -2,6 +2,11 @@
 BMU search, so the Spark plan reproduces the NumPy engine's weights bit
 for bit, and the scoring stage matches driver-side winners exactly."""
 
+import itertools
+import os
+import subprocess
+import sys
+import threading
 import warnings
 
 import numpy as np
@@ -302,6 +307,8 @@ def test_epoch_fusion_matches_distributed(spark, rand_data, capsys):
     assert info["blas_pinned"] == training.blas_pinned()
     out = capsys.readouterr().out
     assert "driver loop: %d kernel thread(s)" % info["threads"] in out
+    assert info["features_from"] == "collect"
+    assert "; features from collect in %.3f s)" % info["collect_s"] in out
     assert out.count(" bmu ") == 4 and out.count(" merge ") == 4
 
 
@@ -346,6 +353,201 @@ def test_unmaterialized_cache_falls_back_to_count(spark, rand_data):
         assert training.cached_row_count(df) == (True, len(rand_data))
     finally:
         df.unpersist()
+
+
+_groups = itertools.count()
+
+
+def _fit_jobs(spark, som, df, epochs=2):
+    """``som.train(df, epochs)`` in a job group of its own; returns the
+    number of Spark jobs the fit ran."""
+    sc, group = spark.sparkContext, "som-memo-fit-%d" % next(_groups)
+    sc.setJobGroup(group, group)
+    try:
+        som.train(df, epochs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _local(data, dtype=np.float32, epochs=2):
+    return SparkSom(5, 4, data.shape[1], random_seed=7,
+                    dtype=dtype).train(data, epochs).get_weights()
+
+
+def test_repeated_fit_of_materialized_cache_runs_no_job(spark, rand_data,
+                                                        capsys):
+    """A second fused fit of a materialized cache takes the first fit's
+    feature blocks and runs no Spark job — also through a
+    ``spark.table`` handle on the same cache — with the same weights."""
+    df = make_feature_df(spark, rand_data).persist()
+    try:
+        df.count()
+        first = SparkSom(5, 4, 6, random_seed=7)
+        assert _fit_jobs(spark, first, df) == 1
+        info = first.training_info_
+        assert info["features_from"] == "collect" and info["collect_s"] > 0
+        again = SparkSom(5, 4, 6, random_seed=7)
+        assert _fit_jobs(spark, again, df) == 0
+        info = again.training_info_
+        assert info["features_from"] == "memo" and "collect_s" not in info
+        assert (info["path"], info["rows_from"]) == ("fused", "stats")
+        np.testing.assert_array_equal(again.get_weights(),
+                                      first.get_weights())
+        np.testing.assert_array_equal(again.get_weights(), _local(rand_data))
+        SparkSom(5, 4, 6, random_seed=7).train(df, 1, verbose=True)
+        assert "; features from memo)" in capsys.readouterr().out
+        df.createOrReplaceTempView("som_memo_input")
+        table = SparkSom(5, 4, 6, random_seed=7)
+        assert _fit_jobs(spark, table, spark.table("som_memo_input")) == 0
+        np.testing.assert_array_equal(table.get_weights(),
+                                      first.get_weights())
+        # the kept blocks are read-only
+        key, blocks = training._features_memo
+        assert sum(len(b) for b in blocks) == len(rand_data)
+        for block in blocks:
+            assert not block.flags.writeable
+            with pytest.raises(ValueError):
+                block[0, 0] = 0
+    finally:
+        spark.catalog.dropTempView("som_memo_input")
+        df.unpersist()
+
+
+def test_fit_memo_misses_collect_again(spark, rand_data):
+    """Another features column, another model dtype and a recache each
+    collect again (one job), with the weights of a local fit on that
+    column in that dtype."""
+    rev = rand_data[:, ::-1].copy()
+    df = (make_feature_df(spark, rand_data)
+          .withColumn("reversed", F.reverse("features")).persist())
+    try:
+        df.count()
+        # each case differs from the one before it in one key part only
+        f64 = {"dtype": np.float64}
+        cases = [
+            ("first", {}, rand_data, np.float32),
+            ("other column", {"features_col": "reversed"}, rev, np.float32),
+            ("first column", {}, rand_data, np.float32),
+            ("float64", f64, rand_data, np.float64),
+            ("recache", f64, rand_data, np.float64),
+        ]
+        for name, kwargs, data, dtype in cases:
+            if name == "recache":
+                df.unpersist()
+                df.persist()
+                df.count()
+            som = SparkSom(5, 4, 6, random_seed=7, **kwargs)
+            assert _fit_jobs(spark, som, df) == 1, name
+            assert som.training_info_["features_from"] == "collect", name
+            np.testing.assert_array_equal(som.get_weights(),
+                                          _local(data, dtype), err_msg=name)
+    finally:
+        df.unpersist()
+
+
+def test_fit_memo_wrong_input_len_raises(spark, rand_data):
+    df = make_feature_df(spark, rand_data).persist()
+    try:
+        df.count()
+        SparkSom(5, 4, 6, random_seed=7).train(df, 1)
+        assert training._features_memo is not None
+        with pytest.raises(ValueError,
+                           match=r"^Received 6 features, expected 5\.$"):
+            SparkSom(5, 4, 5, random_seed=7).train(df, 1)
+    finally:
+        df.unpersist()
+
+
+def test_uncached_fit_drops_memo_and_own_cache(spark, rand_data):
+    cached = make_feature_df(spark, rand_data).persist()
+    try:
+        cached.count()
+        SparkSom(5, 4, 6, random_seed=7).train(cached, 1)
+        assert training._features_memo is not None
+    finally:
+        cached.unpersist()
+    df = make_feature_df(spark, rand_data)
+    som = SparkSom(5, 4, 6, random_seed=7)
+    som.train(df, 2)
+    assert som.training_info_["features_from"] == "collect"
+    assert training._features_memo is None
+    own = df.select(df["features"].alias("features"))
+    assert training.cached_row_count(own) == (False, None)
+    assert training.cached_row_count(df) == (False, None)
+
+
+def test_concurrent_fits_keep_their_own_features(spark, rand_data):
+    """Six threads (more than the cores) fitting three cached inputs in
+    turn, each fit evicting another input's memo, under a short switch
+    interval: every fit gets its own input's weights."""
+    rng = np.random.RandomState(99)
+    inputs = [rand_data] + [rng.rand(300, 6).astype(np.float32)
+                            for _ in range(2)]
+    dfs = [make_feature_df(spark, X).persist() for X in inputs]
+    errors = []
+
+    def fit_repeatedly(df, ref):
+        try:
+            for _ in range(3):
+                som = SparkSom(5, 4, 6, random_seed=7).train(df, 2)
+                np.testing.assert_array_equal(som.get_weights(), ref)
+        except Exception as e:  # re-raised in the main thread
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    try:
+        for df in dfs:
+            df.count()
+        refs = [_local(X) for X in inputs]
+        threads = [threading.Thread(target=fit_repeatedly,
+                                    args=(dfs[i % 3], refs[i % 3]))
+                   for i in range(6)]
+        sys.setswitchinterval(1e-5)
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+        assert not any(t.is_alive() for t in threads)
+        assert not errors, errors
+    finally:
+        sys.setswitchinterval(interval)
+        for df in dfs:
+            df.unpersist()
+
+
+def test_new_spark_context_misses_fit_memo():
+    """A cache built the same way under a new SparkContext (whose RDD ids
+    start over) is collected again.  Runs in a subprocess: the suite's
+    session must not stop."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = r"""
+import sys
+sys.path.insert(0, %r)
+import numpy as np
+from pyspark.sql import SparkSession
+from xpysom_dask_spark import SparkSom
+
+X = np.random.RandomState(3).rand(200, 4).astype(np.float32)
+rows = [(i, [float(v) for v in r]) for i, r in enumerate(X)]
+out = []
+for _ in range(2):
+    spark = (SparkSession.builder.master("local[1]")
+             .config("spark.ui.enabled", "false").getOrCreate())
+    df = spark.createDataFrame(rows, "id bigint, features array<float>")
+    df = df.persist()
+    df.count()
+    for _ in range(2):
+        som = SparkSom(3, 3, 4, random_seed=1).train(df, 2)
+        out.append(som.training_info_["features_from"])
+    spark.stop()
+print("features_from:", ",".join(out))
+""" % repo
+    proc = subprocess.run([sys.executable, "-c", code], capture_output=True,
+                          text=True, timeout=300)
+    assert proc.returncode == 0, (proc.stdout[-1500:], proc.stderr[-1500:])
+    assert "features_from: collect,memo,collect,memo" in proc.stdout
 
 
 def test_work_cap_sends_fit_distributed(spark, rand_data, monkeypatch):

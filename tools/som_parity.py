@@ -9,7 +9,12 @@ repository) and, for each perfbench input seed, fits the ``som_fit``
 configuration (300k x 8 rows, 10x10, 2 epochs) and the 8 ``som_sweep``
 configurations (100k x 8 rows, 5 epochs) three ways: ``train(ndarray)``,
 the fused ``train(DataFrame)`` and ``train(DataFrame)`` with
-``fuse_local_bytes=0`` (the distributed epoch job).  It stores every
+``fuse_local_bytes=0`` (the distributed epoch job).  The ``som_fit``
+case also fits fused a second time on the same cache
+(``fit/fused_again``: the kept feature blocks of
+``plans.training._features_memo``, where the tree has them); the sweep
+configurations share one cached input, so all but the first fused one
+take those blocks too.  It stores every
 fit's weights with its local ``qe``/``te``, as perfbench computes them,
 plus the DataFrame ``qe``/``te`` of the ndarray fit.
 
@@ -25,7 +30,8 @@ for these fits; its result is stored for both.
 
 ``compare`` lists every entry that is not ``np.array_equal`` between
 two dumps, with its max |difference| (and entries only one of them
-has), and exits 1 if any is.  Run ``dump`` once per tree, then
+has), and every ``fused_again`` entry of either dump that is not its
+``fused`` entry, and exits 1 if any is.  Run ``dump`` once per tree, then
 ``compare`` the two files.
 """
 
@@ -78,8 +84,11 @@ def dump(out, root, seeds):
                     df.count()
                     inputs[rows] = X, df
                 X, df = inputs[rows]
-                for how, data, fuse in (("local", X, None), ("fused", df, None),
-                                        ("distributed", df, 0)):
+                hows = [("local", X, None), ("fused", df, None),
+                        ("distributed", df, 0)]
+                if name == "fit":   # a second fused fit of the same cache
+                    hows.insert(2, ("fused_again", df, None))
+                for how, data, fuse in hows:
                     kw = {} if fuse is None else {"fuse_local_bytes": fuse}
                     som = SparkSom(cfg["x"], cfg["y"], SomFit.d,
                                    random_seed=MODEL_SEED,
@@ -180,7 +189,15 @@ def compare(a, b):
             print("DIFFERS: %s max |d| %.3g" % (k, np.max(np.abs(
                 x.astype(np.float64) - y.astype(np.float64)))))
     print(f"{len(set(A.files) | set(B.files))} entries, {n_bad} differ")
-    return 1 if n_bad else 0
+    n_again = 0
+    for path, D in ((a, A), (b, B)):
+        for k in D.files:
+            if "/fused_again/" in k and not np.array_equal(
+                    D[k], D[k.replace("/fused_again/", "/fused/")]):
+                n_again += 1
+                print("DIFFERS FROM FUSED:", path, k)
+    print(f"{n_again} fused_again entries differ from their fused fit")
+    return 1 if n_bad or n_again else 0
 
 
 def main(argv=None):

@@ -70,12 +70,19 @@ class SparkSom:
         (driver round trip plus Python worker set-up per task, measured
         on 4 cores): 3e9 euclidean row·cell·features, e.g. 300k × 8
         rows on a 35×35 grid.  This
-        byte cap only bounds what is collected to the driver
-        (``toArrow`` of 64 MiB takes ~0.4 s).  Large grids and large
+        byte cap bounds what is collected to the driver (``toArrow`` of
+        64 MiB takes ~0.4 s) and what stays there: when the input is a
+        materialized cache, the fused fit keeps its collected blocks in
+        one slot (``plans.training._features_memo``), and a later fused
+        fit of the same cache, features column, input_len and dtype
+        reuses them and runs no Spark job; ``unpersist()`` or a recache
+        makes the next fit collect again.  Large grids and large
         inputs stay on the distributed plan.  Both paths give the same
         weights; the choice moves only the cost.  After a DataFrame fit,
         ``training_info_`` records the path taken and why, and on the
-        fused path the kernel thread count, whether OpenBLAS was pinned
+        fused path where the features came from (``features_from``:
+        ``"collect"``, with its ``collect_s``, or ``"memo"``), the
+        kernel thread count, whether OpenBLAS was pinned
         to one thread, and per-epoch ``bmu_s`` / ``merge_s``.  The
         distributed epochs sum their per-partition partials through
         ``plans.exchange.partial_sums``, which merges them in buckets
@@ -359,7 +366,7 @@ class SparkSom:
     def _train_local(self, blocks, num_epochs, iter_beg, iter_end,
                      verbose=False, info=None):
         """Driver-side epochs (ndarray fits, the fused DataFrame path):
-        ``epoch_sums`` of ``blocks``, a list of feature matrices in the
+        ``epoch_sums`` of ``blocks``, a sequence of feature matrices in the
         model dtype (one ndarray, or the fused fit's Arrow chunks).
         ``info`` (the fused ``training_info_``) gets the thread count,
         whether OpenBLAS was pinned and per-epoch ``bmu_s`` / ``merge_s``."""
