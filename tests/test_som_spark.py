@@ -343,14 +343,14 @@ def test_materialized_cache_sizes_fit_from_stats(spark, rand_data):
 def test_unmaterialized_cache_falls_back_to_count(spark, rand_data):
     df = make_feature_df(spark, rand_data).persist()
     try:
-        assert training.cached_row_count(df) == (True, None)
+        assert training.cached_row_count(df)[:2] == (True, None)
         som = SparkSom(5, 4, 6, random_seed=7)
         som.train(df, 2)
         info = som.training_info_
         assert (info["path"], info["rows"], info["rows_from"]) == (
             "fused", len(rand_data), "count")
         # the count filled the caller's cache, not one of its own
-        assert training.cached_row_count(df) == (True, len(rand_data))
+        assert training.cached_row_count(df)[:2] == (True, len(rand_data))
     finally:
         df.unpersist()
 
@@ -447,6 +447,46 @@ def test_fit_memo_misses_collect_again(spark, rand_data):
         df.unpersist()
 
 
+def test_fit_memo_keys_by_column_not_name(spark, rand_data):
+    """Two DataFrames whose plans differ only in column names share one
+    cache (the cache manager ignores names).  Fitting the one whose
+    ``features`` is the other's second column collects again and trains
+    on its own column."""
+    base = make_feature_df(spark, rand_data).withColumn(
+        "reversed", F.reverse("features"))
+    first = base.select(F.col("features").alias("features"),
+                        F.col("reversed").alias("g")).persist()
+    swapped = base.select(F.col("features").alias("g"),
+                          F.col("reversed").alias("features"))
+    try:
+        first.count()
+        assert training.cached_row_count(swapped)[:2] == (
+            True, len(rand_data))
+        assert _fit_jobs(spark, SparkSom(5, 4, 6, random_seed=7), first) == 1
+        som = SparkSom(5, 4, 6, random_seed=7)
+        assert _fit_jobs(spark, som, swapped) == 1
+        assert som.training_info_["features_from"] == "collect"
+        np.testing.assert_array_equal(som.get_weights(),
+                                      _local(rand_data[:, ::-1].copy()))
+    finally:
+        first.unpersist()
+
+
+def test_fit_that_misses_memo_frees_it(spark, rand_data):
+    """A DataFrame fit that does not read the kept blocks frees them,
+    whichever path it takes: a distributed fit of the same cache, a fused
+    fit of another input."""
+    df = make_feature_df(spark, rand_data).persist()
+    try:
+        df.count()
+        SparkSom(5, 4, 6, random_seed=7).train(df, 1)
+        assert training._features_memo is not None
+        SparkSom(5, 4, 6, random_seed=7, fuse_local_bytes=0).train(df, 1)
+        assert training._features_memo is None
+    finally:
+        df.unpersist()
+
+
 def test_fit_memo_wrong_input_len_raises(spark, rand_data):
     df = make_feature_df(spark, rand_data).persist()
     try:
@@ -474,8 +514,8 @@ def test_uncached_fit_drops_memo_and_own_cache(spark, rand_data):
     assert som.training_info_["features_from"] == "collect"
     assert training._features_memo is None
     own = df.select(df["features"].alias("features"))
-    assert training.cached_row_count(own) == (False, None)
-    assert training.cached_row_count(df) == (False, None)
+    assert training.cached_row_count(own)[:2] == (False, None)
+    assert training.cached_row_count(df)[:2] == (False, None)
 
 
 def test_concurrent_fits_keep_their_own_features(spark, rand_data):

@@ -12,9 +12,7 @@ the fused ``train(DataFrame)`` and ``train(DataFrame)`` with
 ``fuse_local_bytes=0`` (the distributed epoch job).  The ``som_fit``
 case also fits fused a second time on the same cache
 (``fit/fused_again``: the kept feature blocks of
-``plans.training._features_memo``, where the tree has them); the sweep
-configurations share one cached input, so all but the first fused one
-take those blocks too.  It stores every
+``plans.training._features_memo``, where the tree has them).  It stores every
 fit's weights with its local ``qe``/``te``, as perfbench computes them,
 plus the DataFrame ``qe``/``te`` of the ndarray fit.
 

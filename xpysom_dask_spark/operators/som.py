@@ -76,7 +76,9 @@ class SparkSom:
         one slot (``plans.training._features_memo``), and a later fused
         fit of the same cache, features column, input_len and dtype
         reuses them and runs no Spark job; ``unpersist()`` or a recache
-        makes the next fit collect again.  Large grids and large
+        makes the next fit collect again.  ``unpersist()`` does not free
+        the kept blocks: the next DataFrame fit that does not reuse them
+        (any path, any input) does.  Large grids and large
         inputs stay on the distributed plan.  Both paths give the same
         weights; the choice moves only the cost.  After a DataFrame fit,
         ``training_info_`` records the path taken and why, and on the

@@ -47,13 +47,15 @@ not remove that floor: each ``allGather`` took 1.0 s on the same box (1,
 a job per epoch.
 
 The fused collect is itself a Spark job (~0.12 s of a ~0.2 s fit of 300k
-× 8 cached rows on 10×10, 2 epochs), and MiniSom-style callers fit one
-input over and over (grid and σ sweeps, ``train(data, T, iter_beg,
-iter_end)`` slices).  So when the input is a materialized cache, the
-collected blocks stay in one module slot (``_features_memo``), keyed by
-that cache's column-buffer RDD, and the next fused fit of the same cache
-runs no Spark job at all.  The slot holds one fit's read-only blocks, at
-most its ``fuse_local_bytes``.
+× 8 cached rows on 10×10, 2 epochs).  A caller that fits one cached
+input again (a grid or σ sweep, ``train(data, T, iter_beg, iter_end)``
+slices) need not pay it twice: when the input is a materialized cache,
+the collected blocks stay in one module slot (``_features_memo``), keyed
+by that cache's column-buffer RDD and the input's schema, and the next
+fused fit of the same cache and column runs no Spark job at all.  A fit
+of anything else pays the collect as before.  The slot holds one fit's
+read-only blocks, at most its ``fuse_local_bytes``, until a DataFrame
+fit under another key frees them.
 
 Both paths run ``SparkSom._epochs`` over ``epoch_sums`` of blocks
 (the fused fit's Arrow chunks, a task's Arrow batches), and every SOM
@@ -329,7 +331,7 @@ def choose_path(rows, cells, dim, itemsize, relative_cost, byte_cap):
             "bytes": nbytes, "byte_cap": byte_cap}
 
 
-def _cache_lookup(df):
+def cached_row_count(df):
     """``(cached, rows, buffers)``: whether ``df``'s plan is in the session
     cache, its row count when that cache is fully materialized, and then
     the id of the cache's column-buffer RDD (None when not materialized).
@@ -350,34 +352,26 @@ def _cache_lookup(df):
             relation.cacheBuilder().cachedColumnBuffers().id())
 
 
-def cached_row_count(df):
-    """``(cached, rows)``: whether ``df``'s plan is in the session cache,
-    and its row count when that cache is fully materialized (None
-    otherwise), from the cache's build statistics — no Spark job."""
-    return _cache_lookup(df)[:2]
-
-
 #: The last fused fit's feature blocks from a materialized cache, as one
 #: ``(key, blocks)`` tuple (or None), swapped whole so that concurrent fits
 #: never pair a key with another fit's blocks.  The key — application,
-#: column-buffer RDD, features column, d, dtype — changes with
-#: ``unpersist``/``persist``, a recache and a new SparkContext.  Its
-#: blocks are bounded by the fit's ``fuse_local_bytes``.
+#: column-buffer RDD, input schema, features column, d, dtype — changes
+#: with ``unpersist``/``persist``, a recache and a new SparkContext.  Its
+#: blocks are bounded by the fit's ``fuse_local_bytes``; a DataFrame fit
+#: under another key drops them.
 _features_memo = None
 
 
-def _fused_blocks(feats, key, d, dtype, info):
-    """The fused fit's read-only feature blocks in ``dtype``: the memo's
-    when ``key`` matches it, else one ``toArrow`` collect, memoized under
-    ``key`` (a None key — rows not from cache stats — drops the memo).
-    Records ``features_from`` and, on a collect, ``collect_s`` in
-    ``info``."""
+def _fused_blocks(feats, key, memo, d, dtype, info):
+    """The fused fit's read-only feature blocks in ``dtype``: those of
+    ``memo`` (the slot's entry if its key is ``key``, else None), or one
+    ``toArrow`` collect, kept in the slot under ``key`` unless that is
+    None (rows not from cache stats).  Records ``features_from`` and, on
+    a collect, ``collect_s`` in ``info``."""
     global _features_memo
-    memo = _features_memo
-    if key is not None and memo is not None and memo[0] == key:
+    if memo is not None:
         info["features_from"] = "memo"
         return memo[1]
-    _features_memo = None   # never hold the old blocks and the new ones
     t0 = time.perf_counter()
     col = feats.toArrow().column("features")
     blocks = tuple(feature_matrix(chunk, d, dtype) for chunk in col.chunks)
@@ -409,6 +403,7 @@ def run_training(som, df, num_epochs, iter_beg=0, iter_end=None, verbose=False):
     and records the path decision (plus, distributed, per-epoch
     timings) in ``som.training_info_``."""
     from pyspark.storagelevel import StorageLevel
+    global _features_memo
 
     if iter_end is None:
         iter_end = num_epochs
@@ -417,12 +412,22 @@ def run_training(som, df, num_epochs, iter_beg=0, iter_end=None, verbose=False):
     # a select over a cached input reads that cache with column pruning,
     # so only an uncached input gets a cache of its own (so that epochs
     # 2..T never re-scan the source)
-    cached, n_rows, buffers = _cache_lookup(df)
+    cached, n_rows, buffers = cached_row_count(df)
     own_cache = not cached
     feats = df.select(df[som.features_col].alias("features"))
     if own_cache:
         feats = feats.persist(StorageLevel.MEMORY_AND_DISK)
     x, y, d = som._weights.shape
+
+    # only cache statistics (buffers known) prove the cache loaded; the
+    # cache manager matches plans whatever their column names, so the
+    # schema tells which cached column the features name picks
+    key = None if buffers is None else (
+        sc.applicationId, buffers, df._jdf.schema().json(),
+        som.features_col, d, np.dtype(som.dtype))
+    memo = _features_memo
+    if memo is not None and memo[0] != key:
+        memo = _features_memo = None   # free what this fit will not read
 
     rows_from = "stats" if n_rows is not None else None
     byte_cap = getattr(som, "fuse_local_bytes", 0)
@@ -434,12 +439,8 @@ def run_training(som, df, num_epochs, iter_beg=0, iter_end=None, verbose=False):
     info["rows_from"] = rows_from
     som.training_info_ = info
     if info["path"] == "fused":
-        # only cache statistics (buffers known) prove the cache loaded
-        key = None if buffers is None else (
-            sc.applicationId, buffers, som.features_col, d,
-            np.dtype(som.dtype))
         try:
-            blocks = _fused_blocks(feats, key, d, som.dtype, info)
+            blocks = _fused_blocks(feats, key, memo, d, som.dtype, info)
         finally:
             if own_cache:
                 feats.unpersist()
@@ -448,6 +449,7 @@ def run_training(som, df, num_epochs, iter_beg=0, iter_end=None, verbose=False):
         return som._train_local(blocks, num_epochs, iter_beg, iter_end,
                                 verbose=verbose, info=info)
 
+    _features_memo = None   # a distributed fit reads the cache
     if verbose:
         print(_describe(info))
     zeros = (np.zeros(x * y), np.zeros((x * y, d)))
